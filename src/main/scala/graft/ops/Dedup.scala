@@ -16,7 +16,8 @@ import graft.sources.Tables.t
   *       · AllPairs/PPJoin prefix-filtered formulation       → q81
   *   - MinHash + LSH banding, exact-verified                 → q52
   *   - SimHash + pigeonhole banding for hamming ≤ 3          → q53
-  * plus embedding-cosine near-dup pairs on `embeddings`      → q54.
+  * plus embedding-cosine near-dup pairs on `embeddings`      → [[nearDups]]
+  * and the three signals' consensus vote                     → [[consensusLegs]].
   *
   * Scale design: nothing here is O(n²) in the corpus. q51/q52 generate
   * candidate pairs only for documents sharing a shingle (q51) or an LSH
@@ -363,51 +364,31 @@ object Dedup {
   val q53Sql: String = q53Pairs + "\n       ORDER BY id1, id2"
 
 
-  /** Embedding-cosine near-dup pairs (cos ≥ 0.45) — the semantic-dedup
-    * primitive, production (LSH-bucketed) form. Candidates are pairs
-    * sharing a hyperplane-LSH bucket in ≥ 1 of the 16 tables (the SAME
-    * deterministic planes q56 probes with — [[graft.functions.Hyperplanes]]),
-    * then the exact codegen'd `graft_dot` ≥ 0.45 verify keeps true pairs
-    * only. Round 1 shipped this as an all-pairs `a.vec_id < b.vec_id`
-    * cartesian — the one genuine scale-killer in the library (VERDICT r1);
-    * that exact form now lives in DedupSpec as the recall baseline.
+  /** Embedding-cosine near-dup pairs (cos ≥ `threshold`) over any
+    * (vec_id, emb: array<double>) frame — the semantic-dedup primitive in
+    * its LSH-bucketed form. Candidates are pairs sharing a hyperplane-LSH
+    * bucket in ≥ 1 table (the deterministic shared planes of
+    * [[graft.functions.Hyperplanes]]); the exact codegen'd `graft_dot`
+    * verify keeps true pairs only, so every posture's output is a subset
+    * of the exact pair set (DedupSpec keeps the all-pairs form as the
+    * recall baseline).
     *
-    * Oracle-checkable EXACTLY despite being approximate: the DuckDB oracle
-    * computes the identical bucket ids (bit-identical double folds over
-    * identical plane literals — see Hyperplanes scaladoc), so both engines
-    * select the same candidate set deterministically.
+    * Oracle-checkable exactly despite being approximate: DuckDB computes
+    * the identical bucket ids (bit-identical double folds over identical
+    * plane literals), so both engines select the same candidates.
     *
-    * Recall vs the exact cos ≥ 0.45 set is the (L, r) dial: per-plane
-    * agreement for angle θ is 1 − θ/π (≈ 0.649 at cos 0.45), so a
-    * threshold-grazing pair collides somewhere with prob
-    * 1 − (1 − 0.649⁴)¹⁶ ≈ 0.96; DedupSpec pins the measured value. This
-    * corpus is near-uniform — hyperplane LSH's worst case for candidate
-    * volume; real embedding corpora cluster, pushing candidates down.
+    * The geometry is the corpus-growth dial: with b bits (2^b buckets)
+    * per table the bucket self-join produces ∝ n²·tables/2^b candidates,
+    * so linear-in-n work needs b ≈ log₂(n) + const, and the tables count
+    * (held or grown L) and 1-bit multi-probing buy back the recall that
+    * raising b costs threshold-grazing pairs. `numTables = -1` keeps the
+    * legacy ⌊64/b⌋ grouping of the first 64 planes. The registered
+    * geometries are the [[nearDups]] rows; BASELINE.md holds their
+    * measured recall/cost frontier.
     *
-    * Scale shape: one signature pass (64 codegen'd dots/row), bucket
-    * equi-join on (table, bucket) — no cartesian anywhere — candidate ids
-    * deduped BEFORE vectors are joined back, so the wide rows never hit
-    * the big shuffle.
-    */
-  def q54EmbeddingNeardup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    embeddingNearDups(t(s, dir, "embeddings").select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb")))
-  }
-
-  /** Library form of q54 over any (vec_id, emb: array<double>) frame.
-    *
-    * `bitsPerTable` is the corpus-growth dial the sf1 scaling probe
-    * surfaced: with b bits (2^b buckets) per table, the bucket self-join
-    * produces ∝ n²·tables/2^b candidates — linear-in-n work requires
-    * b ≈ log₂(n) + const. The default 4 bits matches the oracle-checked
-    * q54 at test SFs; at 10× corpus, bits = 8 (the same 64 shared planes
-    * regrouped into 8 tables of 8 bits) cuts candidates ~100× at a
-    * recall cost on threshold-grazing pairs ((1−θ/π)^8 per table) that
-    * multi-probing or more planes buys back. Raising bits on the same
-    * planes strictly shrinks the candidate set (a coarse table is the
-    * concatenation of its fine sub-tables), so the verified result is
-    * always a subset — pinned by DedupSpec.
+    * Scale shape: one signature pass, bucket equi-join on (table, bucket)
+    * — no cartesian anywhere — candidate ids deduped BEFORE vectors are
+    * joined back, so the wide rows never hit the big shuffle.
     */
   def embeddingNearDups(e: DataFrame, threshold: Double = 0.45,
                         bitsPerTable: Int = graft.functions.Hyperplanes.bits,
@@ -488,75 +469,22 @@ object Dedup {
        SELECT id1, id2, cosine FROM pairs WHERE cosine >= 0.45 ORDER BY id1, id2"""
   }
 
-  def q54Sql: String = neardupOracleSql(graft.functions.Hyperplanes.bits, multiProbe = false)
+  /** The `embeddings` table as (vec_id, emb: array<double>). */
+  private def doubleEmbeddings(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "embeddings").select(col("vec_id"),
+      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
 
-  /** The 100 TB posture of q54 (VERDICT r4 item 1): the SAME 64 shared
-    * planes regrouped into 8 tables × 8 bits. The sf1 scaling probe proved
-    * the r=4 default 10×-unsafe (candidates ∝ n²·L/2⁴: 66 s vs 2.7 s at
-    * 10× corpus); b ≈ log₂(n) is the linear-work geometry, and registering
-    * it as its own oracle-checked query makes the scale-safe path
-    * hash-verified end to end — like q79 did for the df-cap.
-    */
-  def q101EmbeddingNeardupR8(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    embeddingNearDups(t(s, dir, "embeddings").select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb")),
-      bitsPerTable = 8)
-  }
-
-  val q101Sql: String = neardupOracleSql(8, multiProbe = false)
-
-  /** q101 + multi-probe recall buy-back (VERDICT r4 item 2): raising r to 8
-    * costs recall on threshold-grazing pairs ((1−θ/π)⁸ ≈ 0.03 per-table
-    * collision at cos 0.45 vs 0.18 at r=4); probing each table's one-bit
-    * flips recovers most of it at ~9× probe rows — still ~28× fewer
-    * candidates than r=4 (2⁸/9 per table). This is the geometry you'd run
-    * at 10×+ corpus: candidates stay ∝ n²·L·9/2⁸, recall back near the
-    * r=4 floor. Both dials verified together, hash-exact.
-    */
-  def q102EmbeddingNeardupMp(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    embeddingNearDups(t(s, dir, "embeddings").select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb")),
-      bitsPerTable = 8, multiProbe = true)
-  }
-
-  val q102Sql: String = neardupOracleSql(8, multiProbe = true)
-
-  /** The sf10 posture (VERDICT r7 item 2): 5 tables × 11 bits from the
-    * same shared planes (the first 55; floor-division grouping). The
-    * b ≈ log₂(n) doctrine steps ~3.3 bits per corpus decade; the sf10
-    * probe's one completed q101 run (130 s) confirmed 8-bit geometry hits
-    * its n²·L/2^b knee at 100× sf0.1, exactly as the q54→q101 playbook at
-    * the previous decade. 5×2¹¹ vs 8×2⁸ cuts per-table candidate volume
-    * ~13× at a per-table collision cost multi-probing buys back when
-    * recall matters (q102's dial composes: `multiProbe = true` here gives
-    * hamming ≤ 1 in 11-bit tables). Oracle-checked end to end like every
-    * registered geometry.
-    */
-  def q143EmbeddingNeardupR11(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    embeddingNearDups(plantedEmbeddings(s, dir), bitsPerTable = 11)
-  }
-
-  val q143Sql: String =
-    neardupOracleSql(11, multiProbe = false, from = plantedEmbeddingsSql)
-
-  /** Guaranteed-surviving fixture for the high-bit postures (VERDICT r8
-    * item 2): q143/q146 returned 0 rows at the verify SF, so their hash
-    * gate proved only that both engines find nothing — a silently-emptied
-    * candidate path would also have passed. Following q114's
-    * planted-re-encode pattern, union three EXACT duplicate embeddings
-    * (vec_id + 10,000,000 clones of vec_id < 3). An exact duplicate
-    * hashes into the SAME bucket in EVERY table at ANY geometry (all
-    * plane dots are bit-identical), and the corpus is unit-norm, so each
-    * clone pair is a provable candidate with exact cosine 1.0 ≥ 0.45 —
-    * the candidate path now must produce ≥ 3 rows or the hash check
-    * fails loudly.
+  /** Guaranteed-surviving fixture for the high-bit postures: the corpus
+    * plus three EXACT duplicate embeddings (vec_id + 10,000,000 clones of
+    * vec_id < 3). An exact duplicate hashes into the SAME bucket in EVERY
+    * table at ANY geometry (all plane dots are bit-identical), and the
+    * corpus is unit-norm, so each clone pair is a provable candidate with
+    * exact cosine 1.0 ≥ 0.45 — a posture that returns 0 rows at the verify
+    * SF would otherwise pass its hash gate even with an emptied candidate
+    * path.
     */
   private[ops] def plantedEmbeddings(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings").select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
+    val e = doubleEmbeddings(s, dir)
     e.unionByName(e.filter(col("vec_id") < 3)
       .select((col("vec_id") + lit(10000000L)).as("vec_id"), col("emb")))
   }
@@ -567,222 +495,56 @@ object Dedup {
         UNION ALL
         SELECT vec_id + 10000000, embedding FROM embeddings WHERE vec_id < 3)"""
 
-  /** The next decade's posture (sf100-class corpora): 4 tables × 14 bits
-    * from the first 56 shared planes. The round-8 sf10 probe measured the
-    * whole dial arc in one session: 8-bit (q101) DIED at sf10 — its
-    * ~5.6e9-pair candidate sort spilled past the machine's ~80 GB of free
-    * disk — and 11-bit (q143) completed but ground at 296 s on ~4.4e8
-    * candidates, i.e. 11 bits is the sf1→sf10 bridge already near its own
-    * knee. Stepping to 14 bits cuts same-bucket candidate volume another
-    * ~10× (n²·L/2^b arithmetic: ~4.5e7 at sf10's 600k vectors), at the
-    * usual recall trade on threshold-grazing pairs ((1−θ/π)^14 per table,
-    * 4 tables) that multi-probing or a wider plane set buys back at real
-    * deployments. Oracle-checked end to end like every registered
-    * geometry, and every posture's OUTPUT is exact-verified (cosine ≥
-    * 0.45), so each result is a subset of the true pair set. Note strict
-    * candidate containment across postures holds only for DIVIDING
-    * geometries (an 8-bit table is the concatenation of two 4-bit tables
-    * — the DedupSpec pin): 11- and 14-bit tables take non-nesting plane
-    * spans, so their candidate sets are each ⊆ the true set but not
-    * formally nested in one another. Measured recall ladder at sf0.1
-    * (vs q54's 138 exact-verified pairs): q101 32, q102 116, q143 5,
-    * q146 3 — the price the n²·L/2^b candidate cut pays, recorded in
-    * BASELINE.md next to the wall-clock it buys.
+  /** One registered [[embeddingNearDups]] geometry: `tables = -1` is the
+    * legacy ⌊64/bits⌋ grouping; `planted` runs over [[plantedEmbeddings]]
+    * so postures too sparse for the verify SFs still return rows there.
     */
-  def q146EmbeddingNeardupR14(s: SparkSession, dir: String): DataFrame = {
+  private[graft] case class NearDup(key: String, bits: Int, tables: Int,
+                                    multiProbe: Boolean, planted: Boolean)
+
+  /** The embedding-LSH near-dup postures, per corpus decade: b steps with
+    * log₂(n) to hold candidate volume linear, L and probes buy recall
+    * back. Their measured recall/cost frontier is in BASELINE.md.
+    */
+  private[graft] val nearDups: Seq[NearDup] = Seq(
+    // sf0.1 recall baseline, 16×4: the exact-verified reference of the family.
+    NearDup("q54_embedding_neardup", 4, -1, multiProbe = false, planted = false),
+    // sf1 cost posture, 8×8: 16×4's candidates blow up at 10× the bench corpus.
+    NearDup("q101_embedding_neardup_r8", 8, -1, multiProbe = false, planted = false),
+    // sf1 recall posture, 8×8 + 1-bit probes.
+    NearDup("q102_embedding_neardup_multiprobe", 8, -1, multiProbe = true, planted = false),
+    // sf10 cost posture with the 64-plane pool's shrunk L, 5×11.
+    NearDup("q143_embedding_neardup_r11", 11, -1, multiProbe = false, planted = true),
+    // sf100 cost posture with shrunk L, 4×14.
+    NearDup("q146_embedding_neardup_r14", 14, -1, multiProbe = false, planted = true),
+    // sf10 recall posture of q143: L held at 16, 16×11.
+    NearDup("q148_embedding_neardup_wide11", 11, 16, multiProbe = false, planted = true),
+    // sf1 cost posture with held L, 16×14.
+    NearDup("q149_embedding_neardup_wide14", 14, 16, multiProbe = false, planted = true),
+    // sf1 recall midpoint, 16×14 + 1-bit probes.
+    NearDup("q151_embedding_neardup_wide14_mp", 14, 16, multiProbe = true, planted = true),
+    // sf1 recall grade, 32×11 + 1-bit probes.
+    NearDup("q152_embedding_neardup_recall", 11, 32, multiProbe = true, planted = true),
+    // sf10 cost posture, 16×17.
+    NearDup("q157_embedding_neardup_wide17", 17, 16, multiProbe = false, planted = true),
+    // sf10 recall midpoint, 16×17 + 1-bit probes.
+    NearDup("q166_embedding_neardup_wide17_mp", 17, 16, multiProbe = true, planted = true),
+    // sf10 recall grade, 32×17 + 1-bit probes.
+    NearDup("q167_embedding_neardup_recall17", 17, 32, multiProbe = true, planted = true),
+    // sf100 cost posture, 16×20.
+    NearDup("q168_embedding_neardup_wide20", 20, 16, multiProbe = false, planted = true),
+    // sf100 recall posture, 32×20: grown L, since probing 20-bit tables fills the disk.
+    NearDup("q169_embedding_neardup_recall20", 20, 32, multiProbe = false, planted = true))
+
+  private def nearDupQuery(p: NearDup)(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    embeddingNearDups(plantedEmbeddings(s, dir), bitsPerTable = 14)
+    embeddingNearDups(if (p.planted) plantedEmbeddings(s, dir) else doubleEmbeddings(s, dir),
+      bitsPerTable = p.bits, multiProbe = p.multiProbe, numTables = p.tables)
   }
 
-  val q146Sql: String =
-    neardupOracleSql(14, multiProbe = false, from = plantedEmbeddingsSql)
-
-  /** q148 — the 11-bit posture with L HELD at 16 tables (176 planes from
-    * the parameterized budget — VERDICT r8 item 1). The fixed 64-plane
-    * pool forced q143 to shrink to 5 tables when b stepped to 11; holding
-    * L multiplies threshold-grazing recall by ~16/5 at ~16/5 the
-    * candidate volume (recall ≈ 1−(1−p^b)^L is ~linear in L when
-    * p^b ≪ 1, and candidates are exactly linear in L). The measured
-    * recall/cost frontier lives in BASELINE.md: holding L buys recall
-    * LINEARLY while the b-step cut candidates EXPONENTIALLY — the two
-    * dials are not symmetric, which is the round-9 measured finding.
-    */
-  def q148EmbeddingNeardupWide11(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    embeddingNearDups(plantedEmbeddings(s, dir), bitsPerTable = 11, numTables = 16)
-  }
-
-  val q148Sql: String =
-    neardupOracleSql(11, multiProbe = false, numTables = 16, from = plantedEmbeddingsSql)
-
-  /** q149 — 16 tables × 14 bits (224 planes): the held-L form of q146,
-    * the next-decade posture. Same planted-survivor fixture, so the
-    * candidate path is non-vacuous at every SF.
-    */
-  def q149EmbeddingNeardupWide14(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    embeddingNearDups(plantedEmbeddings(s, dir), bitsPerTable = 14, numTables = 16)
-  }
-
-  val q149Sql: String =
-    neardupOracleSql(14, multiProbe = false, numTables = 16, from = plantedEmbeddingsSql)
-
-  /** q151 — held-L 14-bit WITH multi-probing (VERDICT r8 item 6: test the
-    * probe dial on a held-L geometry, where round 8 measured it fading
-    * under SHRINKING L). Hamming ≤ 1 in 16 tables of 14 bits: per-table
-    * grazing collision rises from p¹⁴ to p¹⁴ + 14·p¹³(1−p) (~8×) at 15×
-    * the probe rows — the candidate-volume/recall midpoint between q149
-    * and the recall-grade q152.
-    */
-  def q151EmbeddingNeardupWide14Mp(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    embeddingNearDups(plantedEmbeddings(s, dir), bitsPerTable = 14, numTables = 16,
-      multiProbe = true)
-  }
-
-  val q151Sql: String =
-    neardupOracleSql(14, multiProbe = true, numTables = 16, from = plantedEmbeddingsSql)
-
-  /** q152 — the RECALL-GRADE held-L posture: 32 tables × 11 bits (352
-    * planes) with 1-bit multi-probing. This is the geometry the L-growth
-    * arithmetic says restores q102-class recall after the 8→11-bit step:
-    * holding recall across Δb more bits requires L to grow by ~p^−Δb
-    * (≈3.4× at p≈0.66), so 8 tables at 8 bits become ~27-32 at 11 —
-    * L grows with the SAME exponential the b-step saved, which is the
-    * measured LSH lower bound (ρ = ln p₁ / ln p₂ ≈ 0.59 for
-    * grazing-vs-random on this corpus) asserting itself. Registered as
-    * the recall-first audit posture of the high-bit family: per-decade
-    * candidate volume sits near the 8-bit+probe family's, NOT near
-    * q149's — BASELINE.md carries the measured frontier.
-    */
-  def q152EmbeddingNeardupRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    embeddingNearDups(plantedEmbeddings(s, dir), bitsPerTable = 11, numTables = 32,
-      multiProbe = true)
-  }
-
-  val q152Sql: String =
-    neardupOracleSql(11, multiProbe = true, numTables = 32, from = plantedEmbeddingsSql)
-
-  /** q157 — the dial's NEXT step: held-L 16 tables × 17 bits (272 planes
-    * of the shared pool, still clear of the PQ rows at 448+). The round-9
-    * sf10 leg graded the registered 14-bit posture q149 at ~95×
-    * anchor-normalized — n²L/2ᵇ arithmetic says b = 14 is the sf1-decade
-    * geometry and the sf10 decade (200k vectors) wants b ≈ log₂ n ≈ 17–18:
-    * stepping to 17 cuts same-bucket candidates 8× at identical L. This
-    * registration is that step, measured (same-boot sf10 probe vs q149)
-    * instead of argued; at the small verify SFs it survives on the
-    * planted exact clones (cosine 1.0 collides in every table at any b),
-    * which is exactly what they exist for — the posture's recall grade
-    * lives at its own decade, not at sf0.01.
-    */
-  def q157EmbeddingNeardupWide17(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    embeddingNearDups(plantedEmbeddings(s, dir), bitsPerTable = 17, numTables = 16)
-  }
-
-  val q157Sql: String =
-    neardupOracleSql(17, multiProbe = false, numTables = 16, from = plantedEmbeddingsSql)
-
-  /** q166 — the sf10-decade RECALL buy-back: q157's held-L 16×17 with
-    * 1-bit multi-probing, registered after the round-10 at-scale recall
-    * grade (tools/RecallProbeAtScale, 100× replica corpus, within-replica
-    * translated truth = 13,800 grazing pairs): bare 16×17 keeps 1.3% of
-    * threshold-grazing truth at its own decade; the probe dial buys that
-    * back to 12.0% at 8.1e7 candidates (0.4% of all pairs) — MORE kept
-    * pairs per candidate than 16×14 at the same decade (4.4% at 3.4e7),
-    * so at sf10 the probe-boosted 17-bit posture dominates dropping back
-    * to 14 bits, exactly as recall ≈ L·(p^b + b·p^(b−1)(1−p)) predicts.
-    * The q151 relationship one decade up: q157 is the cost-first
-    * registered posture, q166 the recall midpoint. (Grazing-pair recall
-    * is the WORST case by construction — real duplicates at cosine ≈ 1.0
-    * ride every geometry, which the planted-clone gate proves per SF.)
-    */
-  def q166EmbeddingNeardupWide17Mp(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    embeddingNearDups(plantedEmbeddings(s, dir), bitsPerTable = 17, numTables = 16,
-      multiProbe = true)
-  }
-
-  val q166Sql: String =
-    neardupOracleSql(17, multiProbe = true, numTables = 16, from = plantedEmbeddingsSql)
-
-  /** q167 — the sf10-decade RECALL-GRADE posture: GROWN-L 32 tables × 17
-    * bits with 1-bit multi-probing (544 planes — the first geometry to
-    * route around the reserved PQ block, [[graft.functions.Hyperplanes
-    * .lshPlaneRow]]). This fills the per-decade doctrine's one empty cell
-    * (VERDICT r10 item 1): sf1's recall-grade posture is q152 (32×11+mp,
-    * 88.8% of grazing truth); the sf10 column topped out at q166's 12.0%.
-    * The round-9/10 measured finding — L buys recall ~LINEARLY while b
-    * cuts candidates EXPONENTIALLY (recall ≈ L·(p^b + b·p^(b−1)(1−p))
-    * when per-table collision ≪ 1, candidates exactly ∝ L) — predicts
-    * doubling L from q166 doubles both: ~24% recall at ~1.6e8
-    * candidates (0.8% of all pairs) at the 100× decade. The round-11
-    * RecallProbeAtScale factor-100 run measures exactly that (grade in
-    * BASELINE.md); q157 stays the cost-first registered posture, q166
-    * the midpoint, q167 the recall grade — the q149/q151/q152 triplet
-    * one decade up. Verified at the small SFs on the planted exact
-    * clones like every wide geometry.
-    */
-  def q167EmbeddingNeardupRecall17(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    embeddingNearDups(plantedEmbeddings(s, dir), bitsPerTable = 17, numTables = 32,
-      multiProbe = true)
-  }
-
-  val q167Sql: String =
-    neardupOracleSql(17, multiProbe = true, numTables = 32, from = plantedEmbeddingsSql)
-
-  /** q168 — the dial's NEXT decade step: held-L 16 tables × 20 bits (320
-    * planes, rows 0–319, below the reserved PQ block). b ≈ log₂ n says
-    * the sf100-class corpus (2M vectors) wants b ≈ 20–21; stepping 17 →
-    * 20 cuts same-bucket candidates 8× at identical L, exactly the
-    * q149 → q157 move one decade up. Registered MEASURED, not argued:
-    * the round-11 factor-1000 `RecallProbeAtScale` run (2M-vector
-    * replica corpus, probes/r11) grades it at its own decade beside
-    * 16×17 — whose candidate volume at 2M vectors is the previous
-    * decade's knee arithmetic made visible — and the planted exact
-    * clones keep the verify-SF gate non-vacuous as with every wide
-    * geometry. Recall buy-backs (probes / grown L) compose exactly as at
-    * 17 bits when the deployment wants them; the cost-first b-step is
-    * the registered posture, per the doctrine.
-    */
-  def q168EmbeddingNeardupWide20(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    embeddingNearDups(plantedEmbeddings(s, dir), bitsPerTable = 20, numTables = 16)
-  }
-
-  val q168Sql: String =
-    neardupOracleSql(20, multiProbe = false, numTables = 16, from = plantedEmbeddingsSql)
-
-  /** q169 — the sf100-decade RECALL BUY-BACK: GROWN-L 32 tables × 20 bits
-    * (640 plane indices, the second geometry routed around the reserved
-    * PQ block — tables 23+ draw pool rows 512–703 via
-    * [[graft.functions.Hyperplanes.lshPlaneRow]]). Registered MEASURED at
-    * its own decade, and with the OTHER dial's death measured beside it:
-    * on the factor-1000 / 2M-vector replica corpus, 32×20 grades 0.7% of
-    * grazing truth at 1.8e8 candidates (round 11; re-measured this round
-    * as the q169 registration row, probes/r12/recall_sf100_q169.log) —
-    * 1.75× bare q168's 0.4% at ~1.97× candidates, the L-linearity
-    * finding holding at a third decade — while the probe dial that served
-    * as the buy-back at lower decades is a MEASURED HARD FAILURE here:
-    * 16×20+mp's ~×18 candidate price (~1.7e9 pairs) filled the
-    * machine's ~76 GB of free disk
-    * (probes/r12/recall_sf100_16x20mp_death.log), and 32×20+mp (~3.4e9)
-    * is excluded by the same arithmetic. So at the sf100 decade the
-    * affordable recall frontier is L-growth, not probing: candidates
-    * scale LINEARLY in L versus the probe dial's ×(1+b) — at b = 20 the
-    * probe multiplier has outgrown the disk budget L-growth stays under.
-    * Verified at the small SFs on the planted exact clones like every
-    * wide geometry; q168 stays the cost-first registered posture.
-    */
-  def q169EmbeddingNeardupRecall20(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    embeddingNearDups(plantedEmbeddings(s, dir), bitsPerTable = 20, numTables = 32)
-  }
-
-  val q169Sql: String =
-    neardupOracleSql(20, multiProbe = false, numTables = 32, from = plantedEmbeddingsSql)
+  private def nearDupSql(p: NearDup): String =
+    neardupOracleSql(p.bits, p.multiProbe, p.tables,
+      if (p.planted) plantedEmbeddingsSql else "embeddings")
 
   /** Prefix-filtered Jaccard self-join (AllPairs/PPJoin family — Bayardo,
     * Ma, Srikant, "Scaling Up All Pairs Similarity Search", WWW'07): index
@@ -986,7 +748,7 @@ object Dedup {
               ROUND(COALESCE(p.n_dup_tokens, 0) * 1.0 / len(d2.toks), 6) AS dup_frac
        FROM d d2 LEFT JOIN per_doc p USING (doc_id) ORDER BY doc_id"""
 
-  /** q137 — consensus-ensemble near-dup detection: the three independent
+  /** Consensus-ensemble near-dup detection: the three independent
     * dup signals (lexical MinHash J ≥ 0.6, structural SimHash hamming ≤ 3,
     * semantic embedding-cosine ≥ 0.45) voted per pair, keeping pairs at
     * least two detectors agree on. This is how a production curation
@@ -1037,106 +799,23 @@ object Dedup {
       .orderBy(col("id1"), col("id2"))
   }
 
-  /** The embedding leg runs the SCALED 8-bit geometry (q101), not the
-    * 4-bit default: the sf1 probe caught the default's same-bucket
-    * candidate volume turning q137 into a 102 s query at 10× rows (the
-    * exact blow-up q101 was built to fix — 8-bit holds the same probe at
-    * ~9 s). Composition queries must compose the at-scale postures.
+  /** The registered ensembles: (key, embedding leg bits, tables) — the
+    * MinHash and SimHash legs are corpus-size-indifferent, so only the
+    * embedding leg steps with the corpus, composing the near-dup family's
+    * cost postures decade by decade (the 4-bit leg turned q137 into a
+    * 102.6 s query at sf1). The leg runs over the real embeddings; the
+    * lexical legs keep every ensemble non-empty at every SF.
     */
-  def q137ConsensusDedup(s: SparkSession, dir: String): DataFrame =
-    consensusNearDups(
-      t(s, dir, "documents"),
-      t(s, dir, "embeddings").select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb")),
-      embBits = 8)
+  private val consensusLegs: Seq[(String, Int, Int)] = Seq(
+    ("q137_consensus_dedup", 8, -1),         // sf1 decade: q101's 8×8 leg.
+    ("q145_consensus_dedup_r11", 11, -1),    // sf10 decade, shrunk L: q143's 5×11 leg.
+    ("q153_consensus_dedup_wide14", 14, 16), // sf10 decade, held L: q149's 16×14 leg.
+    ("q158_consensus_dedup_wide17", 17, 16), // sf10 cost posture: q157's 16×17 leg.
+    ("q170_consensus_dedup_wide20", 20, 16)) // sf100 cost posture: q168's 16×20 leg.
 
-  /** q145 — the consensus ensemble composed on the 11-bit embedding leg:
-    * the q137 lesson ("composition queries must compose the at-scale
-    * postures") applied one corpus decade further. q137's embedding leg
-    * is q101's 8-bit geometry, which the sf10 probe shows hitting its
-    * n²·L/2^b knee at 100× sf0.1 — so at that scale the ensemble steps
-    * its semantic leg to q143's 5×11-bit geometry, exactly as q137
-    * stepped q54's 4-bit leg to 8 at the previous decade. The MinHash and
-    * SimHash legs are corpus-size-indifferent (banded/pigeonholed) and
-    * stay as they are. Vote semantics unchanged; only pairs whose
-    * embedding vote was decisive can differ from q137.
-    */
-  def q145ConsensusDedupR11(s: SparkSession, dir: String): DataFrame =
-    consensusNearDups(
-      t(s, dir, "documents"),
-      t(s, dir, "embeddings").select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb")),
-      embBits = 11)
-
-  /** q153 — the consensus ensemble recomposed on the HELD-L 14-bit
-    * embedding leg (VERDICT r8 item 5): q145's sf10 ratio (75.8×) was its
-    * 5×11-bit leg grinding near the knee; this steps the semantic leg to
-    * q149's 16×14 geometry — per-table candidates cut 2³·(16/5 tables
-    * reweighted: net ~2.5× fewer than 5×11) with L held for recall. The
-    * lexical and structural legs are corpus-size-indifferent and
-    * unchanged; only pairs whose embedding vote was decisive can differ
-    * from q145. The embedding leg here runs over the REAL corpus (no
-    * planted fixture — the ensemble's non-vacuity comes from its MinHash
-    * and SimHash legs, which carry rows at every SF).
-    */
-  def q153ConsensusDedupWide14(s: SparkSession, dir: String): DataFrame =
-    consensusNearDups(
-      t(s, dir, "documents"),
-      t(s, dir, "embeddings").select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb")),
-      embBits = 14, embTables = 16)
-
-  val q137Sql: String = consensusSql(q101Sql)
-  // The ensemble legs run over the REAL embeddings table (no planted
-  // fixture), so their SQL comes straight from neardupOracleSql — q143Sql
-  // and q149Sql themselves now carry the planted-survivor union.
-  val q145Sql: String = consensusSql(neardupOracleSql(11, multiProbe = false))
-  val q153Sql: String =
-    consensusSql(neardupOracleSql(14, multiProbe = false, numTables = 16))
-
-  /** q158 — the consensus ensemble recomposed on the q157 decade leg
-    * (the VERDICT r8 task-5 pattern, one decade further): identical
-    * MinHash and SimHash legs, embedding leg at held-L 16×17. q153's
-    * 14-bit leg reads 22× at sf10 — fine for ITS decade; this is the
-    * posture a 100×-scale ensemble actually ships, with the embedding
-    * leg's candidate volume cut 8× by the b step the same-boot q149/q157
-    * probe measured at 15.7× wall-clock.
-    */
-  def q158ConsensusDedupWide17(s: SparkSession, dir: String): DataFrame =
-    consensusNearDups(
-      t(s, dir, "documents"),
-      t(s, dir, "embeddings").select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb")),
-      embBits = 17, embTables = 16)
-
-  val q158Sql: String =
-    consensusSql(neardupOracleSql(17, multiProbe = false, numTables = 16))
-
-  /** q170 — the consensus ensemble recomposed on the sf100-decade
-    * embedding leg (VERDICT r12 item 4, the compose-the-at-scale-postures
-    * rule applied a THIRD time): identical MinHash and SimHash legs —
-    * corpus-size-indifferent, banded/pigeonholed — with the semantic leg
-    * stepped from q158's 16×17 to q168's held-L 16×20, the registered
-    * cost-first posture of the 2M-vector decade (b ≈ log₂ n; the 17-bit
-    * leg's candidate volume at 2M vectors is the previous decade's knee
-    * arithmetic made visible, exactly as 14 bits was at 200k). The b
-    * step cuts the embedding leg's same-bucket candidates 8× at
-    * identical L; vote semantics are unchanged, so only pairs whose
-    * embedding vote was decisive can differ from q158 — the same
-    * relationship q158 bears to q153 one decade down. Verified at the
-    * small SFs like every ensemble member (non-vacuity from the lexical
-    * legs, which carry rows at every SF); its scale grade is the
-    * replica-corpus probe leg beside q158's (BASELINE.md).
-    */
-  def q170ConsensusDedupWide20(s: SparkSession, dir: String): DataFrame =
-    consensusNearDups(
-      t(s, dir, "documents"),
-      t(s, dir, "embeddings").select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb")),
-      embBits = 20, embTables = 16)
-
-  val q170Sql: String =
-    consensusSql(neardupOracleSql(20, multiProbe = false, numTables = 16))
+  private def consensusQuery(bits: Int, tables: Int)(s: SparkSession, dir: String): DataFrame =
+    consensusNearDups(t(s, dir, "documents"), doubleEmbeddings(s, dir),
+      embBits = bits, embTables = tables)
 
   private def consensusSql(embLegSql: String): String =
     s"""WITH m AS (SELECT id1, id2 FROM ($q51Pairs)),
@@ -1162,56 +841,23 @@ object Dedup {
     "q51_dedup_jaccard" -> (q51DedupJaccard _),
     "q52_minhash_lsh" -> (q52MinhashLsh _),
     "q53_simhash" -> (q53Simhash _),
-    "q54_embedding_neardup" -> (q54EmbeddingNeardup _),
     "q79_dedup_jaccard_capped" -> (q79DedupJaccardCapped _),
     "q81_dedup_jaccard_prefix" -> (q81DedupJaccardPrefix _),
-    "q101_embedding_neardup_r8" -> (q101EmbeddingNeardupR8 _),
-    "q102_embedding_neardup_multiprobe" -> (q102EmbeddingNeardupMp _),
-    "q143_embedding_neardup_r11" -> (q143EmbeddingNeardupR11 _),
-    "q115_repeated_spans" -> (q115RepeatedSpans _),
-    "q137_consensus_dedup" -> (q137ConsensusDedup _),
-    "q145_consensus_dedup_r11" -> (q145ConsensusDedupR11 _),
-    "q146_embedding_neardup_r14" -> (q146EmbeddingNeardupR14 _),
-    "q148_embedding_neardup_wide11" -> (q148EmbeddingNeardupWide11 _),
-    "q149_embedding_neardup_wide14" -> (q149EmbeddingNeardupWide14 _),
-    "q151_embedding_neardup_wide14_mp" -> (q151EmbeddingNeardupWide14Mp _),
-    "q152_embedding_neardup_recall" -> (q152EmbeddingNeardupRecall _),
-    "q153_consensus_dedup_wide14" -> (q153ConsensusDedupWide14 _),
-    "q157_embedding_neardup_wide17" -> (q157EmbeddingNeardupWide17 _),
-    "q158_consensus_dedup_wide17" -> (q158ConsensusDedupWide17 _),
-    "q166_embedding_neardup_wide17_mp" -> (q166EmbeddingNeardupWide17Mp _),
-    "q167_embedding_neardup_recall17" -> (q167EmbeddingNeardupRecall17 _),
-    "q168_embedding_neardup_wide20" -> (q168EmbeddingNeardupWide20 _),
-    "q169_embedding_neardup_recall20" -> (q169EmbeddingNeardupRecall20 _),
-    "q170_consensus_dedup_wide20" -> (q170ConsensusDedupWide20 _))
+    "q115_repeated_spans" -> (q115RepeatedSpans _)) ++
+    nearDups.map(p => p.key -> (nearDupQuery(p) _)) ++
+    consensusLegs.map { case (key, bits, tables) => key -> (consensusQuery(bits, tables) _) }
 
   val oracle: Map[String, String] = Map(
     "q50_dedup_exact" -> q50Sql,
     "q51_dedup_jaccard" -> q51Sql,
     "q52_minhash_lsh" -> q51Sql, // LSH+verify reproduces the exact J>=0.6 set
     "q53_simhash" -> q53Sql,
-    "q54_embedding_neardup" -> q54Sql,
     "q79_dedup_jaccard_capped" -> q79Sql,
     // Prefix filtering changes candidate generation only — the exact
     // verify reproduces the full J >= 0.6 set, so q51's oracle applies.
     "q81_dedup_jaccard_prefix" -> q51Sql,
-    "q101_embedding_neardup_r8" -> q101Sql,
-    "q102_embedding_neardup_multiprobe" -> q102Sql,
-    "q143_embedding_neardup_r11" -> q143Sql,
-    "q115_repeated_spans" -> q115Sql,
-    "q137_consensus_dedup" -> q137Sql,
-    "q145_consensus_dedup_r11" -> q145Sql,
-    "q146_embedding_neardup_r14" -> q146Sql,
-    "q148_embedding_neardup_wide11" -> q148Sql,
-    "q149_embedding_neardup_wide14" -> q149Sql,
-    "q151_embedding_neardup_wide14_mp" -> q151Sql,
-    "q152_embedding_neardup_recall" -> q152Sql,
-    "q153_consensus_dedup_wide14" -> q153Sql,
-    "q157_embedding_neardup_wide17" -> q157Sql,
-    "q158_consensus_dedup_wide17" -> q158Sql,
-    "q166_embedding_neardup_wide17_mp" -> q166Sql,
-    "q167_embedding_neardup_recall17" -> q167Sql,
-    "q168_embedding_neardup_wide20" -> q168Sql,
-    "q169_embedding_neardup_recall20" -> q169Sql,
-    "q170_consensus_dedup_wide20" -> q170Sql)
+    "q115_repeated_spans" -> q115Sql) ++
+    nearDups.map(p => p.key -> nearDupSql(p)) ++
+    consensusLegs.map { case (key, bits, tables) =>
+      key -> consensusSql(neardupOracleSql(bits, multiProbe = false, numTables = tables)) }
 }

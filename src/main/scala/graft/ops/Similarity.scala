@@ -523,14 +523,11 @@ object Similarity {
     * splits a hot cell the same way it splits a hot LSH band —
     * ScaleTechniquesSpec's skew case); the exact cosine runs only on
     * same-cell pairs.
-    */
-  def q107SemanticDedup(s: SparkSession, dir: String): DataFrame =
-    semanticDedup(s, dir, cellBits = 4)
-
-  /** The dialed form: 2^cellBits cells. Fixing any cell count is a fixed
-    * geometry — at B× the corpus, raise cellBits by log2(B) to hold cell
-    * size (and per-cell quadratic cost) constant; q111 registers the 8-bit
-    * posture oracle-checked, mirroring q101's role for q54.
+    *
+    * 2^cellBits cells: fixing any cell count is a fixed geometry — at B×
+    * the corpus, raise cellBits by log2(B) to hold cell size (and
+    * per-cell quadratic cost) constant. The registered cell counts are
+    * the [[semanticCells]] rows.
     */
   def semanticDedup(s: SparkSession, dir: String, cellBits: Int): DataFrame = {
     val (emb, cents, _) = ivfModel(s, dir, cellBits)
@@ -558,41 +555,14 @@ object Similarity {
       .orderBy(col("id1"), col("id2"))
   }
 
-  /** q107 at the corpus-growth geometry: 256 cells from 8 sign bits. At
-    * this SF the cells are oversplit (the point is the VERIFIED dial, not
-    * the sf0.01 recall — q101's role for q54); the sf1 probe table in
-    * BASELINE.md carries the cost evidence.
-    */
-  def q111SemanticDedupScaled(s: SparkSession, dir: String): DataFrame =
-    semanticDedup(s, dir, cellBits = 8)
-
-  /** 1024-cell SemDeDup — registered as the MEASURED FALSIFICATION of the
-    * naive cell-step doctrine for flat IVF. The expectation (q107→q111
-    * extrapolated, "cellBits tracks log₂(n)") was that 4× more cells
-    * would relieve q111's 10.6× sf10 ratio the way q146 relieved q143.
-    * The same-boot sf10 probe says otherwise: q147 26.2 s vs q111 13.8 s
-    * — SLOWER at 4× fewer candidates — because a flat IVF pays Θ(n·k)
-    * assignment dots in [[ivfScored]]'s Lloyd step (600k × 1024 ≈ 6×10⁸
-    * 64-dim dots at sf10), so stepping k per decade makes TOTAL
-    * assignment cost quadratic in corpus size even as candidates shrink.
-    * The dials that DO step per decade are the hash-cell geometries
-    * (q143/q146: assignment is b sign dots per row, k-independent); the
-    * IVF-side scale path is HIERARCHICAL assignment (two-level √k × √k,
-    * Θ(n·√k)) — a design note, deliberately not registered until a probe
-    * can grade it. Oracle-checked like every geometry; kept registered
-    * because a measured negative result is what stops the next reader
-    * from re-deriving the wrong extrapolation.
-    */
-  def q147SemanticDedup1k(s: SparkSession, dir: String): DataFrame =
-    semanticDedup(s, dir, cellBits = 10)
-
-  /** Oracle: the shared IVF CTE prefix, same-cell pairs, same fixed-order
-    * cosine fold and threshold. */
-  def q107Sql: String = semanticSql(4)
-
-  def q111Sql: String = semanticSql(8)
-
-  def q147Sql: String = semanticSql(10)
+  /** The registered SemDeDup cell counts: (key, cellBits). */
+  private val semanticCells: Seq[(String, Int)] = Seq(
+    // sf0.01 decade, 16 cells: the baseline geometry.
+    "q107_semantic_dedup" -> 4,
+    // sf1 cost posture, 256 cells: oversplit at the verify SFs, kept for its scale.
+    "q111_semantic_dedup_scaled" -> 8,
+    // sf10, 1024 flat cells: SLOWER than q111 (Θ(n·k) assignment) — the record q150 answers.
+    "q147_semantic_dedup_1k" -> 10)
 
   /** q150 — HIERARCHICAL IVF assignment (the fix q147's falsification
     * record names): two-level Lloyd assignment, Θ(n·(2^hi + 2^lo)) instead
@@ -1292,46 +1262,6 @@ object Similarity {
        WHERE rank <= 5 ORDER BY query_id, rank"""
   }
 
-  /** q154 — product-quantization ANN with ADC (asymmetric distance
-    * computation): the memory-bound corpus layout a 100 TB vector store
-    * actually serves from, and the one quantization family the repo did
-    * not yet carry (q87's int8 codes are 1 byte/DIM — 64 B/vector; PQ is
-    * 4 bits/SUBSPACE — 4 B/vector, a 16× further compression, at the cost
-    * of a trained codebook).
-    *
-    * Training is the repo's deterministic one-Lloyd-step recipe
-    * (q58/q107/q150 lineage), applied per subspace: the 64-dim embedding
-    * splits into M=8 subvectors of 8 dims; subspace m's 16-cell seed
-    * partition is the 4 sign bits of the [[graft.functions.Hyperplanes]]
-    * PQ sub-planes (pool rows 448–451 sliced to the subspace's dims —
-    * disjoint from every LSH geometry); cell centroids are fixed-point
-    * integer means (order-independent, bit-identical under any
-    * partitioning and in DuckDB); each subvector is then assigned to its
-    * max-dot centroid (tie → lowest cell) — one exact Lloyd step from a
-    * deterministic initialization, zero training loop, fully
-    * oracle-checkable.
-    *
-    * Serving shape (what scales): the corpus is represented ONLY by its
-    * code array — 8 nibbles/vector. Each probe precomputes a 128-entry
-    * lookup table LUT[m·16+k] = dot(q_sub_m, centroid_{m,k}) (the ADC
-    * trick: the approximate score of ANY corpus vector is then 8 array
-    * lookups + 7 adds, no float vector touched), the 20 LUTs broadcast,
-    * and the scan is one codegen'd fold over the broadcast LUT per
-    * (query, vector) — linear, shuffle-free until the per-query
-    * shortlist window. Only the 32-deep shortlist per query reads float vectors
-    * again for the exact rerank (q87's serving discipline). At 100 TB:
-    * codes live hot (4 GB per billion vectors), floats stay cold on
-    * parquet, LUT size is queries×1 KB — the standard IVF-PQ serving
-    * stack minus the IVF routing, which q58/q150 already provide and
-    * composes by restricting the scan to probed cells.
-    *
-    * ADC fidelity is audited in-row: `adc_r` (the quantized score that
-    * RANKED the shortlist) is emitted next to `cos_r` (the exact rerank
-    * score), so the oracle hash pins the full approximate pipeline — LUT
-    * folds, code assignment, shortlist membership — not just the final
-    * ids. PqSpec additionally pins ADC == dot(query, decode(codes)) and
-    * the recall floor vs the q55 exact baseline.
-    */
   /** The PQ model of q154, exposed for PqSpec: `(cents, codes)` where
     * cents = (m, cell, centroid array<double>) — the per-subspace
     * codebook — and codes = (vec_id, codes array<int>) — each corpus
@@ -1424,25 +1354,6 @@ object Similarity {
                         element_at(cents_arr, mm + 1)))"""
   }
 
-  def q154AnnPqAdc(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    val H = graft.functions.Hyperplanes
-    val W = org.apache.spark.sql.expressions.Window
-    val M = H.pqM
-    val K = 1 << H.pqBits
-    val emb = t(s, dir, "embeddings")
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-    val (cents, codes) = pqModel(s, dir)
-    val lut = pqLutDf(emb, cents)
-    // ADC scan: 8 lookups + 7 adds per (query, vector) against the
-    // broadcast LUTs — the corpus side streams its 4-byte codes once.
-    val adc = codes.crossJoin(broadcast(lut))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr(s"aggregate(sequence(0, ${M - 1}), CAST(0 AS DOUBLE), (acc, mm) -> acc + lut[mm * $K + codes[mm]])").as("adc"))
-    pqAdcRerank(emb, adc)
-  }
-
   /** Per-probe ADC lookup tables for the PQ codebook `cents`:
     * LUT[m·K + k] = dot(q_sub_m, c_{m,k}) — one 128-double array per
     * probe, ordered (m, cell) ascending so the serving fold indexes it
@@ -1518,7 +1429,7 @@ object Similarity {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** q155 — IVF-PQ: the composition the q154 scaladoc names, and the
+  /** q155 — IVF-PQ: q154's PQ-ADC scan behind an IVF router, and the
     * standard serving stack of every billion-scale vector store (FAISS
     * IVFPQ, SCANN's tree-AH): the IVF coarse quantizer (q58's
     * deterministic 16-cell Lloyd step) ROUTES each probe to its nProbe=4
@@ -1639,13 +1550,7 @@ object Similarity {
     pqAdcRerank(emb, adc)
   }
 
-  /** DuckDB replica of q154: identical sliced sub-planes (shared
-    * literals), identical fixed-point centroids per (subspace, cell),
-    * identical max-dot/lowest-cell assignment (ROW_NUMBER with the same
-    * ordering), identical LUT fold and m-ascending ADC fold, identical
-    * 32-deep shortlist and exact top-5 rerank.
-    */
-  /** PQ CTE prefix shared by q154Sql/q155Sql: subvectors → seed cells →
+  /** PQ CTE prefix shared by [[pqServeSql]]/q155Sql: subvectors → seed cells →
     * fixed-point sub-centroids → argmax codes → per-probe LUTs. Ends at
     * `lut` (query_id, 128-double list ordered (m, cell)).
     */
@@ -1698,7 +1603,7 @@ object Similarity {
                GROUP BY g.query_id)"""
   }
 
-  /** PQ tail shared by q154Sql/q155Sql: 32-deep ADC shortlist, exact
+  /** PQ tail shared by [[pqServeSql]]/q155Sql: 32-deep ADC shortlist, exact
     * top-5 rerank, final projection — consumes an `adc` CTE of
     * (query_id, neighbor_id, adc).
     */
@@ -1718,19 +1623,6 @@ object Similarity {
                         ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
          FROM rer)
        WHERE rank <= 5 ORDER BY query_id, rank"""
-
-  def q154Sql: String = {
-    val H = graft.functions.Hyperplanes
-    val M = H.pqM
-    val K = 1 << H.pqBits
-    s"""WITH $pqCteSql,
-       adc AS (
-         SELECT l.query_id, c.vec_id AS neighbor_id,
-                list_reduce([l.lut[mm * $K + c.codes[mm + 1] + 1]
-                             FOR mm IN generate_series(0, ${M - 1})], (acc, v) -> acc + v) AS adc
-         FROM lut l CROSS JOIN codes c WHERE l.query_id <> c.vec_id),
-       $pqTailSql"""
-  }
 
   /** DuckDB replica of q155: the q58 IVF CTEs (prefixed ivf_ to avoid
     * colliding with the PQ names) route each probe to its 4 nearest
@@ -1771,120 +1663,6 @@ object Similarity {
        $pqTailSql"""
   }
 
-  /** q159 — the PQ codebook dial, measured: q154's pipeline at 8 bits per
-    * subspace (256-cell codebooks, 8 bytes/vector — FAISS's PQ8 default)
-    * instead of 4 (16 cells, 4 B/vector). Everything else held: same
-    * seed-plane prefix (rows 448–455; the 4-bit cells are the high nibble
-    * of the 8-bit cells, so the dial is prefix-stable like the LSH pool),
-    * same integer-mean training, same broadcast-LUT ADC serving (the LUT
-    * grows to M·256 = 2048 doubles/probe — still broadcast-trivial), same
-    * 32-deep exact rerank. The dial trades 2× code memory for recall:
-    * measured at sf0.001 vs the exact q55 top-5, 0.47 (4-bit) → 0.73
-    * (8-bit) — PqSpec pins the ordering. Encode cost rises to Θ(n·M·K)
-    * dots; at K=256 that is the regime where a real deployment switches
-    * the encoder to the hierarchical assignment q150 proved (√K×√K),
-    * noted here so the falsification record's lesson carries over.
-    */
-  def q159AnnPq8(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    val H = graft.functions.Hyperplanes
-    val M = H.pqM
-    val bits = 8
-    val K = 1 << bits
-    val emb = t(s, dir, "embeddings")
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-    val (cents, codes) = pqModelOn(emb, pqBits = bits)
-    val lut = pqLutDf(emb, cents, pqBits = bits)
-    val adc = codes.crossJoin(broadcast(lut))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr(s"aggregate(sequence(0, ${M - 1}), CAST(0 AS DOUBLE), (acc, mm) -> acc + lut[mm * $K + codes[mm]])").as("adc"))
-    pqAdcRerank(emb, adc)
-  }
-
-  def q159Sql: String = {
-    val M = graft.functions.Hyperplanes.pqM
-    val K = 1 << 8
-    s"""WITH ${pqCteSql("embeddings", "embedding", 8)},
-       adc AS (
-         SELECT l.query_id, c.vec_id AS neighbor_id,
-                list_reduce([l.lut[mm * $K + c.codes[mm + 1] + 1]
-                             FOR mm IN generate_series(0, ${M - 1})], (acc, v) -> acc + v) AS adc
-         FROM lut l CROSS JOIN codes c WHERE l.query_id <> c.vec_id),
-       $pqTailSql"""
-  }
-
-  /** q160 — the hierarchical PQ8 encoder: q159's codebook and serving
-    * with the ENCODE rebuilt on q150's two-level pattern, because q159's
-    * sf10 leg measured the Θ(n·M·K) flat assignment as the knee at K=256
-    * (25.6× — the q147 falsification arithmetic one layer down). Each
-    * subspace's 256 cells are grouped by their seed high nibble; a
-    * vector's subcode is found by ranking the 16 SUPER-centroids (exact
-    * fixed-point sums of each group's member sums — same integer-mean
-    * recipe, one more aggregation level) and then only the ≤16 cells of
-    * the winning group: Θ(n·M·32), an 8× encode cut at identical
-    * codebook, LUTs, ADC, and rerank. The greedy hierarchy can pick a
-    * group whose best cell is globally second-best, so recall sits
-    * between the 4-bit and flat-8-bit postures — measured at sf0.001:
-    * 0.58, vs q159's flat-assign 0.73 and q154's 4-bit 0.47 (PqSpec pins
-    * the ordering). On this near-uniform corpus the seed high-nibble
-    * groups are weakly separated, so the greedy stage misroutes more
-    * than clustered real corpora would; the dial is explicit — spend
-    * Θ(n·M·K) when recall is the bar, Θ(n·M·2√K) when encode is.
-    */
-  def q160AnnPq8Hier(s: SparkSession, dir: String): DataFrame =
-    pqHier8(s, dir, beam = 1)
-
-  /** q161 — the beam dial on q160's hierarchical encoder: stage 1 keeps
-    * the top-TWO super-groups per (vector, subspace) and stage 2 ranks
-    * both groups' cells, Θ(n·M·48) vs q160's Θ(n·M·32) and q159's flat
-    * Θ(n·M·256). The greedy hierarchy's miss mode is exactly a
-    * second-best group holding the globally best cell, so one extra beam
-    * recovers over half the gap — measured at sf0.001: recall 0.66 vs
-    * q160's 0.58 and flat-8-bit q159's 0.73 (PqSpec pins the ordering).
-    * The family is now a measured frontier: cells-scanned 32/48/256 →
-    * recall 0.58/0.66/0.73 — at 100 TB the encode pass is the recurring
-    * cost (every new document), so the beam, not K, is the production
-    * recall dial.
-    */
-  def q161AnnPq8HierBeam(s: SparkSession, dir: String): DataFrame =
-    pqHier8(s, dir, beam = 2)
-
-  /** q165 — the PQ8 posture that closes the recall/encode gap (VERDICT
-    * r9 item 5): 32 super-groups × 8 cells with ONE LLOYD ROUND on the
-    * group structure, stage-1 beam 3. The q160/q161 recall ceiling
-    * (beam-6 still 0.67 vs flat 0.73) was the seed grouping, not the
-    * beam: cells grouped by their seed high bits are geometrically
-    * arbitrary, so the stage-1 super-centroid ranking misroutes however
-    * wide the beam. Reassigning each cell-centroid to its max-dot seed
-    * super — a 256-row broadcast-scale step per subspace, independent of
-    * corpus size — makes the groups coherent, and the measured frontier
-    * (tools/PqFrontierProbe, sf0.001, 100 truth pairs) moves:
-    * seed-grouped 48–80 cells plateau at 0.63–0.69; Lloyd-grouped 32×8
-    * beam-3 reaches 0.71 at 56 cells/subspace — recall ≥ 0.7 held at
-    * Θ(n·M·56) encode, 4.6× below flat q159's Θ(n·M·256) and free of its
-    * measured 25.6× sf10 knee. This is the PQ8 family's registered 100×
-    * posture: encode is the RECURRING per-document cost at 100 TB, so
-    * the grouping refinement (paid once per codebook train) buys back
-    * the hierarchical encoder's recall loss where it is cheap, not in
-    * the per-vector hot loop.
-    */
-  def q165AnnPq8Lloyd(s: SparkSession, dir: String): DataFrame =
-    pqHier8(s, dir, beam = 3, groupSize = 8, refine = true)
-
-  /** DuckDB replica of q165 — the hierarchical CTEs at groupSize 8 plus
-    * the Lloyd-round CTEs (groups1/supcent1 from exact re-aggregated
-    * integer member sums), beam `rn <= 3`.
-    */
-  def q165Sql: String = pqHier8Sql(3, 8, refine = true)
-
-  /** Shared core of q160/q161/q165: 8-bit PQ with two-level hierarchical
-    * encode — `256 / groupSize` super-groups of `groupSize` cells each —
-    * stage-1 beam width `beam`. Per-(vector, subspace) dot count is
-    * `256/groupSize + beam * groupSize`, the whole encode-cost dial.
-    * `private[graft]` so tools.PqFrontierProbe can sweep the
-    * (beam, split) plane without registering every point as a query.
-    */
   /** Train the hierarchical PQ model on a corpus: the pqBits codebook
     * (exact fixed-point means), a grouping of its cells into
     * `2^pqBits / groupSize` super-groups, and the groups' super-centroids
@@ -1903,30 +1681,23 @@ object Similarity {
     * never routes to a memberless group.
     */
   private[graft] def pqHierModelOn(emb: DataFrame, pqBits: Int,
-                                   groupSize: Int, refine: Boolean,
-                                   pinSums: Boolean = false)
+                                   groupSize: Int, refine: Boolean)
       : (DataFrame, DataFrame, DataFrame) = {
     val H = graft.functions.Hyperplanes
     val subs = pqSubsOf(emb)
     val seeded = subs.withColumn("cell0", expr(H.sparkSubCellExpr("sub", "m", pqBits)))
-    // NOT pinned by default (r13 measured): sums feeds cents once and
-    // supCentsOf once or (refined) twice, but in the QUERY encode paths
-    // every consumer sits under a BroadcastExchange, and those broadcast
-    // jobs evaluate their towers CONCURRENTLY on otherwise-idle cores —
+    // NOT pinned (r13 measured): sums feeds cents once and supCentsOf
+    // once or (refined) twice, but in the QUERY encode paths every
+    // consumer sits under a BroadcastExchange, and those broadcast jobs
+    // evaluate their towers CONCURRENTLY on otherwise-idle cores —
     // pinning serialized them behind one cache-materialization barrier
     // and cost q160/q161/q163/q165 a consistent +1-2 s each at sf0.1
-    // (probes/r13opt). The INDEX WRITE path is different (r14): after
-    // the tree write it re-executes the cents/groups/supcent towers as
-    // three SEQUENTIAL model-relation writes, so there the bounded
-    // (m, cell0, dim) aggregate — ≤ M·2^pqBits·subDim rows, model state,
-    // not corpus data — is worth pinning (pinSums = true; measured in
-    // probes/r14).
-    val sums0 = seeded
+    // (probes/r13opt).
+    val sums = seeded
       .select(col("m"), col("cell0"), posexplode(
         expr("transform(sub, x -> CAST(ROUND(x * 10000000) AS BIGINT))")).as(Seq("dim", "fx")))
       .groupBy(col("m"), col("cell0"), col("dim"))
       .agg(sum(col("fx")).as("sfx"), count(lit(1)).as("n"))
-    val sums = if (pinSums) StorageHandle.sessionDefault().pin(sums0) else sums0
     val cents = sums.groupBy(col("m"), col("cell0"))
       .agg(expr("transform(array_sort(collect_list(struct(dim, sfx, n))), e -> CAST(e.sfx AS DOUBLE) / e.n / 10000000)").as("centroid"))
       .select(col("m"), col("cell0").as("cell"), col("centroid"))
@@ -2021,40 +1792,6 @@ object Similarity {
                           element_at(cells_arr, mm + 1), $beam))"""
   }
 
-  private[graft] def pqHier8(s: SparkSession, dir: String, beam: Int,
-                             groupSize: Int = 16,
-                             refine: Boolean = false): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    val H = graft.functions.Hyperplanes
-    val M = H.pqM
-    val bits = 8
-    val K = 1 << bits
-    val emb = t(s, dir, "embeddings")
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-    val (cents, groups, supCents) = pqHierModelOn(emb, bits, groupSize, refine)
-    val hCodes = pqEncodeHier(emb, cents, groups, supCents, beam)
-    val lut = pqLutDf(emb, cents, pqBits = bits)
-    val adc = hCodes.crossJoin(broadcast(lut))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr(s"aggregate(sequence(0, ${M - 1}), CAST(0 AS DOUBLE), (acc, mm) -> acc + lut[mm * $K + codes[mm]])").as("adc"))
-    pqAdcRerank(emb, adc)
-  }
-
-  /** DuckDB replica of q160: the 8-bit train/LUT CTEs (the global-argmax
-    * `scored`/`assigned`/`codes` CTEs in the shared prefix go unreferenced
-    * and unexecuted), plus the two-stage hierarchical assignment —
-    * super-centroids from re-aggregated integer member sums, ROW_NUMBER
-    * tie-breaks mirroring the max_by struct ordering.
-    */
-  def q160Sql: String = pqHier8Sql(1)
-
-  /** DuckDB replica of q161 — q160's hierarchical CTEs with the stage-1
-    * beam widened to 2 (`rn <= 2`); stage 2's ROW_NUMBER already ranks
-    * across whatever groups stage 1 kept.
-    */
-  def q161Sql: String = pqHier8Sql(2)
-
   /** The hierarchical-encode CTE block, shared by q160/q161/q165's
     * oracles and the PQ index oracles (q163/q164, which encode with the
     * q165 posture since the encoder switch): consumes the pqCteSql
@@ -2112,19 +1849,93 @@ object Similarity {
        hcodes AS (SELECT vec_id, list(code ORDER BY m) AS codes FROM h2 GROUP BY vec_id)"""
   }
 
-  private def pqHier8Sql(beam: Int, groupSize: Int = 16,
-                         refine: Boolean = false): String = {
+  /** PQ-ADC serving over the raw embeddings — the product-quantized
+    * corpus layout a 100 TB vector store serves from. The 64-dim
+    * embedding splits into M=8 subvectors of 8 dims, each coded as one of
+    * the 2^bits cells of its subspace's codebook (4 or 8 B/vector, vs
+    * q87's 64 B of int8 codes). Training is the repo's deterministic
+    * one-Lloyd-step recipe per subspace — seed cells from the reserved PQ
+    * sub-planes of [[graft.functions.Hyperplanes]] (disjoint from every
+    * LSH geometry), fixed-point integer-mean centroids, max-dot
+    * assignment with ties to the lowest cell — so DuckDB replays it
+    * bit-identically.
+    *
+    * `hier = None` encodes by flat argmax over all 2^bits cells;
+    * `Some((beam, groupSize, refine))` uses the two-level encoder of
+    * [[pqHierModelOn]]/[[pqEncodeHier]]: 2^bits / groupSize super-groups,
+    * stage 1 keeping the top `beam` — `2^bits/groupSize + beam·groupSize`
+    * dots per (vector, subspace) instead of 2^bits. `private[graft]` so
+    * tools.PqFrontierProbe can sweep the (beam, split) plane without
+    * registering every point as a query.
+    *
+    * Serving: each probe's dense M×2^bits LUT of sub-dots is broadcast,
+    * the ADC score of a corpus vector is M lookups + adds over its codes
+    * (no float vector touched), and only the 32-deep per-query shortlist
+    * reads floats again for the exact top-5 rerank. `adc_r` is emitted
+    * next to `cos_r`, so the oracle hash pins the whole approximate
+    * pipeline, not just the final ids; PqSpec pins ADC ==
+    * dot(query, decode(codes)) and the postures' recall ordering.
+    */
+  private[graft] def pqServe(s: SparkSession, dir: String, bits: Int,
+                             hier: Option[(Int, Int, Boolean)]): DataFrame = {
+    graft.functions.VectorExpressions.register(s)
     val M = graft.functions.Hyperplanes.pqM
-    val K = 1 << 8
-    s"""WITH ${pqCteSql("embeddings", "embedding", 8)},
-       ${pqHierCodesCtes(beam, groupSize, refine)},
+    val K = 1 << bits
+    val emb = t(s, dir, "embeddings")
+      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
+    val (cents, codes) = hier match {
+      case None => pqModelOn(emb, pqBits = bits)
+      case Some((beam, groupSize, refine)) =>
+        val (cents, groups, supCents) = pqHierModelOn(emb, bits, groupSize, refine)
+        (cents, pqEncodeHier(emb, cents, groups, supCents, beam))
+    }
+    val lut = pqLutDf(emb, cents, pqBits = bits)
+    // ADC scan: M lookups + adds per (query, vector) against the
+    // broadcast LUTs — the corpus side streams its codes once.
+    val adc = codes.crossJoin(broadcast(lut))
+      .filter(col("query_id") =!= col("vec_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        expr(s"aggregate(sequence(0, ${M - 1}), CAST(0 AS DOUBLE), (acc, mm) -> acc + lut[mm * $K + codes[mm]])").as("adc"))
+    pqAdcRerank(emb, adc)
+  }
+
+  /** DuckDB replica of [[pqServe]]: identical sliced sub-planes,
+    * fixed-point centroids per (subspace, cell), and max-dot/lowest-cell
+    * assignment (ROW_NUMBER with the same ordering) — or, with `hier`,
+    * the [[pqHierCodesCtes]] block, leaving the prefix's flat `codes` CTE
+    * unreferenced and unexecuted — then the identical LUT fold,
+    * m-ascending ADC fold, 32-deep shortlist and exact top-5 rerank.
+    */
+  private def pqServeSql(bits: Int, hier: Option[(Int, Int, Boolean)]): String = {
+    val M = graft.functions.Hyperplanes.pqM
+    val K = 1 << bits
+    val (hierCtes, codes) = hier.fold(("", "codes")) { case (beam, groupSize, refine) =>
+      (s"\n       ${pqHierCodesCtes(beam, groupSize, refine)},", "hcodes")
+    }
+    s"""WITH ${pqCteSql("embeddings", "embedding", bits)},$hierCtes
        adc AS (
          SELECT l.query_id, c.vec_id AS neighbor_id,
                 list_reduce([l.lut[mm * $K + c.codes[mm + 1] + 1]
                              FOR mm IN generate_series(0, ${M - 1})], (acc, v) -> acc + v) AS adc
-         FROM lut l CROSS JOIN hcodes c WHERE l.query_id <> c.vec_id),
+         FROM lut l CROSS JOIN $codes c WHERE l.query_id <> c.vec_id),
        $pqTailSql"""
   }
+
+  /** The registered PQ serving postures: (key, bits per subspace,
+    * hierarchical encoder or flat argmax). Recalls are vs the exact q55
+    * top-5 at sf0.001; BASELINE.md holds the measured encode frontier.
+    */
+  private val pqServes: Seq[(String, Int, Option[(Int, Int, Boolean)])] = Seq(
+    // sf0.1 cost posture: 4-bit flat codes, 4 B/vector, recall 0.47.
+    ("q154_ann_pq_adc", 4, None),
+    // Recall ceiling: 8-bit flat (FAISS PQ8), 0.73 — its Θ(n·M·256) encode is the sf10 knee.
+    ("q159_ann_pq8", 8, None),
+    // sf10 cost posture: 16×16 seed groups, beam 1 — 32 dots, recall 0.58.
+    ("q160_ann_pq8_hier", 8, Some((1, 16, false))),
+    // sf10 midpoint: seed groups, beam 2 — 48 dots, recall 0.66.
+    ("q161_ann_pq8_hier_beam", 8, Some((2, 16, false))),
+    // sf10 recall posture (the 100× one): 32×8 Lloyd groups, beam 3 — 56 dots, recall 0.71.
+    ("q165_ann_pq8_lloyd", 8, Some((3, 8, true))))
 
   /** DuckDB replica of q156: the q155 IVF CTEs plus a residual relation
     * (embedding − assigned-cell centroid, exact IEEE subtraction on the
@@ -2303,12 +2114,35 @@ object Similarity {
       tailWrites += (() => groups.write.mode("overwrite").parquet(s"$path/_groups"))
       tailWrites += (() => supCents.write.mode("overwrite").parquet(s"$path/_supcent"))
     }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(tailWrites.size)
-    try tailWrites.map(f => pool.submit(new java.util.concurrent.Callable[Unit] {
-      override def call(): Unit = f()
-    })).foreach(_.get())
-    finally pool.shutdown()
+    runConcurrently(tailWrites.toSeq)
     Similarity.synchronized { builtIndexPaths += path }
+  }
+
+  /** Run `tasks` on one thread each and wait for all of them. On the
+    * first failure the other tasks are cancelled (interrupted) and
+    * awaited, then the failing task's own exception is rethrown — the
+    * caller never sees an ExecutionException wrapper, and no task is
+    * still running when the call returns.
+    */
+  private[graft] def runConcurrently(tasks: Seq[() => Unit]): Unit = {
+    import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
+    val pool = Executors.newFixedThreadPool(tasks.size)
+    val done = new ExecutorCompletionService[Unit](pool)
+    try {
+      val futures = tasks.map(f => done.submit(new Callable[Unit] {
+        override def call(): Unit = f()
+      }))
+      futures.foreach { _ =>
+        try done.take().get()
+        catch { case e: ExecutionException =>
+          futures.foreach(_.cancel(true))
+          throw e.getCause
+        }
+      }
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
   }
 
   /** Probe a PQ-coded index with a new batch: hash ONLY the batch with
@@ -2828,21 +2662,17 @@ object Similarity {
     "q58_ann_ivf" -> (q58AnnIvf _),
     "q84_ann_multiprobe" -> (q84AnnMultiprobe _),
     "q87_ann_quant_rescore" -> (q87AnnQuantRescore _),
-    "q107_semantic_dedup" -> (q107SemanticDedup _),
-    "q111_semantic_dedup_scaled" -> (q111SemanticDedupScaled _),
     "q140_ann_index_probe" -> (q140AnnIndexProbe _),
     "q144_ann_index_build" -> (q144AnnIndexBuild _),
-    "q147_semantic_dedup_1k" -> (q147SemanticDedup1k _),
     "q150_semantic_dedup_hier" -> (q150SemanticDedupHier _),
-    "q154_ann_pq_adc" -> (q154AnnPqAdc _),
     "q155_ann_ivf_pq" -> (q155AnnIvfPq _),
     "q156_ann_ivfpq_residual" -> (q156AnnIvfPqResidual _),
-    "q159_ann_pq8" -> (q159AnnPq8 _),
-    "q160_ann_pq8_hier" -> (q160AnnPq8Hier _),
-    "q161_ann_pq8_hier_beam" -> (q161AnnPq8HierBeam _),
     "q163_ann_pq_index_build" -> (q163AnnPqIndexBuild _),
-    "q164_ann_pq_index_probe" -> (q164AnnPqIndexProbe _),
-    "q165_ann_pq8_lloyd" -> (q165AnnPq8Lloyd _))
+    "q164_ann_pq_index_probe" -> (q164AnnPqIndexProbe _)) ++
+    semanticCells.map { case (key, cellBits) =>
+      key -> ((s: SparkSession, dir: String) => semanticDedup(s, dir, cellBits)) } ++
+    pqServes.map { case (key, bits, hier) =>
+      key -> ((s: SparkSession, dir: String) => pqServe(s, dir, bits, hier)) }
 
   val oracle: Map[String, String] = Map(
     "q125_hybrid_retrieval" -> q125Sql,
@@ -2852,19 +2682,13 @@ object Similarity {
     "q58_ann_ivf" -> q58Sql,
     "q84_ann_multiprobe" -> q84Sql,
     "q87_ann_quant_rescore" -> q87Sql,
-    "q107_semantic_dedup" -> q107Sql,
-    "q111_semantic_dedup_scaled" -> q111Sql,
     "q140_ann_index_probe" -> q140Sql,
     "q144_ann_index_build" -> q144Sql,
-    "q147_semantic_dedup_1k" -> q147Sql,
     "q150_semantic_dedup_hier" -> q150Sql,
-    "q154_ann_pq_adc" -> q154Sql,
     "q155_ann_ivf_pq" -> q155Sql,
     "q156_ann_ivfpq_residual" -> q156Sql,
-    "q159_ann_pq8" -> q159Sql,
-    "q160_ann_pq8_hier" -> q160Sql,
-    "q161_ann_pq8_hier_beam" -> q161Sql,
     "q163_ann_pq_index_build" -> q163Sql,
-    "q164_ann_pq_index_probe" -> q164Sql,
-    "q165_ann_pq8_lloyd" -> q165Sql)
+    "q164_ann_pq_index_probe" -> q164Sql) ++
+    semanticCells.map { case (key, cellBits) => key -> semanticSql(cellBits) } ++
+    pqServes.map { case (key, bits, hier) => key -> pqServeSql(bits, hier) }
 }

@@ -46,7 +46,7 @@ object PqFrontierProbe {
       spark.catalog.clearCache()
     }
 
-    timedRecall("flat256", 256, () => graft.ops.Similarity.q159AnnPq8(spark, sfDir))
+    timedRecall("flat256", 256, () => graft.ops.Similarity.pqServe(spark, sfDir, 8, None))
     for (refine <- Seq(false, true); gs <- Seq(16, 8);
          beam <- 1 to (if (gs == 16) 4 else 6)) {
       // With refined (Lloyd-round) groups the sizes are data-dependent;
@@ -54,7 +54,7 @@ object PqFrontierProbe {
       val cells = 256 / gs + beam * gs
       val tag = if (refine) "_lloyd" else ""
       timedRecall(s"${256 / gs}x${gs}_beam$beam$tag", cells,
-        () => graft.ops.Similarity.pqHier8(spark, sfDir, beam, gs, refine))
+        () => graft.ops.Similarity.pqServe(spark, sfDir, 8, Some((beam, gs, refine))))
     }
     spark.stop()
   }

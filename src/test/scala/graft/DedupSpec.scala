@@ -221,7 +221,7 @@ class DedupSpec extends SparkSpec {
     assert(c11.nonEmpty, "r=11 produced zero candidates at sf0.1 — vacuous posture")
     assert(c11.subsetOf(c4), s"r=11 candidates outside r=4: ${c11 -- c4}")
     // And the registered query itself is non-empty at the bench SF.
-    val verified = ops.Dedup.q143EmbeddingNeardupR11(spark, "/root/testdata/sf0.1")
+    val verified = ops.Dedup.queries("q143_embedding_neardup_r11")(spark, "/root/testdata/sf0.1")
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(verified.nonEmpty)
   }
@@ -229,7 +229,7 @@ class DedupSpec extends SparkSpec {
   test("embedding near-dup (LSH-bucketed q54): subset of exact, recall pinned") {
     val exact = exactNeardupAllPairs
       .select("id1", "id2").as[(Long, Long)].collect().toSet
-    val lsh = ops.Dedup.q54EmbeddingNeardup(spark, sfDir)
+    val lsh = ops.Dedup.queries("q54_embedding_neardup")(spark, sfDir)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(lsh.subsetOf(exact)) // verify step is exact -> no false positives
     assert(exact.nonEmpty)
@@ -243,7 +243,7 @@ class DedupSpec extends SparkSpec {
   test("semantic dedup (q107): sound vs exact all-pairs, scoped to shared cells") {
     val exact = exactNeardupAllPairs
       .select("id1", "id2").as[(Long, Long)].collect().toSet
-    val sem = ops.Similarity.q107SemanticDedup(spark, sfDir)
+    val sem = ops.Similarity.queries("q107_semantic_dedup")(spark, sfDir)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     // The exact cosine verify means every emitted pair is a true pair
     // (no false positives); cell scoping means it may miss cross-cell
@@ -252,7 +252,7 @@ class DedupSpec extends SparkSpec {
     assert(sem.subsetOf(exact), s"q107 emitted non-pairs: ${sem -- exact}")
     // The corpus-growth geometry (q111, 256 cells) must stay sound too —
     // finer cells change WHICH pairs share a cell, never pair truth.
-    val scaled = ops.Similarity.q111SemanticDedupScaled(spark, sfDir)
+    val scaled = ops.Similarity.queries("q111_semantic_dedup_scaled")(spark, sfDir)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(scaled.nonEmpty && scaled.subsetOf(exact),
       s"q111 emitted non-pairs: ${scaled -- exact}")
@@ -447,20 +447,12 @@ class DedupSpec extends SparkSpec {
     // at the SPEC SF (sf0.001, 50 vectors), not just sf0.1.
     graft.functions.VectorExpressions.register(spark)
     val planted = Set((0L, 10000000L), (1L, 10000001L), (2L, 10000002L))
-    val postures = Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)](
-      ("q143", ops.Dedup.q143EmbeddingNeardupR11 _),
-      ("q146", ops.Dedup.q146EmbeddingNeardupR14 _),
-      ("q148", ops.Dedup.q148EmbeddingNeardupWide11 _),
-      ("q149", ops.Dedup.q149EmbeddingNeardupWide14 _),
-      ("q151", ops.Dedup.q151EmbeddingNeardupWide14Mp _),
-      ("q152", ops.Dedup.q152EmbeddingNeardupRecall _),
-      ("q157", ops.Dedup.q157EmbeddingNeardupWide17 _),
-      ("q166", ops.Dedup.q166EmbeddingNeardupWide17Mp _),
-      ("q167", ops.Dedup.q167EmbeddingNeardupRecall17 _),
-      ("q168", ops.Dedup.q168EmbeddingNeardupWide20 _),
-      ("q169", ops.Dedup.q169EmbeddingNeardupRecall20 _))
-    postures.foreach { case (name, q) =>
-      val got = q(spark, sfDir).select("id1", "id2").as[(Long, Long)].collect().toSet
+    // Every planted posture row, so a new row cannot skip the check.
+    val postures = ops.Dedup.nearDups.filter(_.planted).map(_.key)
+    assert(postures.nonEmpty)
+    postures.foreach { name =>
+      val got = ops.Dedup.queries(name)(spark, sfDir)
+        .select("id1", "id2").as[(Long, Long)].collect().toSet
       assert(planted.subsetOf(got),
         s"$name lost planted clone pairs: ${planted -- got}")
     }
@@ -477,9 +469,9 @@ class DedupSpec extends SparkSpec {
     // geometric, not statistical — the same guarantee the q151 ⊇ q149 and
     // q102 ⊇ q101 pins give the lower decades.
     graft.functions.VectorExpressions.register(spark)
-    val bare = ops.Dedup.q157EmbeddingNeardupWide17(spark, sfDir)
+    val bare = ops.Dedup.queries("q157_embedding_neardup_wide17")(spark, sfDir)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
-    val probed = ops.Dedup.q166EmbeddingNeardupWide17Mp(spark, sfDir)
+    val probed = ops.Dedup.queries("q166_embedding_neardup_wide17_mp")(spark, sfDir)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(probed.nonEmpty && bare.subsetOf(probed),
       s"q166 lost pairs q157 keeps: ${bare -- probed}")
@@ -493,9 +485,9 @@ class DedupSpec extends SparkSpec {
     // pin also exercises the first geometry that routes around the PQ
     // block (tables 27+ use pool rows 512+).
     graft.functions.VectorExpressions.register(spark)
-    val mid = ops.Dedup.q166EmbeddingNeardupWide17Mp(spark, sfDir)
+    val mid = ops.Dedup.queries("q166_embedding_neardup_wide17_mp")(spark, sfDir)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
-    val recall = ops.Dedup.q167EmbeddingNeardupRecall17(spark, sfDir)
+    val recall = ops.Dedup.queries("q167_embedding_neardup_recall17")(spark, sfDir)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(recall.nonEmpty && mid.subsetOf(recall),
       s"q167 lost pairs q166 keeps: ${mid -- recall}")
@@ -509,9 +501,9 @@ class DedupSpec extends SparkSpec {
     // 23+ route around the block (pool rows 512..703), so this pin also
     // exercises the routed span at 20 bits like the q167 pin does at 17.
     graft.functions.VectorExpressions.register(spark)
-    val bare = ops.Dedup.q168EmbeddingNeardupWide20(spark, sfDir)
+    val bare = ops.Dedup.queries("q168_embedding_neardup_wide20")(spark, sfDir)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
-    val grown = ops.Dedup.q169EmbeddingNeardupRecall20(spark, sfDir)
+    val grown = ops.Dedup.queries("q169_embedding_neardup_recall20")(spark, sfDir)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(grown.nonEmpty && bare.subsetOf(grown),
       s"q169 lost pairs q168 keeps: ${bare -- grown}")

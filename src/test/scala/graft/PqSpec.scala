@@ -37,7 +37,7 @@ class PqSpec extends SparkSpec {
         expr("aggregate(zip_with(q.emb, d.dec, (a, b) -> a * b), CAST(0 AS DOUBLE), (acc, v) -> acc + v)").as("dot"))
       .as[(Long, Long, Double)].collect()
       .map { case (q, n, d) => (q, n) -> d }.toMap
-    val emitted = ops.Similarity.q154AnnPqAdc(spark, sfDir)
+    val emitted = ops.Similarity.queries("q154_ann_pq_adc")(spark, sfDir)
       .select(col("query_id"), col("neighbor_id"), col("adc_r"))
       .as[(Long, Long, Double)].collect()
     assert(emitted.nonEmpty)
@@ -93,7 +93,7 @@ class PqSpec extends SparkSpec {
     assert(unrouted == 0, s"$unrouted emitted pairs outside the probed cells")
     // Same codebook ⇒ same ADC: pairs emitted by both q154 and q155
     // carry identical adc_r.
-    val a154 = ops.Similarity.q154AnnPqAdc(spark, sfDir)
+    val a154 = ops.Similarity.queries("q154_ann_pq_adc")(spark, sfDir)
       .select(col("query_id"), col("neighbor_id"), col("adc_r").as("a154"))
     val diff = out.join(a154, Seq("query_id", "neighbor_id"))
       .filter(abs(col("adc_r") - col("a154")) > 1e-9).count()
@@ -132,9 +132,9 @@ class PqSpec extends SparkSpec {
   test("q159 8-bit codes beat the 4-bit recall at 2x code memory (the codebook dial)") {
     val exact = ops.Similarity.q55AnnBruteforce(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val pq4 = ops.Similarity.q154AnnPqAdc(spark, sfDir)
+    val pq4 = ops.Similarity.queries("q154_ann_pq_adc")(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val pq8 = ops.Similarity.q159AnnPq8(spark, sfDir)
+    val pq8 = ops.Similarity.queries("q159_ann_pq8")(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     assert(pq8.nonEmpty)
     val r4 = (exact & pq4).size.toDouble / exact.size
@@ -148,9 +148,9 @@ class PqSpec extends SparkSpec {
   test("q160 hierarchical encode keeps recall between the 4-bit and flat-8-bit postures") {
     val exact = ops.Similarity.q55AnnBruteforce(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val pq4 = ops.Similarity.q154AnnPqAdc(spark, sfDir)
+    val pq4 = ops.Similarity.queries("q154_ann_pq_adc")(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val hier = ops.Similarity.q160AnnPq8Hier(spark, sfDir)
+    val hier = ops.Similarity.queries("q160_ann_pq8_hier")(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     assert(hier.nonEmpty)
     val r4 = (exact & pq4).size.toDouble / exact.size
@@ -165,9 +165,9 @@ class PqSpec extends SparkSpec {
   test("q161 beam-2 encode recovers recall toward the flat 8-bit posture") {
     val exact = ops.Similarity.q55AnnBruteforce(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val hier1 = ops.Similarity.q160AnnPq8Hier(spark, sfDir)
+    val hier1 = ops.Similarity.queries("q160_ann_pq8_hier")(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val hier2 = ops.Similarity.q161AnnPq8HierBeam(spark, sfDir)
+    val hier2 = ops.Similarity.queries("q161_ann_pq8_hier_beam")(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     assert(hier2.nonEmpty)
     val r1 = (exact & hier1).size.toDouble / exact.size
@@ -182,9 +182,9 @@ class PqSpec extends SparkSpec {
   test("q165 Lloyd-grouped beam encode holds the 0.70 recall floor at sub-flat encode cost") {
     val exact = ops.Similarity.q55AnnBruteforce(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val seedBeam = ops.Similarity.q161AnnPq8HierBeam(spark, sfDir)
+    val seedBeam = ops.Similarity.queries("q161_ann_pq8_hier_beam")(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val lloyd = ops.Similarity.q165AnnPq8Lloyd(spark, sfDir)
+    val lloyd = ops.Similarity.queries("q165_ann_pq8_lloyd")(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     assert(lloyd.nonEmpty)
     val rSeed = (exact & seedBeam).size.toDouble / exact.size
@@ -246,7 +246,7 @@ class PqSpec extends SparkSpec {
   test("q154 PQ pipeline keeps a recall floor vs the exact q55 top-5") {
     val exact = ops.Similarity.q55AnnBruteforce(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val pq = ops.Similarity.q154AnnPqAdc(spark, sfDir)
+    val pq = ops.Similarity.queries("q154_ann_pq_adc")(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     assert(pq.nonEmpty)
     val recall = (exact & pq).size.toDouble / exact.size
@@ -254,5 +254,32 @@ class PqSpec extends SparkSpec {
     // the ADC ranking is coarse, so recall comes from the rerank depth —
     // measured at sf0.001: 0.27 at shortlist 10, 0.47 at the shipped 32.
     assert(recall > 0.35, s"PQ-ADC recall $recall vs exact top-5")
+  }
+
+  test("PQ index tail writes: a failure cancels the sibling writes and surfaces the original exception") {
+    // annPqIndexWrite runs its independent tail writes concurrently. One
+    // failing write must reach the caller as its own exception (not an
+    // ExecutionException wrapper), and no sibling write may still be
+    // running when the call returns — else it could finish after the
+    // caller has already handled the failure.
+    val running = new java.util.concurrent.atomic.AtomicInteger(0)
+    val siblingStarted = new java.util.concurrent.CountDownLatch(1)
+    val failing: () => Unit = () => {
+      siblingStarted.await()
+      throw new IllegalStateException("tail write failed")
+    }
+    val sibling: () => Unit = () => {
+      running.incrementAndGet()
+      try {
+        siblingStarted.countDown()
+        Thread.sleep(30000)
+      } catch { case _: InterruptedException => () }
+      finally running.decrementAndGet()
+    }
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException](ops.Similarity.runConcurrently(Seq(failing, sibling)))
+    assert(e.getMessage == "tail write failed")
+    assert(running.get() == 0, "a sibling tail write was still running after the call returned")
+    assert((System.nanoTime() - t0) / 1e9 < 20, "the sibling write was waited out, not cancelled")
   }
 }
