@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables.t
 
@@ -16,6 +17,8 @@ import graft.sources.Tables.t
   * bit-for-bit.
   */
 object Similarity {
+  private val H = graft.functions.Hyperplanes
+
   /** Left-to-right fold dot product in DOUBLE (graft_dot, the codegen'd
     * expression in graft.functions) — identical evaluation order to the
     * DuckDB oracle's list_reduce, hence bit-identical results.
@@ -23,287 +26,223 @@ object Similarity {
   private val dot =
     "graft_dot(transform(q.embedding, x -> CAST(x AS DOUBLE)), transform(n.embedding, x -> CAST(x AS DOUBLE)))"
 
+  /** DuckDB replica of the graft_dot fold over the float `embedding`
+    * columns of relations `a` and `b`.
+    */
+  private def dotSql(a: String, b: String): String =
+    s"""list_reduce([CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE)
+                             FOR i IN generate_series(1, len($a.embedding))],
+                            (acc, v) -> acc + v)"""
+
+  /** (vec_id, emb array<double>) of an embeddings frame — the form every
+    * hyperplane, centroid and dot expression here reads.
+    */
+  private def doubles(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("vec_id"),
+      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
+
+  private def vectors(s: SparkSession, dir: String): DataFrame =
+    doubles(t(s, dir, "embeddings"))
+
+  /** The exact top-k tail of every ANN query: rank each query's scored
+    * (query_id, neighbor_id, cosine) rows by cosine desc, neighbor id
+    * asc, keep rank <= k and emit (query_id, rank, neighbor_id, out…).
+    * Ranking runs on the full-precision cosine; only `cos_r` is rounded.
+    */
+  private def topK(scored: DataFrame, k: Int = 5,
+                   out: Seq[Column] = Seq(round(col("cosine"), 6).as("cos_r"))): DataFrame =
+    scored
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id").asc)))
+      .filter(col("rank") <= k)
+      .select(Seq(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id")) ++ out: _*)
+      .orderBy(col("query_id"), col("rank"))
+
+  /** DuckDB replica of [[topK]] (k = 5) over relation `from`. */
+  private def topKSql(from: String, out: String = "ROUND(cosine, 6) AS cos_r"): String =
+    s"""SELECT query_id, rank, neighbor_id, $out FROM (
+         SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+                        ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
+         FROM $from)
+       WHERE rank <= 5 ORDER BY query_id, rank"""
+
   /** Exact k-NN: 20 query vectors (vec_id < 20) against the full corpus.
     * The query side is tiny → broadcast; the corpus streams partition-local
     * with zero shuffle of the big side; the only shuffle is the per-query
-    * top-k window over |Q|·|N| scored rows, which AQE coalesces. Output
-    * keeps ids + rank (integers) and the cosine rounded to 6 — ranking is
-    * done on the full-precision value.
+    * top-k window over |Q|·|N| scored rows, which AQE coalesces.
     */
   def q55AnnBruteforce(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorExpressions.register(s)
     val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val queries = e.filter(col("vec_id") < 20)
-    val scored = broadcast(queries.as("q")).join(e.as("n"), col("q.vec_id") =!= col("n.vec_id"))
+    topK(broadcast(queries.as("q")).join(e.as("n"), col("q.vec_id") =!= col("n.vec_id"))
       .select(col("q.vec_id").as("query_id"), col("n.vec_id").as("neighbor_id"),
-        expr(dot).as("cosine"))
-    scored
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id"),
-        round(col("cosine"), 6).as("cos_r"))
-      .orderBy(col("query_id"), col("rank"))
+        expr(dot).as("cosine")))
   }
 
   val q55Sql: String =
-    """WITH scored AS (
+    s"""WITH scored AS (
          SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
                 list_reduce([CAST(q.embedding[i] AS DOUBLE) * CAST(n.embedding[i] AS DOUBLE)
                              for i in generate_series(1, len(q.embedding))],
                             (acc, v) -> acc + v) AS cosine
          FROM embeddings q JOIN embeddings n ON q.vec_id <> n.vec_id
          WHERE q.vec_id < 20)
-       SELECT query_id, rank, neighbor_id, ROUND(cosine, 6) AS cos_r FROM (
-         SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                        ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
-         FROM scored)
-       WHERE rank <= 5 ORDER BY query_id, rank"""
+       ${topKSql("scored")}"""
 
-  /** Multi-table hyperplane-LSH ANN (the 100 TB path): L = 16 independent
-    * tables of r = 4 sign bits; a probe compares only against vectors
-    * sharing a bucket in ≥ 1 table. Collision probability per table for
-    * angle θ is (1 − θ/π)^r, so at cos ≈ 0.5 (θ = 60°, per-bit agreement
-    * 2/3) recall across 16 tables is 1 − (1 − (2/3)⁴)¹⁶ ≈ 0.97, while a
-    * random pair (per-bit 1/2) collides somewhere with prob
-    * 1 − (1 − 1/16)¹⁶ ≈ 0.64. This near-uniform corpus is hyperplane
-    * LSH's worst case — real embedding corpora cluster, pushing the true-
-    * neighbor per-bit agreement toward 1 and the candidate fraction down;
-    * (L, r) is the recall/cost dial. Recall vs q55 is pinned by the
-    * scalatest spec; ADDITIONALLY the result is hash-checked against a
-    * DuckDB oracle (q56Sql): approximate-vs-exact-kNN, but deterministic —
-    * both engines compute identical bucket ids from identical plane
-    * literals (see [[graft.functions.Hyperplanes]]), so the candidate set,
-    * scores, and id-tie-broken ranks agree bit-for-bit.
+  /** Multi-table hyperplane-LSH candidates: 16 tables of 4 sign bits
+    * from the shared plane set ([[graft.functions.Hyperplanes]], one
+    * codegen'd graft_lsh_buckets pass per row); a probe (vec_id <
+    * `nQueries`) pairs with every vector sharing its bucket in ≥ 1 table.
+    * `multiProbe` also searches the four one-bit-flipped buckets per
+    * table (Lv et al., "Multi-Probe LSH", VLDB'07) — a strict superset of
+    * the home-bucket candidates, growing only the probe side, never the
+    * corpus index. Distinct on the ids, NOT on rows carrying vectors: a
+    * pair may collide in several tables.
     */
-  def q56AnnLsh(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    // Signatures via the shared deterministic plane set
-    // (graft.functions.Hyperplanes): 64 codegen'd graft_dot loops per row
-    // against literal planes — round 1's 64 interpreted
-    // aggregate(zip_with(...)) folds were q56's whole cost (VERDICT r1).
-    // Same seed/packing, so buckets — and results — are unchanged.
-    val emb = t(s, dir, "embeddings")
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-    val tabbed = emb
-      .select(col("vec_id"), posexplode(
-        expr(graft.functions.Hyperplanes.sparkBucketsExpr("emb"))).as(Seq("tbl", "bucket")))
-    val probes = tabbed.filter(col("vec_id") < 20)
-    // Candidate id pairs first (a pair may collide in several tables —
-    // distinct on the ids, NOT on rows carrying the vectors), then join
-    // the vectors back for one scoring pass.
-    val cands = broadcast(probes.as("q"))
+  private def lshCandidates(e: DataFrame, nQueries: Int, multiProbe: Boolean): DataFrame = {
+    val tabbed = e.select(col("vec_id"),
+      posexplode(expr(H.sparkBucketsExpr("emb"))).as(Seq("tbl", "bucket")))
+    val homes = tabbed.filter(col("vec_id") < nQueries)
+    val probes = if (!multiProbe) homes else homes.select(col("vec_id"), col("tbl"),
+      explode(expr("array(bucket, bucket ^ 8, bucket ^ 4, bucket ^ 2, bucket ^ 1)")).as("bucket"))
+    broadcast(probes.as("q"))
       .join(tabbed.as("n"),
         col("q.tbl") === col("n.tbl") && col("q.bucket") === col("n.bucket") &&
           col("q.vec_id") =!= col("n.vec_id"))
       .select(col("q.vec_id").as("query_id"), col("n.vec_id").as("neighbor_id"))
       .distinct()
-    cands
-      .join(broadcast(emb.filter(col("vec_id") < 20).withColumnRenamed("emb", "q_emb")),
-        col("query_id") === col("vec_id")).drop("vec_id")
-      .join(emb.withColumnRenamed("emb", "n_emb"), col("neighbor_id") === col("vec_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        expr("graft_dot(q_emb, n_emb)").as("cosine"))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id"),
-        round(col("cosine"), 6).as("cos_r"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
-  /** DuckDB replica of q56: identical signature list per vector (plane
-    * literals shared via [[graft.functions.Hyperplanes.duckBucketsSql]]),
-    * candidates = probe pairs colliding in ≥ 1 of the 16 tables, identical
-    * ascending-index double fold for the score, identical rank tie-break.
+  /** DuckDB replica of [[lshCandidates]] as `sig`/`cands` CTEs over
+    * `embeddings`: identical bucket lists from the shared plane literals,
+    * a candidate = a `where` pair colliding in any table.
     */
-  def q56Sql: String = {
-    val sig = graft.functions.Hyperplanes.duckBucketsSql("embedding")
-    val nt = graft.functions.Hyperplanes.tables
-    s"""WITH sig AS (SELECT vec_id, $sig AS sig FROM embeddings),
-       cands AS (
-         SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
-         FROM sig q JOIN sig n ON q.vec_id <> n.vec_id
-         WHERE q.vec_id < 20
-           AND list_contains([q.sig[i] = n.sig[i] FOR i IN generate_series(1, $nt)], true)),
-       scored AS (
-         SELECT c.query_id, c.neighbor_id,
-                list_reduce([CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)
-                             FOR i IN generate_series(1, len(a.embedding))],
-                            (acc, v) -> acc + v) AS cosine
-         FROM cands c JOIN embeddings a ON c.query_id = a.vec_id
-                      JOIN embeddings b ON c.neighbor_id = b.vec_id)
-       SELECT query_id, rank, neighbor_id, ROUND(cosine, 6) AS cos_r FROM (
-         SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                        ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
-         FROM scored)
-       WHERE rank <= 5 ORDER BY query_id, rank"""
-  }
-
-  /** Multi-probe hyperplane LSH (closes SURVEY §8's "multi-probe if the
-    * recall floor must rise"): each probe searches its own bucket PLUS the
-    * four one-bit-flipped buckets in every table — the perturbation
-    * sequence for sign-LSH, where a near-threshold neighbor most likely
-    * differs in exactly one plane's sign. Recall rises (strict superset of
-    * q56's candidates) without adding tables, i.e. without re-hashing the
-    * corpus — the standard memory/recall trade (Lv et al., "Multi-Probe
-    * LSH", VLDB'07). Candidate volume grows ~5× per probe but ONLY on the
-    * probe side: the corpus index is unchanged, so at 100 TB the extra
-    * cost is 4 more bucket lookups per (probe, table), not a bigger index.
-    * Deterministic (same shared planes + fixed flip set) → bit-exact
-    * DuckDB oracle like q56.
-    */
-  def q84AnnMultiprobe(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    val emb = t(s, dir, "embeddings")
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-    val tabbed = emb
-      .select(col("vec_id"), posexplode(
-        expr(graft.functions.Hyperplanes.sparkBucketsExpr("emb"))).as(Seq("tbl", "bucket")))
-    // Probe side: home bucket + the 4 single-bit perturbations.
-    val probes = tabbed.filter(col("vec_id") < 20)
-      .select(col("vec_id"), col("tbl"), explode(
-        expr("array(bucket, bucket ^ 8, bucket ^ 4, bucket ^ 2, bucket ^ 1)")).as("bucket"))
-    val cands = broadcast(probes.as("q"))
-      .join(tabbed.as("n"),
-        col("q.tbl") === col("n.tbl") && col("q.bucket") === col("n.bucket") &&
-          col("q.vec_id") =!= col("n.vec_id"))
-      .select(col("q.vec_id").as("query_id"), col("n.vec_id").as("neighbor_id"))
-      .distinct()
-    cands
-      .join(broadcast(emb.filter(col("vec_id") < 20).withColumnRenamed("emb", "q_emb")),
-        col("query_id") === col("vec_id")).drop("vec_id")
-      .join(emb.withColumnRenamed("emb", "n_emb"), col("neighbor_id") === col("vec_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        expr("graft_dot(q_emb, n_emb)").as("cosine"))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id"),
-        round(col("cosine"), 6).as("cos_r"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** DuckDB replica of q84: same signatures, candidate = collision of the
-    * neighbor's bucket with the probe's home-or-one-bit-flipped bucket in
-    * any table.
-    */
-  def q84Sql: String = {
-    val sig = graft.functions.Hyperplanes.duckBucketsSql("embedding")
-    val nt = graft.functions.Hyperplanes.tables
-    s"""WITH sig AS (SELECT vec_id, $sig AS sig FROM embeddings),
-       cands AS (
-         SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
-         FROM sig q JOIN sig n ON q.vec_id <> n.vec_id
-         WHERE q.vec_id < 20
-           AND list_contains([n.sig[i] = q.sig[i] OR n.sig[i] = xor(q.sig[i], 8)
+  private def lshCandsSql(where: String, multiProbe: Boolean = false,
+                          geometry: (Int, Int) = (H.bits, H.tables)): String = {
+    val sig = H.duckBucketsSql("embedding", geometry._1, geometry._2)
+    val hit = if (!multiProbe) "q.sig[i] = n.sig[i]"
+      else """n.sig[i] = q.sig[i] OR n.sig[i] = xor(q.sig[i], 8)
                               OR n.sig[i] = xor(q.sig[i], 4) OR n.sig[i] = xor(q.sig[i], 2)
-                              OR n.sig[i] = xor(q.sig[i], 1)
-                              FOR i IN generate_series(1, $nt)], true)),
+                              OR n.sig[i] = xor(q.sig[i], 1)"""
+    s"""sig AS (SELECT vec_id, $sig AS sig FROM embeddings),
+       cands AS (
+         SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
+         FROM sig q JOIN sig n ON q.vec_id <> n.vec_id
+         WHERE $where
+           AND list_contains([$hit
+                              FOR i IN generate_series(1, ${geometry._2})], true))"""
+  }
+
+  /** Attach column `c` of `vecs` (vec_id, c) to (query_id, neighbor_id)
+    * pairs as `q_c` (the probes, broadcast) and `n_c` (the corpus side).
+    */
+  private def withPairVecs(pairs: DataFrame, vecs: DataFrame, nQueries: Int,
+                           c: String): DataFrame =
+    pairs
+      .join(broadcast(vecs.filter(col("vec_id") < nQueries).withColumnRenamed(c, s"q_$c")),
+        col("query_id") === col("vec_id")).drop("vec_id")
+      .join(vecs.withColumnRenamed(c, s"n_$c"), col("neighbor_id") === col("vec_id"))
+
+  /** Exact cosine of each candidate pair, `carry` columns kept. */
+  private def exactScored(pairs: DataFrame, e: DataFrame, nQueries: Int,
+                          carry: String*): DataFrame =
+    withPairVecs(pairs, e, nQueries, "emb")
+      .select((Seq("query_id", "neighbor_id") ++ carry).map(col)
+        :+ expr("graft_dot(q_emb, n_emb)").as("cosine"): _*)
+
+  /** LSH ANN: [[lshCandidates]] → exact score → optional `maxCos`
+    * exclusion BEFORE the window → top-k. Recall per table for angle θ
+    * is (1 − θ/π)^4, so at cos ≈ 0.5 recall across 16 tables is
+    * 1 − (1 − (2/3)⁴)¹⁶ ≈ 0.97, while a random pair collides somewhere
+    * with prob 1 − (1 − 1/16)¹⁶ ≈ 0.64 — the near-uniform fixture is
+    * hyperplane LSH's worst case. Deterministic: both engines hash with
+    * the same plane literals, so candidates, scores and id-tie-broken
+    * ranks agree with the DuckDB oracle bit-for-bit.
+    */
+  private def lshTopK(e: DataFrame, multiProbe: Boolean, maxCos: Option[Double],
+                      k: Int = 5, nQueries: Int = 20): DataFrame = {
+    val scored = exactScored(lshCandidates(e, nQueries, multiProbe), e, nQueries)
+    topK(maxCos.fold(scored)(c => scored.filter(col("cosine") < c)), k)
+  }
+
+  private def lshTopKSql(where: String, multiProbe: Boolean, maxCos: Option[Double],
+                         geometry: (Int, Int) = (H.bits, H.tables)): String =
+    s"""WITH ${lshCandsSql(where, multiProbe, geometry)},
        scored AS (
          SELECT c.query_id, c.neighbor_id,
-                list_reduce([CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)
-                             FOR i IN generate_series(1, len(a.embedding))],
-                            (acc, v) -> acc + v) AS cosine
+                ${dotSql("a", "b")} AS cosine
          FROM cands c JOIN embeddings a ON c.query_id = a.vec_id
                       JOIN embeddings b ON c.neighbor_id = b.vec_id)
-       SELECT query_id, rank, neighbor_id, ROUND(cosine, 6) AS cos_r FROM (
-         SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                        ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
-         FROM scored)
-       WHERE rank <= 5 ORDER BY query_id, rank"""
-  }
+       ${topKSql(maxCos.fold("scored")(c => s"scored WHERE cosine < $c"))}"""
 
-  /** IVF (inverted-file) ANN — the other standard scale path the prompt
-    * names: a coarse quantizer partitions the corpus into k=16 cells; each
-    * probe scores only the vectors in its `nProbe`=4 nearest cells
-    * (expected candidate fraction nProbe/k of the corpus).
-    *
-    * The quantizer is DETERMINISTIC so the result is fully oracle-checkable
-    * (round 2 used seeded KMeans — rows-only, and its 10 MLlib iterations
-    * were ~6 s of the bench): seed cells are the 4 sign bits of hyperplane
-    * table 0 ([[graft.functions.Hyperplanes]]), cell centroids are
-    * fixed-point integer means (the q59 trick — order-independent, so
-    * identical under any partitioning and in DuckDB), and every vector is
-    * then assigned to its nearest centroid — i.e. one exact Lloyd step from
-    * a deterministic initialization. Same IVF semantics (data-derived
-    * centroids, nearest-centroid cells, nProbe search), zero training loop.
-    *
-    * Scale shape: centroid build is one explode + partial-aggregated sum
-    * (map-side combined); assignment is a broadcast of k centroids against
-    * a streaming corpus scan (k·dim doubles — tiny); probes broadcast; the
-    * candidate join shuffles only the nProbe cells' ids. At 100 TB, build
-    * centroids from a sample and more Lloyd steps if cells drift — the
-    * assignment/search jobs are unchanged.
+  /** The registered LSH queries: (key, multiProbe, maxCos).
+    * q124 is contrastive hard-negative mining — the highest-cosine
+    * candidates that are NOT near-duplicates (cosine < 0.45, q107's dedup
+    * threshold): dups train nothing, random negatives are too easy.
     */
-  /** Shared IVF coarse quantizer (q58's scaladoc has the full design
-    * rationale): deterministic 4-bit seed cells → fixed-point centroids →
-    * one Lloyd-step centroid ranking. Returns (emb, ranked) where ranked
-    * carries (vec_id, cell, rn): rn = 1 is the cell assignment, rn <=
-    * nProbe the probe list. Reused by q58 (ANN search) and q107
-    * (semantic dedup).
-    */
-  private[ops] def ivfScored(s: SparkSession, dir: String,
-                             cellBits: Int = 4): (DataFrame, DataFrame) = {
-    val (emb, _, scored) = ivfModel(s, dir, cellBits)
-    (emb, scored)
-  }
+  private val lshPostures: Seq[(String, Boolean, Option[Double])] = Seq(
+    ("q56_ann_lsh", false, None),
+    ("q84_ann_multiprobe", true, None),
+    ("q124_hard_negatives", true, Some(0.45)))
 
-  /** [[ivfScored]] with the coarse codebook exposed: (emb, cents, scored)
-    * where cents = (cell, centroid array<double>). Residual consumers
-    * (q156) need the centroid vectors themselves, not just the dots.
+  /** q124's operator over any embeddings frame: multi-probe candidates,
+    * exact rescoring, the `dupCos` exclusion as a pre-window filter.
+    */
+  def hardNegatives(emb: DataFrame, k: Int = 5, dupCos: Double = 0.45,
+                    nQueries: Int = 20): DataFrame =
+    lshTopK(doubles(emb), multiProbe = true, Some(dupCos), k, nQueries)
+
+  /** Shared IVF coarse quantizer: deterministic cellBits-bit seed cells
+    * (sign bits of the shared planes) → fixed-point integer-mean
+    * centroids (order-independent, so identical under any partitioning
+    * and in DuckDB) → one exact Lloyd step. Returns (emb, cents, scored):
+    * cents = (cell, centroid array<double>), scored = (vec_id, cell, d)
+    * with d the vector's dot with each centroid.
     */
   private[graft] def ivfModel(s: SparkSession, dir: String,
                               cellBits: Int = 4): (DataFrame, DataFrame, DataFrame) = {
     graft.functions.VectorExpressions.register(s)
-    val emb = t(s, dir, "embeddings")
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-    // Seed partition: one cellBits-bit sign-cell per vector (cellBits
-    // codegen'd dots); cellBits = 4 reproduces q58's original 16 cells.
-    val seeded = emb.withColumn("cell0",
-      expr(graft.functions.Hyperplanes.sparkCellExprN("emb", cellBits)))
-    // Fixed-point per-cell centroid (exact integer sums — deterministic).
-    // Pinned (≤ 2^cellBits tiny rows, r13): every consumer references
-    // the codebook at least twice (the scoring crossJoin + q156's
-    // residual subtraction, or the assignment and probe branches), and
-    // each un-pinned reference re-ran the corpus-scale training
-    // aggregation — measured as 1-2 extra full passes per IVF query
-    // (guide §2.4: remove recomputed subtrees outright).
-    val cents = StorageHandle.sessionDefault().pin(seeded
-      .select(col("cell0"), posexplode(
-        expr("transform(emb, x -> CAST(ROUND(x * 10000000) AS BIGINT))")).as(Seq("dim", "fx")))
-      .groupBy(col("cell0"), col("dim"))
-      .agg(sum(col("fx")).as("sfx"), count(lit(1)).as("n"))
-      .groupBy(col("cell0"))
-      .agg(expr("transform(array_sort(collect_list(struct(dim, sfx, n))), e -> CAST(e.sfx AS DOUBLE) / e.n / 10000000)").as("centroid"))
-      .select(col("cell0").as("cell"), col("centroid")))
-    // One Lloyd step: rank all k centroids per vector (k·N codegen'd dots
-    // against the broadcast centroids). The ranking window shuffles ONLY
-    // the narrow (vec_id, cell, d) triples — never the 16×-multiplied
-    // embedding vectors, which join back by vec_id afterwards (one narrow
-    // hash join each for the corpus assignment and the 20 probes).
-    // rn=1 is the cell assignment; rn<=nProbe on the probe subset is the
-    // cell list to search.
+    val emb = vectors(s, dir)
+    // Seed partition: one cellBits-bit sign-cell per vector.
+    val seeded = emb.withColumn("cell0", expr(H.sparkCellExprN("emb", cellBits)))
+    // Pinned (≤ 2^cellBits tiny rows): every consumer references the
+    // codebook at least twice, and each un-pinned reference re-ran the
+    // corpus-scale training aggregation.
+    val cents = StorageHandle.sessionDefault().pin(
+      fxCentroids(fxSums(seeded, Seq("cell0"), "emb"), Seq("cell0"))
+        .select(col("cell0").as("cell"), col("centroid")))
     val scored = emb.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("cell"),
         expr("graft_dot(emb, centroid)").as("d"))
     (emb, cents, scored)
   }
 
-  /** [[ivfScored]] plus the per-vector centroid ranking window (rn = 1 is
-    * the assignment, rn <= nProbe the probe list). q58 needs the full
-    * ranking; assignment-only consumers (q107/q111) should aggregate
-    * [[ivfScored]] directly instead of sorting n·2^cellBits rows.
+  /** Fixed-point sums of `vec` per (`keys`, dim): exact integer adds, so
+    * the centroids [[fxCentroids]] derives are identical under any
+    * partitioning and in DuckDB.
+    */
+  private def fxSums(df: DataFrame, keys: Seq[String], vec: String): DataFrame =
+    df.select(keys.map(col) :+ posexplode(
+        expr(s"transform($vec, x -> CAST(ROUND(x * 10000000) AS BIGINT))")).as(Seq("dim", "fx")): _*)
+      .groupBy((keys :+ "dim").map(col): _*)
+      .agg(sum(col("fx")).as("sfx"), count(lit(1)).as("n"))
+
+  /** Per-`keys` centroid arrays of [[fxSums]] rows, dims in order. */
+  private def fxCentroids(sums: DataFrame, keys: Seq[String],
+                          name: String = "centroid"): DataFrame =
+    sums.groupBy(keys.map(col): _*)
+      .agg(expr("transform(array_sort(collect_list(struct(dim, sfx, n))), e -> CAST(e.sfx AS DOUBLE) / e.n / 10000000)").as(name))
+
+  /** [[ivfModel]]'s scored dots plus the per-vector centroid ranking
+    * window (rn = 1 is the assignment, rn <= nProbe the probe list) — the
+    * reference form the per-row routing expressions are pinned against.
     */
   private[graft] def ivfRanked(s: SparkSession, dir: String,
                                cellBits: Int = 4): (DataFrame, DataFrame) = {
-    val (emb, scored) = ivfScored(s, dir, cellBits)
+    val (emb, _, scored) = ivfModel(s, dir, cellBits)
     (emb, scored.withColumn("rn", row_number().over(
-      org.apache.spark.sql.expressions.Window.partitionBy(col("vec_id"))
-        .orderBy(col("d").desc, col("cell").asc))))
+      Window.partitionBy(col("vec_id")).orderBy(col("d").desc, col("cell").asc))))
   }
 
   /** One-row broadcast form of an IVF codebook: `cands` =
@@ -313,165 +252,119 @@ object Similarity {
   private def ivfCentsRow(cents: DataFrame): DataFrame =
     cents.agg(expr("transform(array_sort(collect_list(struct(cell, centroid))), e -> named_struct('cell', e.cell, 'cent', e.centroid))").as("cands"))
 
-  def q58AnnIvf(s: SparkSession, dir: String): DataFrame = {
-    val nProbe = 4
-    // r13: assignment and probe routing are per-row expressions against
-    // the one-row broadcast codebook — graft_argmax_dot IS ivfRanked's
-    // rn = 1 and graft_top_dots IS its rn <= nProbe slice (ordering-
-    // parity arguments in graft.functions.ArgmaxExpressions; the oracle
-    // re-proves both here). The n·2^cellBits scored explosion, its
-    // ranking window (exchange + full sort), and the two joins that
-    // re-attached emb are gone from the plan (guide §2.4).
-    val (emb, cents, _) = ivfModel(s, dir)
-    val centsRow = ivfCentsRow(cents)
-    val assigned = emb.crossJoin(broadcast(centsRow))
-      .select(col("vec_id"), col("emb"),
-        expr("graft_argmax_dot(emb, cands)").as("cell"))
-    val probeCells = emb.filter(col("vec_id") < 20)
-      .crossJoin(broadcast(centsRow))
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"),
-        explode(expr(s"graft_top_dots(emb, cands, $nProbe)")).as("p"))
-      .select(col("query_id"), col("q_emb"), col("p.cell").as("cell"))
-    broadcast(probeCells)
-      .join(assigned, Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr("graft_dot(q_emb, emb)").as("cosine"))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id"),
-        round(col("cosine"), 6).as("cos_r"))
-      .orderBy(col("query_id"), col("rank"))
+  /** Each vector's IVF cell: graft_argmax_dot against the one-row
+    * codebook IS [[ivfRanked]]'s rn = 1 (same d DESC / cell ASC
+    * tie-break; ordering parity in graft.functions.ArgmaxExpressions).
+    */
+  private def ivfAssigned(emb: DataFrame, ivfRow: DataFrame): DataFrame =
+    emb.crossJoin(broadcast(ivfRow))
+      .select(col("vec_id"), col("emb"), expr("graft_argmax_dot(emb, cands)").as("cell"))
+
+  /** IVF routing: each of the 20 probes' 4 nearest cells — graft_top_dots
+    * IS [[ivfRanked]]'s rn <= 4 slice. Emits (query_id, [q_emb], cell,
+    * [qc]) with qc the probe's dot with the cell centroid.
+    */
+  private def ivfProbeCells(emb: DataFrame, ivfRow: DataFrame,
+                            withEmb: Boolean = false, withQc: Boolean = false): DataFrame = {
+    val (qEmb, qEmbOut) =
+      if (withEmb) (Seq(col("emb").as("q_emb")), Seq(col("q_emb"))) else (Nil, Nil)
+    val qc = if (withQc) Seq(col("p.d").as("qc")) else Nil
+    emb.filter(col("vec_id") < 20)
+      .crossJoin(broadcast(ivfRow))
+      .select((col("vec_id").as("query_id") +: qEmb)
+        :+ explode(expr("graft_top_dots(emb, cands, 4)")).as("p"): _*)
+      .select((col("query_id") +: qEmbOut) ++ (col("p.cell").as("cell") +: qc): _*)
   }
 
-  /** DuckDB replica of q58: identical seed cells (shared plane literals),
-    * identical fixed-point centroids, identical centroid-dot ranking with
-    * the same tie-break, identical nProbe search and final top-5. A pair
-    * (query, neighbor) appears once — `assigned` has one cell per vector
-    * and a probe's nProbe cells are distinct — so no DISTINCT is needed.
+  /** IVF (inverted-file) ANN: the coarse quantizer partitions the corpus
+    * into 16 cells; each probe scores only the vectors in its 4 nearest
+    * cells (expected candidate fraction 4/16). Assignment and routing
+    * are per-row expressions against the one-row broadcast codebook, so
+    * neither the n·16 scored explosion nor its ranking window is planned.
+    * A pair appears once (one cell per vector, distinct probe cells).
     */
-  /** DuckDB replica of [[ivfRanked]] as a CTE prefix (identical seed
-    * cells via shared plane literals, identical fixed-point centroids,
-    * identical centroid-dot ranking and tie-break), ending at the
-    * `assigned` cell-assignment CTE. Shared by q58Sql and q107Sql.
-    */
-  private def ivfCteSql: String = ivfCteSql(4)
+  def q58AnnIvf(s: SparkSession, dir: String): DataFrame = {
+    val (emb, cents, _) = ivfModel(s, dir)
+    val centsRow = ivfCentsRow(cents)
+    topK(broadcast(ivfProbeCells(emb, centsRow, withEmb = true))
+      .join(ivfAssigned(emb, centsRow), Seq("cell"))
+      .filter(col("query_id") =!= col("vec_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        expr("graft_dot(q_emb, emb)").as("cosine")))
+  }
 
-  private def ivfCteSql(cellBits: Int): String = {
-    val cell0 = graft.functions.Hyperplanes.duckCellSqlN("embedding", cellBits)
-    s"""seeded AS (SELECT vec_id, embedding, $cell0 AS cell0 FROM embeddings),
-       comps AS (SELECT cell0, i - 1 AS dim,
+  /** DuckDB replica of the IVF quantizer as CTEs named `p`-prefixed
+    * (identical seed cells via shared plane literals, identical
+    * fixed-point centroids, identical centroid-dot ranking and
+    * tie-break), ending at the `assigned` cell-assignment CTE.
+    */
+  private def ivfCteSql(cellBits: Int, p: String = ""): String = {
+    val cell0 = H.duckCellSqlN("embedding", cellBits)
+    s"""${p}seeded AS (SELECT vec_id, embedding, $cell0 AS cell0 FROM embeddings),
+       ${p}comps AS (SELECT cell0, i - 1 AS dim,
                         CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 10000000) AS BIGINT) AS fx
-                 FROM seeded, UNNEST(generate_series(1, len(embedding))) AS t(i)),
-       sums AS (SELECT cell0, dim, SUM(fx) AS sfx, COUNT(*) AS n FROM comps GROUP BY 1, 2),
-       cent AS (SELECT cell0 AS cell, list(CAST(sfx AS DOUBLE) / n / 10000000 ORDER BY dim) AS centroid
-                FROM sums GROUP BY cell0),
-       ranked AS (
+                 FROM ${p}seeded, UNNEST(generate_series(1, len(embedding))) AS t(i)),
+       ${p}sums AS (SELECT cell0, dim, SUM(fx) AS sfx, COUNT(*) AS n FROM ${p}comps GROUP BY 1, 2),
+       ${p}cent AS (SELECT cell0 AS cell, list(CAST(sfx AS DOUBLE) / n / 10000000 ORDER BY dim) AS centroid
+                FROM ${p}sums GROUP BY cell0),
+       ${p}ranked AS (
          SELECT e.vec_id, c.cell,
                 ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
                   list_reduce([CAST(e.embedding[i] AS DOUBLE) * c.centroid[i]
                                FOR i IN generate_series(1, len(e.embedding))],
                               (acc, v) -> acc + v) DESC, c.cell ASC) AS rn
-         FROM embeddings e CROSS JOIN cent c),
-       assigned AS (SELECT vec_id, cell FROM ranked WHERE rn = 1)"""
+         FROM embeddings e CROSS JOIN ${p}cent c),
+       ${p}assigned AS (SELECT vec_id, cell FROM ${p}ranked WHERE rn = 1)"""
   }
 
-  def q58Sql: String = {
-    s"""WITH $ivfCteSql,
-       probecells AS (SELECT vec_id AS query_id, cell FROM ranked WHERE rn <= 4 AND vec_id < 20),
+  /** [[ivfCteSql]] at 16 cells plus the `probecells` routing CTE. */
+  private def ivfRouteSql(p: String): String =
+    s"""${ivfCteSql(4, p)},
+       probecells AS (SELECT vec_id AS query_id, cell FROM ${p}ranked WHERE rn <= 4 AND vec_id < 20)"""
+
+  def q58Sql: String =
+    s"""WITH ${ivfRouteSql("")},
        scored AS (
          SELECT p.query_id, a.vec_id AS neighbor_id,
-                list_reduce([CAST(qe.embedding[i] AS DOUBLE) * CAST(ne.embedding[i] AS DOUBLE)
-                             FOR i IN generate_series(1, len(qe.embedding))],
-                            (acc, v) -> acc + v) AS cosine
+                ${dotSql("qe", "ne")} AS cosine
          FROM probecells p JOIN assigned a USING (cell)
               JOIN embeddings qe ON p.query_id = qe.vec_id
               JOIN embeddings ne ON a.vec_id = ne.vec_id
          WHERE a.vec_id <> p.query_id)
-       SELECT query_id, rank, neighbor_id, ROUND(cosine, 6) AS cos_r FROM (
-         SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                        ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
-         FROM scored)
-       WHERE rank <= 5 ORDER BY query_id, rank"""
-  }
+       ${topKSql("scored")}"""
 
-  /** Quantized ANN serving shape (VERDICT r3 item 4): LSH candidates →
-    * cheap INT8 scoring → exact rerank of the short list. This is the
-    * standard memory-bound layout: the int8 codes (q85's symmetric
-    * per-vector quantization, 1 byte/dim + one scale) are what a 100 TB
-    * vector corpus actually keeps hot; the float vectors are only touched
-    * for the top-2k rerank.
-    *
-    * Stage shape: candidates are q56's multi-table hyperplane-LSH pairs
-    * (probe side broadcasts, corpus index unchanged); the int8 score is an
-    * EXACT integer dot product (|q_i| ≤ 127, 64 dims → |score| ≤ 2²⁰ —
-    * no overflow, no FP, so cross-engine bit-equality is free); per query
-    * the top-2k = 10 by int score (ties to neighbor id) rerank with the
-    * shared double fold. Everything is deterministic, so the oracle
-    * hash-checks the full approximate pipeline end to end.
+  /** Quantized ANN serving shape: LSH candidates → cheap INT8 scoring →
+    * exact rerank of the short list. The int8 codes (q85's symmetric
+    * per-vector quantization, 1 byte/dim + one scale) are what a large
+    * vector corpus keeps hot; the float vectors are only touched for the
+    * top-2k rerank. The int8 score is an EXACT integer dot product
+    * (|q_i| ≤ 127, 64 dims → |score| ≤ 2²⁰), so cross-engine equality is
+    * free; per query the top-2k = 10 by int score (ties to neighbor id)
+    * rerank with the shared double fold.
     */
   def q87AnnQuantRescore(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    val W = org.apache.spark.sql.expressions.Window
-    val emb = t(s, dir, "embeddings")
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-    // Per-vector symmetric int8 codes — q85's exact arithmetic.
+    val emb = vectors(s, dir)
     val codes = emb
       .withColumn("amax", expr("array_max(transform(emb, x -> abs(x)))"))
       .select(col("vec_id"),
         expr("transform(emb, x -> CAST(ROUND(x * 127 / amax) AS BIGINT))").as("code"))
-    val tabbed = emb
-      .select(col("vec_id"), posexplode(
-        expr(graft.functions.Hyperplanes.sparkBucketsExpr("emb"))).as(Seq("tbl", "bucket")))
-    val probes = tabbed.filter(col("vec_id") < 20)
-    val cands = broadcast(probes.as("q"))
-      .join(tabbed.as("n"),
-        col("q.tbl") === col("n.tbl") && col("q.bucket") === col("n.bucket") &&
-          col("q.vec_id") =!= col("n.vec_id"))
-      .select(col("q.vec_id").as("query_id"), col("n.vec_id").as("neighbor_id"))
-      .distinct()
-    // Integer scoring pass over the candidates (codes broadcast-joined by
-    // id — narrow), then keep 2k = 10 per query.
-    val shortlist = cands
-      .join(broadcast(codes.filter(col("vec_id") < 20).withColumnRenamed("code", "q_code")),
-        col("query_id") === col("vec_id")).drop("vec_id")
-      .join(codes.withColumnRenamed("code", "n_code"), col("neighbor_id") === col("vec_id"))
+    val shortlist = withPairVecs(lshCandidates(emb, 20, multiProbe = false), codes, 20, "code")
       .select(col("query_id"), col("neighbor_id"),
         expr("aggregate(zip_with(q_code, n_code, (x, y) -> x * y), 0L, (acc, v) -> acc + v)")
           .as("int_score"))
       .withColumn("rn", row_number().over(
-        W.partitionBy(col("query_id")).orderBy(col("int_score").desc, col("neighbor_id").asc)))
+        Window.partitionBy(col("query_id")).orderBy(col("int_score").desc, col("neighbor_id").asc)))
       .filter(col("rn") <= 10)
-    // Exact rerank of the shortlist only.
-    shortlist
-      .join(broadcast(emb.filter(col("vec_id") < 20).withColumnRenamed("emb", "q_emb")),
-        col("query_id") === col("vec_id")).drop("vec_id")
-      .join(emb.withColumnRenamed("emb", "n_emb"), col("neighbor_id") === col("vec_id"))
-      .select(col("query_id"), col("neighbor_id"), col("int_score"),
-        expr("graft_dot(q_emb, n_emb)").as("cosine"))
-      .withColumn("rank", row_number().over(
-        W.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id"),
-        col("int_score"), round(col("cosine"), 6).as("cos_r"))
-      .orderBy(col("query_id"), col("rank"))
+    topK(exactScored(shortlist, emb, 20, "int_score"),
+      out = Seq(col("int_score"), round(col("cosine"), 6).as("cos_r")))
   }
 
-  /** DuckDB replica of q87: identical plane-literal candidates (q56's),
-    * identical ROUND-half-up int8 codes (q85's), exact integer shortlist,
-    * identical ascending-index double fold for the rerank.
+  /** DuckDB replica of q87: q56's candidates, identical ROUND-half-up
+    * int8 codes (q85's), exact integer shortlist, identical rerank fold.
     */
-  def q87Sql: String = {
-    val sig = graft.functions.Hyperplanes.duckBucketsSql("embedding")
-    val nt = graft.functions.Hyperplanes.tables
-    s"""WITH sig AS (SELECT vec_id, $sig AS sig FROM embeddings),
-       cands AS (
-         SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
-         FROM sig q JOIN sig n ON q.vec_id <> n.vec_id
-         WHERE q.vec_id < 20
-           AND list_contains([q.sig[i] = n.sig[i] FOR i IN generate_series(1, $nt)], true)),
+  def q87Sql: String =
+    s"""WITH ${lshCandsSql("q.vec_id < 20")},
        v AS (SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS emb FROM embeddings),
        codes AS (
          SELECT vec_id,
@@ -494,57 +387,16 @@ object Similarity {
          WHERE rn <= 10),
        reranked AS (
          SELECT s.query_id, s.neighbor_id, s.int_score,
-                list_reduce([CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)
-                             FOR i IN generate_series(1, len(a.embedding))],
-                            (acc, v) -> acc + v) AS cosine
+                ${dotSql("a", "b")} AS cosine
          FROM shortlist s JOIN embeddings a ON s.query_id = a.vec_id
                           JOIN embeddings b ON s.neighbor_id = b.vec_id)
-       SELECT query_id, rank, neighbor_id, int_score, ROUND(cosine, 6) AS cos_r FROM (
-         SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                        ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
-         FROM reranked)
-       WHERE rank <= 5 ORDER BY query_id, rank"""
-  }
+       ${topKSql("reranked", "int_score, ROUND(cosine, 6) AS cos_r")}"""
 
-  /** Semantic dedup (the SemDeDup shape — cluster, then mine pairs only
-    * within a cluster): embedding near-duplicate pairs generated WITHIN
-    * the IVF coarse-quantizer cells, the cluster-scoped alternative to
-    * q54/q101's hyperplane-bucket candidate generation. Candidate volume
-    * is Σ_cells |cell|² instead of n²; at 100 TB the cell count scales
-    * with the corpus (k ∝ n / target-cell-size, centroids from a sample
-    * plus more Lloyd steps) so per-cell quadratic cost stays bounded —
-    * and unlike the LSH path, candidates are ranked against data-derived
-    * structure, which is why SemDeDup finds the semantic (not just
-    * lexical) duplicates. Verification is the exact fixed-order cosine
-    * fold shared bit-for-bit with the oracle; threshold 0.45 matches the
-    * q54 family so the outputs are comparable.
-    *
-    * Scale shape: one narrow shuffle on cell for the self-join (AQE
-    * splits a hot cell the same way it splits a hot LSH band —
-    * ScaleTechniquesSpec's skew case); the exact cosine runs only on
-    * same-cell pairs.
-    *
-    * 2^cellBits cells: fixing any cell count is a fixed geometry — at B×
-    * the corpus, raise cellBits by log2(B) to hold cell size (and
-    * per-cell quadratic cost) constant. The registered cell counts are
-    * the [[semanticCells]] rows.
+  /** Near-duplicate pairs within each cell of `assigned` (vec_id, emb,
+    * cell): the same-cell self-join, exact cosine, threshold 0.45 (the
+    * q54 family's, so outputs are comparable).
     */
-  def semanticDedup(s: SparkSession, dir: String, cellBits: Int): DataFrame = {
-    val (emb, cents, _) = ivfModel(s, dir, cellBits)
-    // Assignment is an ARGMAX, not a ranking — and since r13 a per-row
-    // graft_argmax_dot against the one-row broadcast codebook: the
-    // previous max(struct(d, -cell)) already avoided the n·2^cellBits
-    // ranking window (the dominant sf1 cost when this was a sort), but
-    // a struct-ordered max is not hash-aggregable, so it still paid a
-    // corpus-scale SortAggregate pair per reference (the pair-mining
-    // self-join makes TWO) plus the scored explosion and the join that
-    // re-attached emb. The expression keeps the identical d DESC / cell
-    // ASC tie-break, so the oracle's ROW_NUMBER formulation still
-    // matches bit-for-bit. (Pinning the narrow frame instead was tried
-    // and reverted — cache barrier, probes/r13opt.)
-    val assigned = emb.crossJoin(broadcast(ivfCentsRow(cents)))
-      .select(col("vec_id"), col("emb"),
-        expr("graft_argmax_dot(emb, cands)").as("cell"))
+  private def cellPairs(assigned: DataFrame): DataFrame =
     assigned.as("a").join(assigned.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id1"), col("b.vec_id").as("id2"),
@@ -553,6 +405,41 @@ object Similarity {
       .filter(col("cosine") >= 0.45)
       .select(col("id1"), col("id2"), col("cell"), round(col("cosine"), 6).as("cos_r"))
       .orderBy(col("id1"), col("id2"))
+
+  /** DuckDB replica of [[cellPairs]] over an `assigned` CTE whose vectors
+    * live in relation `vecs`.
+    */
+  private def cellPairsSql(vecs: String): String =
+    s"""pairs AS (SELECT a.vec_id AS id1, b.vec_id AS id2, a.cell
+                 FROM assigned a JOIN assigned b
+                   ON a.cell = b.cell AND a.vec_id < b.vec_id),
+       scored AS (
+         SELECT id1, id2, cell,
+                ${dotSql("e1", "e2")} AS cosine
+         FROM pairs JOIN $vecs e1 ON id1 = e1.vec_id
+                    JOIN $vecs e2 ON id2 = e2.vec_id)
+       SELECT id1, id2, cell, ROUND(cosine, 6) AS cos_r
+       FROM scored WHERE cosine >= 0.45 ORDER BY id1, id2"""
+
+  /** Semantic dedup (the SemDeDup shape — cluster, then mine pairs only
+    * within a cluster): embedding near-duplicate pairs generated WITHIN
+    * the IVF coarse-quantizer cells. Candidate volume is Σ_cells |cell|²
+    * instead of n²; candidates are ranked against data-derived structure,
+    * which is why SemDeDup finds semantic (not just lexical) duplicates.
+    * One narrow shuffle on cell for the self-join (AQE splits a hot cell
+    * like a hot LSH band).
+    *
+    * 2^cellBits cells: at B× the corpus, raise cellBits by log2(B) to
+    * hold cell size (and per-cell quadratic cost) constant. The
+    * registered cell counts are the [[semanticCells]] rows.
+    */
+  def semanticDedup(s: SparkSession, dir: String, cellBits: Int): DataFrame = {
+    val (emb, cents, _) = ivfModel(s, dir, cellBits)
+    // A per-row graft_argmax_dot, not a ranking or a struct-ordered max
+    // (not hash-aggregable: a corpus-scale SortAggregate pair per
+    // self-join side). Pinning the narrow frame instead was tried and
+    // reverted — cache barrier, probes/r13opt.
+    cellPairs(ivfAssigned(emb, ivfCentsRow(cents)))
   }
 
   /** The registered SemDeDup cell counts: (key, cellBits). */
@@ -566,34 +453,19 @@ object Similarity {
 
   /** q150 — HIERARCHICAL IVF assignment (the fix q147's falsification
     * record names): two-level Lloyd assignment, Θ(n·(2^hi + 2^lo)) instead
-    * of flat IVF's Θ(n·2^(hi+lo)).
+    * of flat IVF's Θ(n·2^(hi+lo)): each vector picks one of 2^hi SUPER
+    * cells, then one of ≤ 2^lo SUB cells *within its super cell*. With
+    * hi = lo = 5 this gives 1024 effective cells for 64 assignment dots
+    * per vector — a 16× assignment cut vs q147 at identical
+    * candidate-volume geometry.
     *
-    * q147 measured the flat-IVF scale problem: stepping the cell count
-    * with the corpus makes the Lloyd assignment itself quadratic in
-    * corpus size (600k × 1024 centroid dots at sf10 — SLOWER than the
-    * 256-cell q111 despite 4× fewer candidates). The standard coarse/fine
-    * decomposition fixes the asymptotics: assign each vector to one of
-    * 2^hi SUPER cells (2^hi dots), then to one of ≤ 2^lo SUB cells
-    * *within its super cell* (≤ 2^lo dots — the sub-centroid join is ON
-    * super, never a cross join). With hi = lo = 5 this gives 1024
-    * effective cells for 64 assignment dots per vector — a 16× assignment
-    * cut vs q147 at identical candidate-volume geometry.
-    *
-    * Both levels reuse the flat quantizer's deterministic machinery:
-    * sign-bit seeding (disjoint plane spans of the shared seed-7 pool),
-    * exact fixed-point centroids, argmax assignment with the d DESC /
-    * cell ASC tie-break — so the DuckDB oracle replays every step
-    * bit-for-bit. Runs over the planted-survivor fixture (see
-    * [[Dedup.plantedEmbeddings]]): an exact duplicate follows its
-    * original through BOTH assignment levels (identical seed cells,
-    * identical centroid dots), so the pair output is provably non-empty
-    * at every SF.
-    *
-    * Scale shape: super scoring is a broadcast of 2^hi centroids; sub
-    * scoring broadcasts ≤ 2^(hi+lo) (super, sub) centroids but each
-    * vector joins only its own super's group; pair mining shuffles once
-    * on the (super, sub) cell like q107. At 100 TB both levels step
-    * (hi, lo) with log₂(corpus)/2 each, keeping assignment Θ(n·√k).
+    * Both levels reuse the flat quantizer's deterministic machinery
+    * (disjoint plane spans of the shared seed-7 pool, fixed-point
+    * centroids, argmax with the d DESC / cell ASC tie-break), so the
+    * DuckDB oracle replays every step bit-for-bit. Runs over the
+    * planted-survivor fixture ([[Dedup.plantedEmbeddings]]): an exact
+    * duplicate follows its original through BOTH levels, so the pair
+    * output is provably non-empty at every SF.
     */
   def q150SemanticDedupHier(s: SparkSession, dir: String): DataFrame =
     semanticDedupHier(s, dir, hiBits = 5, loBits = 5)
@@ -601,31 +473,15 @@ object Similarity {
   def semanticDedupHier(s: SparkSession, dir: String,
                         hiBits: Int, loBits: Int): DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    val H = graft.functions.Hyperplanes
     val emb = Dedup.plantedEmbeddings(s, dir)
-    val fxArr = "transform(emb, x -> CAST(ROUND(x * 10000000) AS BIGINT))"
-    val centroidAgg =
-      expr("transform(array_sort(collect_list(struct(dim, sfx, n))), e -> CAST(e.sfx AS DOUBLE) / e.n / 10000000)")
     // Level 1: super cells from planes [0, hi).
     val supSeeded = emb.withColumn("super0",
       expr(H.sparkCellExprRange("emb", 0, hiBits)))
-    val supCents = supSeeded
-      .select(col("super0"), posexplode(expr(fxArr)).as(Seq("dim", "fx")))
-      .groupBy(col("super0"), col("dim"))
-      .agg(sum(col("fx")).as("sfx"), count(lit(1)).as("n"))
-      .groupBy(col("super0"))
-      .agg(centroidAgg.as("centroid"))
+    val supCents = fxCentroids(fxSums(supSeeded, Seq("super0"), "emb"), Seq("super0"))
       .select(col("super0").as("cell"), col("centroid"))
-    // r13: both assignment levels are per-row graft_argmax_dot evals
-    // against one-row broadcast codebooks (ordering-parity argument in
-    // graft.functions.ArgmaxExpressions) — the old shape exploded
-    // n·2^hi (then per-super) scored rows and folded them back through
-    // corpus-scale SortAggregate pairs (struct-ordered max is not
-    // hash-aggregable), recomputed per pair-mining self-join side, plus
-    // the join that re-attached emb for level 2. supAssigned carries
-    // emb through, so level 2 starts without a join. (Pinning the
-    // narrow frames instead was tried and reverted — cache barriers,
-    // probes/r13opt.)
+    // Both levels are per-row graft_argmax_dot evals against one-row
+    // broadcast codebooks; supAssigned carries emb through, so level 2
+    // starts without a join.
     val supAssigned = emb.crossJoin(broadcast(ivfCentsRow(supCents)))
       .select(col("vec_id"), col("emb"),
         expr("graft_argmax_dot(emb, cands)").as("super"))
@@ -633,33 +489,18 @@ object Similarity {
     // seeded and assigned within each super cell.
     val subSeeded = supAssigned
       .withColumn("sub0", expr(H.sparkCellExprRange("emb", hiBits, loBits)))
-    val subCents = subSeeded
-      .select(col("super"), col("sub0"), posexplode(expr(fxArr)).as(Seq("dim", "fx")))
-      .groupBy(col("super"), col("sub0"), col("dim"))
-      .agg(sum(col("fx")).as("sfx"), count(lit(1)).as("n"))
-      .groupBy(col("super"), col("sub0"))
-      .agg(centroidAgg.as("centroid"))
+    val subCents = fxCentroids(fxSums(subSeeded, Seq("super", "sub0"), "emb"), Seq("super", "sub0"))
       .select(col("super"), col("sub0").as("sub"), col("centroid"))
     // Per-super candidate map (≤ 2^(hi+lo) rows): each vector folds only
-    // its own super's sub-cells — the same ≤ 2^lo dots the join form
-    // scored, via the map side of graft_pq_hier_code's stage-2 idiom
-    // (one-group beam = plain argmax within the group).
+    // its own super's sub-cells (a one-group beam = plain argmax).
     val subMapRow = subCents.groupBy(col("super"))
       .agg(expr("transform(array_sort(collect_list(struct(sub, centroid))), e -> named_struct('cell', e.sub, 'cent', e.centroid))").as("cands"))
       .agg(expr("map_from_entries(collect_list(struct(super, cands)))").as("submap"))
-    val assigned = subSeeded.crossJoin(broadcast(subMapRow))
+    cellPairs(subSeeded.crossJoin(broadcast(subMapRow))
       .select(col("vec_id"), col("emb"),
         (col("super") * lit(1 << loBits) +
           expr("graft_argmax_dot(emb, element_at(submap, super))"))
-          .cast("int").as("cell"))
-    assigned.as("a").join(assigned.as("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id1"), col("b.vec_id").as("id2"),
-        col("a.cell").as("cell"),
-        expr("graft_dot(a.emb, b.emb)").as("cosine"))
-      .filter(col("cosine") >= 0.45)
-      .select(col("id1"), col("id2"), col("cell"), round(col("cosine"), 6).as("cos_r"))
-      .orderBy(col("id1"), col("id2"))
+          .cast("int").as("cell")))
   }
 
   /** DuckDB replica of [[semanticDedupHier]]: identical seed spans,
@@ -669,7 +510,6 @@ object Similarity {
   def q150Sql: String = hierSql(5, 5)
 
   private def hierSql(hiBits: Int, loBits: Int): String = {
-    val H = graft.functions.Hyperplanes
     val hiCell = H.duckCellSqlRange("embedding", 0, hiBits)
     val loCell = H.duckCellSqlRange("embedding", hiBits, loBits)
     def dotC(e: String, c: String) =
@@ -702,116 +542,12 @@ object Similarity {
                    FROM bseeded e JOIN bcent c USING (super)),
        assigned AS (SELECT vec_id, super * ${1 << loBits} + sub AS cell
                     FROM branked WHERE rn = 1),
-       pairs AS (SELECT a.vec_id AS id1, b.vec_id AS id2, a.cell
-                 FROM assigned a JOIN assigned b
-                   ON a.cell = b.cell AND a.vec_id < b.vec_id),
-       scored AS (
-         SELECT id1, id2, cell,
-                list_reduce([CAST(e1.embedding[i] AS DOUBLE) * CAST(e2.embedding[i] AS DOUBLE)
-                             FOR i IN generate_series(1, len(e1.embedding))],
-                            (acc, v) -> acc + v) AS cosine
-         FROM pairs JOIN emb e1 ON id1 = e1.vec_id
-                    JOIN emb e2 ON id2 = e2.vec_id)
-       SELECT id1, id2, cell, ROUND(cosine, 6) AS cos_r
-       FROM scored WHERE cosine >= 0.45 ORDER BY id1, id2"""
+       ${cellPairsSql("emb")}"""
   }
 
   private def semanticSql(cellBits: Int): String =
     s"""WITH ${ivfCteSql(cellBits)},
-       pairs AS (SELECT a.vec_id AS id1, b.vec_id AS id2, a.cell
-                 FROM assigned a JOIN assigned b
-                   ON a.cell = b.cell AND a.vec_id < b.vec_id),
-       scored AS (
-         SELECT id1, id2, cell,
-                list_reduce([CAST(e1.embedding[i] AS DOUBLE) * CAST(e2.embedding[i] AS DOUBLE)
-                             FOR i IN generate_series(1, len(e1.embedding))],
-                            (acc, v) -> acc + v) AS cosine
-         FROM pairs JOIN embeddings e1 ON id1 = e1.vec_id
-                    JOIN embeddings e2 ON id2 = e2.vec_id)
-       SELECT id1, id2, cell, ROUND(cosine, 6) AS cos_r
-       FROM scored WHERE cosine >= 0.45 ORDER BY id1, id2"""
-
-  /** Contrastive hard-negative mining — the retrieval-training composition
-    * of the ANN machinery: for each query vector, the k highest-cosine
-    * candidates that are NOT near-duplicates (cosine < `dupCos`, q107's
-    * semantic-dedup threshold). Dups/positives train nothing; random
-    * negatives are too easy; the value is exactly this "most similar but
-    * not the same" band, mined per query.
-    *
-    * Shape: q84's multi-probe candidate generation (home bucket + one-bit
-    * flips per table — recall floor without re-hashing the corpus), exact
-    * rescoring on candidates only, the dup exclusion as a per-candidate
-    * filter BEFORE the top-k window. Both engines compute identical
-    * buckets from the shared plane literals, so the output hash-matches.
-    *
-    * Scale: inherits q84's candidate volume (probes · n / 2^bits per
-    * table); exclusion adds zero shuffles; per-query top-k is
-    * WindowGroupLimit-pruned. At corpus growth the bits dial (q101/q111
-    * lesson) holds candidate volume flat.
-    */
-  def hardNegatives(emb: DataFrame, k: Int = 5, dupCos: Double = 0.45,
-                    nQueries: Int = 20): DataFrame = {
-    val e = emb
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-    val tabbed = e
-      .select(col("vec_id"), posexplode(
-        expr(graft.functions.Hyperplanes.sparkBucketsExpr("emb"))).as(Seq("tbl", "bucket")))
-    val probes = tabbed.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("tbl"), explode(
-        expr("array(bucket, bucket ^ 8, bucket ^ 4, bucket ^ 2, bucket ^ 1)")).as("bucket"))
-    val cands = broadcast(probes.as("q"))
-      .join(tabbed.as("n"),
-        col("q.tbl") === col("n.tbl") && col("q.bucket") === col("n.bucket") &&
-          col("q.vec_id") =!= col("n.vec_id"))
-      .select(col("q.vec_id").as("query_id"), col("n.vec_id").as("neighbor_id"))
-      .distinct()
-    cands
-      .join(broadcast(e.filter(col("vec_id") < nQueries).withColumnRenamed("emb", "q_emb")),
-        col("query_id") === col("vec_id")).drop("vec_id")
-      .join(e.withColumnRenamed("emb", "n_emb"), col("neighbor_id") === col("vec_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        expr("graft_dot(q_emb, n_emb)").as("cosine"))
-      .filter(col("cosine") < dupCos) // dup/positive exclusion, pre-window
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id"),
-        round(col("cosine"), 6).as("cos_r"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  def q124HardNegatives(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    hardNegatives(t(s, dir, "embeddings"))
-  }
-
-  /** q84's oracle with the dup-exclusion predicate before the ranking. */
-  def q124Sql: String = {
-    val sig = graft.functions.Hyperplanes.duckBucketsSql("embedding")
-    val nt = graft.functions.Hyperplanes.tables
-    s"""WITH sig AS (SELECT vec_id, $sig AS sig FROM embeddings),
-       cands AS (
-         SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
-         FROM sig q JOIN sig n ON q.vec_id <> n.vec_id
-         WHERE q.vec_id < 20
-           AND list_contains([n.sig[i] = q.sig[i] OR n.sig[i] = xor(q.sig[i], 8)
-                              OR n.sig[i] = xor(q.sig[i], 4) OR n.sig[i] = xor(q.sig[i], 2)
-                              OR n.sig[i] = xor(q.sig[i], 1)
-                              FOR i IN generate_series(1, $nt)], true)),
-       scored AS (
-         SELECT c.query_id, c.neighbor_id,
-                list_reduce([CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)
-                             FOR i IN generate_series(1, len(a.embedding))],
-                            (acc, v) -> acc + v) AS cosine
-         FROM cands c JOIN embeddings a ON c.query_id = a.vec_id
-                      JOIN embeddings b ON c.neighbor_id = b.vec_id)
-       SELECT query_id, rank, neighbor_id, ROUND(cosine, 6) AS cos_r FROM (
-         SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                        ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
-         FROM scored WHERE cosine < 0.45)
-       WHERE rank <= 5 ORDER BY query_id, rank"""
-  }
+       ${cellPairsSql("embeddings")}"""
 
   /** Hybrid retrieval — lexical BM25 + dense cosine, fused by Reciprocal
     * Rank Fusion (Cormack et al., SIGIR'09): the two-tower serving shape
@@ -834,15 +570,13 @@ object Similarity {
   def hybridRetrieval(docs: DataFrame, emb: DataFrame,
                       qterms: Seq[String], queryVec: Long = 0L,
                       pool: Int = 20, k: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val lex = TextAnalysis.bm25Scores(docs, qterms)
       .filter(col("doc_id") =!= queryVec)
       .orderBy(col("sfx").desc, col("doc_id").asc).limit(pool)
       .withColumn("lex_rank", row_number().over(
         Window.orderBy(col("sfx").desc, col("doc_id").asc)).cast("long"))
       .select(col("doc_id"), col("lex_rank"))
-    val e = emb.select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
+    val e = doubles(emb)
     val dense = e.filter(col("vec_id") =!= queryVec).as("n")
       .crossJoin(broadcast(e.filter(col("vec_id") === queryVec)
         .select(col("emb").as("q_emb"))))
@@ -916,49 +650,80 @@ object Similarity {
        FROM ranked WHERE rank <= 10 ORDER BY rank"""
 
   // ---------------------------------------------------------------------
-  // Persisted ANN index + incremental maintenance (VERDICT r6 item 6):
-  // the nightly-ingest shape every production vector store needs. q94
-  // proved the cross-batch discipline for shingle dedup; this is the same
-  // pattern for embeddings — the corpus's LSH signatures live in a
-  // PERSISTED table, a new batch probes those buckets without re-hashing
-  // (or re-shuffling) the corpus, and the batch's own signatures append
-  // into the index afterwards so tomorrow's batch probes today's corpus.
+  // Persisted ANN index + incremental maintenance: the corpus's LSH
+  // signatures live in a PERSISTED bucket tree, a new batch probes those
+  // buckets without re-hashing (or re-shuffling) the corpus, and the
+  // batch's own signatures append into the index afterwards. Two
+  // families share the tree: the float family (rows carry `emb`) and
+  // the PQ family (rows carry 8-byte `codes`).
   // ---------------------------------------------------------------------
 
-  /** Build the corpus side of the persisted index: one (vec_id, emb, tbl,
-    * bucket) row per vector per hyperplane table, written
-    * `partitionBy(tbl, bucket)` so a probe's bucket lookups become
-    * PARTITION PRUNING at the scan — a nightly batch touching b buckets
-    * reads b directories, not the index. `mode=append` is the maintenance
-    * path: a new batch's signatures drop new files into the matching
-    * bucket directories without rewriting anything (the LSH analogue of a
-    * log-structured index segment; compact with [[Layout]] when small
-    * files accumulate).
+  /** Bucket rows of `src` (vec_id, emb, …) at a geometry: one (vec_id,
+    * payload…, tbl, bucket, bgrp) row per vector per table, `payload`
+    * given as (name, the expression computing it from `src`).
     *
-    * The VECTOR lives in the bucket row — the classic space-for-time LSH
-    * index layout: a probe's pruned scan delivers candidate ids AND their
-    * embeddings in one read, so scoring needs no second corpus join. The
-    * price is L× vector duplication in the index (here 16×); the sf1
-    * probe showed the alternative — keeping the index id-only and joining
-    * candidates back to the corpus table for vectors — is the part that
-    * does NOT scale: the candidate×vector attach is either a corpus
-    * shuffle or a candidate-frame broadcast that grows past driver limits
-    * (1.8 GiB at a mere 10× corpus). At extreme scale, trade back with a
-    * bucket-co-partitioned side table instead of inlining.
+    * Directory layer = (tbl, bucket GROUP), not (tbl, bucket): a dir per
+    * full bucket means tables × 2^bits directories — measured at 16×14
+    * bits as a ~32k-tiny-file tree that took the sf0.1 build from 9 s to
+    * 157 s and the probe to 95 s. The low-order [[indexGrpBits]] of the
+    * bucket give a bounded fan-out whatever the geometry; the full bucket
+    * stays a data column.
+    */
+  private def bucketRows(src: DataFrame, bits: Int, tables: Int,
+                         payload: (String, Column)*): DataFrame =
+    src.select((col("vec_id") +: payload.map(_._2)) :+ posexplode(
+        expr(H.sparkBucketsExpr("emb", bits, tables))).as(Seq("tbl", "bucket")): _*)
+      .select((col("vec_id") +: payload.map(p => col(p._1))) :+ col("tbl").cast("int").as("tbl")
+        :+ col("bucket").cast("int").as("bucket"): _*)
+      .withColumn("bgrp", col("bucket").bitwiseAND(lit((1 << indexGrpBits(bits)) - 1)))
+
+  /** Write [[bucketRows]] `partitionBy(tbl, bgrp)`, so a probe's bucket
+    * lookups become partition pruning at the scan. Each group's rows are
+    * co-located in one task first, so every group directory receives one
+    * file per write; the sort lets the dynamic-partition writer see
+    * groups contiguously and lays buckets out in sorted runs, so parquet
+    * row-group min/max stats carry the residual selectivity.
+    */
+  private def writeBucketTree(rows: DataFrame, path: String, mode: String): Unit =
+    rows.repartition(col("tbl"), col("bgrp"))
+      .sortWithinPartitions(col("tbl"), col("bgrp"), col("bucket"))
+      .write.mode(mode).partitionBy("tbl", "bgrp").parquet(path)
+
+  /** The geometry is PART OF THE INDEX: a one-row parquet under
+    * `_geometry` (underscore-prefixed → invisible to the partitioned
+    * read), so a probe hashes its batch with the geometry the index was
+    * built with. Written AFTER the tree because a static-mode
+    * partitionBy overwrite clears the root first.
+    */
+  private def writeGeometry(s: SparkSession, path: String, bits: Int, tables: Int): Unit =
+    s.range(1)
+      .select(lit(bits).as("bits"), lit(tables).as("tables"))
+      .write.mode("overwrite").parquet(s"$path/_geometry")
+
+  /** Build the corpus side of the float-family index: one (vec_id, emb,
+    * tbl, bucket) row per vector per table. `mode=append` is the
+    * maintenance path: a new batch's rows drop new files into the
+    * matching group directories without rewriting anything.
     *
-    * `vecs` must carry (vec_id, emb) with emb already cast to
-    * Array[Double] (the shared [[graft.functions.Hyperplanes]] plane set
-    * hashes doubles). Signature cost is 64 codegen'd dots per vector —
-    * paid ONCE per vector's lifetime, here, never again at probe time.
+    * The VECTOR lives in the bucket row — the classic space-for-time
+    * layout: a probe's pruned scan delivers candidate ids AND their
+    * embeddings in one read, at L× vector duplication (here 16×). The
+    * sf1 probe showed the alternative — an id-only index joined back to
+    * the corpus — does NOT scale: the candidate×vector attach is a corpus
+    * shuffle or a candidate broadcast past driver limits (1.8 GiB at a
+    * mere 10× corpus).
+    *
+    * `vecs` must carry (vec_id, emb) with emb already Array[Double].
+    * Signature cost is paid ONCE per vector's lifetime, here.
     */
   def annIndexWrite(vecs: DataFrame, path: String,
                     mode: String = "overwrite",
-                    bitsPerTable: Int = graft.functions.Hyperplanes.bits,
-                    numTables: Int = graft.functions.Hyperplanes.tables): Unit = {
+                    bitsPerTable: Int = H.bits,
+                    numTables: Int = H.tables): Unit = {
     graft.functions.VectorExpressions.register(vecs.sparkSession)
-    // Geometry discipline (VERDICT r8 item 4): an append into an index
-    // hashed with a DIFFERENT geometry would silently produce bucket ids
-    // that never collide with the resident rows — fail fast instead.
+    // An append into an index hashed with a DIFFERENT geometry would
+    // silently produce bucket ids that never collide with the resident
+    // rows — fail fast instead.
     if (mode == "append") {
       indexGeometry(vecs.sparkSession, path) match {
         case Some(existing) =>
@@ -967,70 +732,30 @@ object Similarity {
         case None if java.nio.file.Files.exists(java.nio.file.Paths.get(path)) =>
           // Data present but no geometry record: a pre-dial legacy index,
           // hashed at the compile-time default.
-          val legacy = (graft.functions.Hyperplanes.bits, graft.functions.Hyperplanes.tables)
+          val legacy = (H.bits, H.tables)
           require(legacy == ((bitsPerTable, numTables)),
             s"append geometry ($numTables x $bitsPerTable) != legacy index geometry $legacy at $path")
         case None => // fresh path: the first append CREATES the index.
       }
     }
-    val grpBits = indexGrpBits(bitsPerTable)
-    vecs
-      .select(col("vec_id"), col("emb"), posexplode(
-        expr(graft.functions.Hyperplanes.sparkBucketsExpr("emb", bitsPerTable, numTables)))
-        .as(Seq("tbl", "bucket")))
-      .select(col("vec_id"), col("emb"), col("tbl").cast("int").as("tbl"),
-        col("bucket").cast("int").as("bucket"))
-      // Directory layer = (tbl, bucket GROUP), not (tbl, bucket): with the
-      // geometry dial live, a dir per full bucket means tables × 2^bits
-      // directories — measured at 16×14 bits as a ~32k-tiny-file tree
-      // that took the sf0.1 build from 9 s to 157 s and the probe to 95 s
-      // (file listing + one scan task per file dominate everything). The
-      // low-order grpBits of the bucket give a BOUNDED fan-out
-      // (tables × 2^grpBits dirs) whatever the geometry; the full bucket
-      // stays a data column, sorted within each file so parquet row-group
-      // min/max stats carry the residual selectivity.
-      .withColumn("bgrp", col("bucket").bitwiseAND(lit((1 << grpBits) - 1)))
-      // Compaction at write time (VERDICT r7 item 5): co-locate each
-      // (tbl, bgrp) partition's rows in one task before the partitionBy
-      // write, so every group directory receives exactly one file per
-      // write instead of one per upstream task; the sort makes the
-      // dynamic-partition writer see groups contiguously (one open file
-      // at a time) and lays buckets out in sorted runs.
-      .repartition(col("tbl"), col("bgrp"))
-      .sortWithinPartitions(col("tbl"), col("bgrp"), col("bucket"))
-      .write.mode(mode).partitionBy("tbl", "bgrp").parquet(path)
-    // The geometry is PART OF THE INDEX (VERDICT r8 item 4): persisted as
-    // a one-row parquet under `_geometry` (underscore-prefixed → invisible
-    // to the main partitioned read, like _SUCCESS), so a probe hashes its
-    // batch with whatever geometry the index was built with instead of a
-    // compile-time constant. Written AFTER the main write because a
-    // static-mode partitionBy overwrite clears the root first.
-    vecs.sparkSession.range(1)
-      .select(lit(bitsPerTable).as("bits"), lit(numTables).as("tables"))
-      .write.mode("overwrite").parquet(s"$path/_geometry")
-    Similarity.synchronized { builtIndexPaths += path }
+    writeBucketTree(bucketRows(vecs, bitsPerTable, numTables, "emb" -> col("emb")), path, mode)
+    writeGeometry(vecs.sparkSession, path, bitsPerTable, numTables)
+    registerIndex(path)
   }
 
   /** Bucket-group directory fan-out for a geometry: 2^grpBits dirs per
-    * table, capped so the bits dial can't explode the directory tree.
-    * 4 keeps the tree at ≤ 16 × 16 = 256 dirs for every registered
-    * geometry — measured at sf0.1: the 64-group layout (1024 dirs) still
-    * paid ~7 s of listing + per-file task launch on the probe, 16 groups
-    * brought it to 1.25 s (and the 16×14 build from 157 s to 2.9 s vs
-    * full-bucket dirs). Partition pruning keeps a 16× cut per table for
-    * small nightly batches; the full bucket stays a SORTED data column,
-    * so row-group min/max stats carry the rest of the selectivity. At
-    * corpus scales where a group dir outgrows one write task (100 TB
-    * arithmetic: 9.6G index rows / 256 ≈ 37M rows/dir), step THIS dial
-    * with log₂(corpus) like the bits dial — it is a pure layout
-    * parameter, derived from the persisted geometry, so old indexes stay
-    * readable.
+    * table, capped at 4 so the tree stays ≤ 16 × 16 = 256 dirs for every
+    * registered geometry — measured at sf0.1: the 64-group layout (1024
+    * dirs) still paid ~7 s of listing + per-file task launch on the
+    * probe, 16 groups brought it to 1.25 s (and the 16×14 build from
+    * 157 s to 2.9 s vs full-bucket dirs). A pure layout parameter derived
+    * from the persisted geometry, so old indexes stay readable.
     */
   private[graft] def indexGrpBits(bitsPerTable: Int): Int = math.min(bitsPerTable, 4)
 
   /** The persisted (bitsPerTable, numTables) of an index, if recorded.
-    * Indexes written before the geometry dial (or by an interrupted run)
-    * have none — callers treat that as the legacy 16×4 layout or rebuild.
+    * Indexes written before the geometry dial (or caught between their
+    * tree write and their `_geometry` write) have none.
     */
   def indexGeometry(s: SparkSession, path: String): Option[(Int, Int)] =
     try {
@@ -1038,21 +763,27 @@ object Similarity {
       Some((r.getInt(0), r.getInt(1)))
     } catch { case _: Throwable => None }
 
+  /** [[indexGeometry]], or an IllegalArgumentException naming the path:
+    * hashing at any guessed geometry would silently serve (or write)
+    * buckets that never collide with the resident rows.
+    */
+  private def recordedGeometry(s: SparkSession, path: String, op: String): (Int, Int) =
+    indexGeometry(s, path).getOrElse(throw new IllegalArgumentException(
+      s"no _geometry record at $path — cannot $op an unrecorded index"))
+
   /** Resident-vector count of a persisted index (either family): a
     * partition-pruned ONE-table scan (every table holds the full resident
     * set), with the result-neutral crash-window duplicates compacted by
-    * `distinct`. This is what the streaming auto-step policy
-    * ([[graft.streaming.AnnIngest.PqAutoStepIngest]]) reads ONCE per
-    * stream start to seed its in-memory counter — not per batch, so
-    * ingest cost stays O(batch).
+    * `distinct`. The streaming auto-step policy
+    * ([[graft.streaming.AnnIngest.PqAutoStepIngest]]) reads it ONCE per
+    * stream start, so ingest cost stays O(batch).
     */
   def annIndexResidentCount(s: SparkSession, path: String): Long =
     s.read.parquet(path).filter(col("tbl") === 0)
       .select(col("vec_id")).distinct().count()
 
   /** Index dirs created this JVM, removed by a shutdown hook — Bench and
-    * Verify runs no longer accumulate stale `graft_ann_index_*` trees in
-    * java.io.tmpdir (VERDICT r7 item 5).
+    * Verify runs do not accumulate stale index trees in java.io.tmpdir.
     */
   private val builtIndexPaths = scala.collection.mutable.Set[String]()
   sys.addShutdownHook {
@@ -1061,99 +792,80 @@ object Similarity {
     }
   }
 
-  /** Build the q140 fixture index for `dir`'s corpus split if no complete
-    * one exists (a `_SUCCESS` marker gates reuse — a killed run's partial
-    * write is rebuilt, a prior complete write over the same immutable SF
-    * dir is reused as-is). Returns the index path. This is what makes the
-    * registered q140 a PROBE measurement: the nightly build cost lives in
-    * the separately-registered q144 maintenance entry, not inside every
-    * timed probe (VERDICT r7 item 5).
+  private def registerIndex(path: String): Unit =
+    Similarity.synchronized { builtIndexPaths += path }
+
+  /** Whether a fixture index at `path` can be reused: complete
+    * (`_SUCCESS`), of the current schema (`payload` inside the bucket
+    * rows, the `bgrp` group layer) and recorded at `geometry`. tmpdir
+    * survives a killed JVM whose cleanup hook never ran, so a partial
+    * write, an older layout or an older geometry must be rebuilt.
     */
-  private def ensureQ140Index(s: SparkSession, dir: String,
-                              bitsPerTable: Int, numTables: Int): String = {
-    val path = annIndexPath(dir)
-    // _SUCCESS alone isn't enough: a complete index written by an OLDER
-    // schema (id-only rows, before vectors moved into the bucket files)
-    // or an older GEOMETRY (pre-dial 16×4, or a different dial setting)
-    // must be rebuilt, not probed — tmpdir survives a killed JVM whose
-    // cleanup hook never ran.
-    // bgrp: the bucket-group layout marker — a stale full-bucket
-    // partitioned tree (pre-group-layer) must also rebuild.
-    val done = java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")) &&
+  private def indexReusable(s: SparkSession, path: String, payload: String,
+                            geometry: (Int, Int)): Boolean =
+    java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")) &&
       (try {
         val fields = s.read.parquet(path).schema.fieldNames
-        fields.contains("emb") && fields.contains("bgrp")
+        fields.contains(payload) && fields.contains("bgrp")
       } catch { case _: Throwable => false }) &&
-      indexGeometry(s, path).contains((bitsPerTable, numTables))
-    if (!done) {
-      val corpus = t(s, dir, "embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-        .filter(col("vec_id") % 10 =!= 0)
-      annIndexWrite(corpus, path, bitsPerTable = bitsPerTable, numTables = numTables)
-    } else Similarity.synchronized { builtIndexPaths += path }
+      indexGeometry(s, path).contains(geometry)
+
+  /** The fixture corpus both index families are built over: every vector
+    * but the new batch (vec_id % 10 == 0, the q94 fixture convention).
+    */
+  private def indexCorpus(s: SparkSession, dir: String): DataFrame =
+    vectors(s, dir).filter(col("vec_id") % 10 =!= 0)
+
+  /** Build the q140 fixture index for `dir`'s corpus split unless a
+    * reusable one exists ([[indexReusable]]). Returns the index path.
+    * This keeps q140 a PROBE measurement: the build cost lives in the
+    * separately-registered q144 maintenance entry.
+    */
+  private def ensureQ140Index(s: SparkSession, dir: String): String = {
+    val path = annIndexPath(dir)
+    if (indexReusable(s, path, "emb", q140Geometry)) registerIndex(path)
+    else annIndexWrite(indexCorpus(s, dir), path,
+      bitsPerTable = q140Geometry._1, numTables = q140Geometry._2)
     path
   }
 
-  /** Probe a persisted index with a new batch: hash ONLY the batch
-    * (16 sign-bit signatures per probe vector), broadcast those bucket
-    * keys against the index scan (the corpus side streams — no shuffle,
-    * no re-hash; with partition pruning it doesn't even read untouched
-    * buckets), score in place, and keep the per-probe top-5 — the same
-    * deterministic tail as q56, so the result is bit-reproducible and
-    * DuckDB-checkable.
-    *
-    * Scoring reads the neighbor vector FROM the index row itself (see
-    * [[annIndexWrite]]) and the query vector from a broadcast of the
-    * batch — small by definition; it's the nightly increment. So the
-    * whole probe is: pruned index scan → two broadcast hash joins → dot →
-    * pair dedup on the 24-byte scored tuple → per-query top-5. No corpus
-    * join, no candidate-frame broadcast, no driver-side collect anywhere
-    * — the first sf1 run of the id-only layout died at exactly that spot
-    * (a 1.8 GiB candidate broadcast exceeding maxResultSize). The dot is
-    * computed before the dedup shuffle on purpose: a pair surfacing in
-    * k ≤ 16 tables costs k redundant 128-mult dots but ships 24-byte
-    * rows, where deduping first would ship the 1 KB vector per candidate.
+  /** Candidate pairs of a probe batch against a persisted index: hash
+    * ONLY the batch with the geometry the index records, broadcast those
+    * bucket keys against the index scan — joining on `bgrp` too lets
+    * dynamic partition pruning skip group dirs the batch never hashes
+    * into — and keep the index row's `payload` as `as`.
     */
-  def annIndexProbe(s: SparkSession, indexPath: String,
-                    newVecs: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    val index = s.read.parquet(indexPath)
-    // Hash the batch with the geometry THE INDEX RECORDS — not a
-    // compile-time constant (VERDICT r8 item 4): a probe hashed at a
-    // different (bits, tables) would silently miss every resident bucket.
-    // Indexes without a geometry record are the legacy 16×4 layout.
-    val (bitsPerTable, numTables) = indexGeometry(s, indexPath)
-      .getOrElse((graft.functions.Hyperplanes.bits, graft.functions.Hyperplanes.tables))
-    val probeSigs = newVecs
-      .select(col("vec_id"), posexplode(
-        expr(graft.functions.Hyperplanes.sparkBucketsExpr("emb", bitsPerTable, numTables)))
-        .as(Seq("tbl", "bucket")))
-      .select(col("vec_id"), col("tbl").cast("int").as("tbl"),
-        col("bucket").cast("int").as("bucket"))
-      // The directory key (see annIndexWrite's group layer): joining on
-      // it too lets dynamic partition pruning skip group dirs the batch
-      // never hashes into — the win for genuinely small nightly batches.
-      .withColumn("bgrp", col("bucket")
-        .bitwiseAND(lit((1 << indexGrpBits(bitsPerTable)) - 1)))
-    broadcast(probeSigs.as("q"))
-      .join(index.as("n"),
+  private def indexCandidates(s: SparkSession, indexPath: String, newVecs: DataFrame,
+                              payload: String, as: String): DataFrame = {
+    val (bits, tables) = recordedGeometry(s, indexPath, "probe")
+    broadcast(bucketRows(newVecs, bits, tables).as("q"))
+      .join(s.read.parquet(indexPath).as("n"),
         col("q.tbl") === col("n.tbl") && col("q.bgrp") === col("n.bgrp") &&
           col("q.bucket") === col("n.bucket") &&
           col("q.vec_id") =!= col("n.vec_id"))
       .select(col("q.vec_id").as("query_id"), col("n.vec_id").as("neighbor_id"),
-        col("n.emb").as("n_emb"))
+        col(s"n.$payload").as(as))
+  }
+
+  /** Probe a persisted float index with a new batch: [[indexCandidates]]
+    * → score in place → per-probe top-5, the q56 tail, so the result is
+    * bit-reproducible and DuckDB-checkable. The neighbor vector comes
+    * from the index row and the query vector from a broadcast of the
+    * batch: no corpus join, no candidate-frame broadcast, no driver-side
+    * collect. The dot is computed BEFORE the dedup shuffle on purpose: a
+    * pair surfacing in k ≤ 16 tables costs k redundant dots but ships
+    * 24-byte rows, where deduping first would ship the 1 KB vector per
+    * candidate. Throws on an index with no `_geometry` record.
+    */
+  def annIndexProbe(s: SparkSession, indexPath: String,
+                    newVecs: DataFrame): DataFrame = {
+    graft.functions.VectorExpressions.register(s)
+    topK(indexCandidates(s, indexPath, newVecs, "emb", "n_emb")
       .join(broadcast(newVecs.select(col("vec_id"), col("emb").as("q_emb"))),
         col("query_id") === col("vec_id"))
       .select(col("query_id"), col("neighbor_id"),
         expr("graft_dot(q_emb, n_emb)").as("cosine"))
-      .distinct()
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id"),
-        round(col("cosine"), 6).as("cos_r"))
-      .orderBy(col("query_id"), col("rank"))
+      .distinct())
   }
 
   /** Deterministic per-corpus index location (tmpdir-scoped so Verify and
@@ -1162,105 +874,70 @@ object Similarity {
   def annIndexPath(dir: String): String =
     s"${sys.props("java.io.tmpdir")}/graft_ann_index_${Integer.toHexString(dir.hashCode)}"
 
-  /** Registered end-to-end posture: split embeddings into an existing
-    * corpus (vec_id % 10 != 0) and a new batch (vec_id % 10 == 0, the
-    * q94 fixture convention), and probe the PERSISTED corpus index with
-    * the batch. The DuckDB oracle recomputes ALL signatures from scratch
-    * — a hash match therefore proves persisted-index candidates ==
-    * recompute-from-scratch candidates, which is the whole correctness
-    * claim of an incremental index.
-    *
-    * The index is built lazily ONCE per SF dir ([[ensureQ140Index]]) and
-    * the timed query measures the PROBE — batch hash + DPP bucket reads +
-    * broadcast scoring — which is the nightly cost the design exists to
-    * minimize. Round 7 timed 3 full index rebuilds inside every bench
-    * measurement, misrepresenting that cost ~10×; the build is now its
-    * own registered maintenance entry (q144) so both sides of the
-    * amortization stay measured (VERDICT r7 item 5).
-    */
   /** Registered index geometry: HELD-L 16 tables × 14 bits — the
-    * b ≈ log₂(n) posture of the 100×-ready decade (VERDICT r8 item 4:
-    * the hard-coded 16×4 layout was the densest geometry in the repo and
-    * the reason q140 sat in the dying family at sf10). The probe itself
-    * reads the geometry from the index's `_geometry` record, so this
-    * constant exists only on the BUILD side.
+    * b ≈ log₂(n) posture of the 100×-ready decade. The probe reads the
+    * geometry from the index's `_geometry` record, so this constant
+    * exists only on the BUILD side.
     */
   private val q140Geometry: (Int, Int) = (14, 16)
 
+  /** Registered end-to-end posture: probe the PERSISTED corpus index
+    * ([[indexCorpus]], built lazily once per SF dir) with the new batch.
+    * The DuckDB oracle recomputes ALL signatures from scratch — a hash
+    * match proves persisted-index candidates == recompute-from-scratch
+    * candidates, the whole correctness claim of an incremental index.
+    */
   def q140AnnIndexProbe(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    val emb = t(s, dir, "embeddings")
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-    val path = ensureQ140Index(s, dir, q140Geometry._1, q140Geometry._2)
-    annIndexProbe(s, path, emb.filter(col("vec_id") % 10 === 0))
+    val emb = vectors(s, dir)
+    annIndexProbe(s, ensureQ140Index(s, dir), emb.filter(col("vec_id") % 10 === 0))
   }
 
-  /** The MAINTENANCE side of q140, registered separately so the nightly
-    * build/append cost is measured on its own instead of inside every
-    * probe: rebuild the corpus index from scratch (the worst-case
-    * maintenance op — a real nightly pays only an append of the new
-    * batch, proven equivalent by DedupSpec's append-vs-rebuild test) and
-    * return per-table occupancy stats. The stats double as the oracle
-    * surface: DuckDB recomputes the same signatures and must agree on
-    * every table's bucket count and row count — a full structural check
-    * of the persisted index content without shipping parquet bytes to
-    * the oracle. Marked in `SparkEntry.auditBaselines` so scale tooling
-    * knows this entry is intentionally corpus-scale work.
+  /** Per-table occupancy of an index tree — (tbl, n_buckets, n_rows,
+    * extra…) — the build entries' oracle surface: a structural check of
+    * the persisted content without shipping parquet to the oracle.
+    */
+  private def indexOccupancy(s: SparkSession, path: String, extra: Column*): DataFrame =
+    s.read.parquet(path)
+      .groupBy(col("tbl"))
+      .agg(countDistinct(col("bucket")).as("n_buckets"), (count(lit(1)).as("n_rows") +: extra): _*)
+      .orderBy(col("tbl"))
+
+  /** DuckDB replica of [[indexOccupancy]] over [[indexCorpus]]: the
+    * signatures recomputed at `geometry`, `extra` appended to the select.
+    */
+  private def occupancySql(geometry: (Int, Int), extra: String = ""): String =
+    s"""sig AS (SELECT vec_id, ${H.duckBucketsSql("embedding", geometry._1, geometry._2)} AS sig FROM embeddings WHERE vec_id % 10 <> 0)
+       SELECT CAST(t.i - 1 AS INT) AS tbl,
+              COUNT(DISTINCT sig[t.i]) AS n_buckets,
+              COUNT(*) AS n_rows$extra
+       FROM sig, generate_series(1, ${geometry._2}) AS t(i)
+       GROUP BY 1 ORDER BY 1"""
+
+  /** The MAINTENANCE side of q140, registered separately so the build
+    * cost is measured on its own: rebuild the corpus index from scratch
+    * (the worst case — a real nightly pays only an append, proven
+    * equivalent by DedupSpec's append-vs-rebuild test) and return
+    * [[indexOccupancy]]. Marked in `SparkEntry.auditBaselines` as
+    * intentionally corpus-scale work.
     */
   def q144AnnIndexBuild(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    val corpus = t(s, dir, "embeddings")
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-      .filter(col("vec_id") % 10 =!= 0)
     val path = annIndexPath(dir)
-    annIndexWrite(corpus, path, bitsPerTable = q140Geometry._1, numTables = q140Geometry._2)
-    s.read.parquet(path)
-      .groupBy(col("tbl"))
-      .agg(countDistinct(col("bucket")).as("n_buckets"), count(lit(1)).as("n_rows"))
-      .orderBy(col("tbl"))
+    annIndexWrite(indexCorpus(s, dir), path,
+      bitsPerTable = q140Geometry._1, numTables = q140Geometry._2)
+    indexOccupancy(s, path)
   }
 
-  def q144Sql: String = {
-    val sig = graft.functions.Hyperplanes.duckBucketsSql(
-      "embedding", q140Geometry._1, q140Geometry._2)
-    val nt = q140Geometry._2
-    s"""WITH sig AS (SELECT vec_id, $sig AS sig FROM embeddings WHERE vec_id % 10 <> 0)
-       SELECT CAST(t.i - 1 AS INT) AS tbl,
-              COUNT(DISTINCT sig[t.i]) AS n_buckets,
-              COUNT(*) AS n_rows
-       FROM sig, generate_series(1, $nt) AS t(i)
-       GROUP BY 1 ORDER BY 1"""
-  }
+  def q144Sql: String = s"WITH ${occupancySql(q140Geometry)}"
 
   /** DuckDB replica of q140 — NO index anywhere: both sides' signatures
     * recomputed from the shared plane literals, candidates from the same
     * ≥1-table collision rule restricted to new×corpus, identical scoring
-    * fold and tie-break. Equality with the Spark side is the
-    * index-consistency proof.
+    * fold and tie-break.
     */
-  def q140Sql: String = {
-    val sig = graft.functions.Hyperplanes.duckBucketsSql(
-      "embedding", q140Geometry._1, q140Geometry._2)
-    val nt = q140Geometry._2
-    s"""WITH sig AS (SELECT vec_id, $sig AS sig FROM embeddings),
-       cands AS (
-         SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
-         FROM sig q JOIN sig n ON q.vec_id <> n.vec_id
-         WHERE q.vec_id % 10 = 0 AND n.vec_id % 10 <> 0
-           AND list_contains([q.sig[i] = n.sig[i] FOR i IN generate_series(1, $nt)], true)),
-       scored AS (
-         SELECT c.query_id, c.neighbor_id,
-                list_reduce([CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)
-                             FOR i IN generate_series(1, len(a.embedding))],
-                            (acc, v) -> acc + v) AS cosine
-         FROM cands c JOIN embeddings a ON c.query_id = a.vec_id
-                      JOIN embeddings b ON c.neighbor_id = b.vec_id)
-       SELECT query_id, rank, neighbor_id, ROUND(cosine, 6) AS cos_r FROM (
-         SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                        ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
-         FROM scored)
-       WHERE rank <= 5 ORDER BY query_id, rank"""
-  }
+  def q140Sql: String =
+    lshTopKSql("q.vec_id % 10 = 0 AND n.vec_id % 10 <> 0", multiProbe = false, None, q140Geometry)
 
   /** The PQ model of q154, exposed for PqSpec: `(cents, codes)` where
     * cents = (m, cell, centroid array<double>) — the per-subspace
@@ -1271,46 +948,45 @@ object Similarity {
     */
   private[graft] def pqModel(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     graft.functions.VectorExpressions.register(s)
-    val emb = t(s, dir, "embeddings")
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-    pqModelOn(emb)
+    pqModelOn(vectors(s, dir))
   }
 
   /** [[pqModel]] over an arbitrary (vec_id, emb array<double>) frame —
     * q154/q155 train on raw embeddings, q156 on coarse-cell residuals.
     */
   private[graft] def pqModelOn(emb: DataFrame,
-                               pqBits: Int = graft.functions.Hyperplanes.pqBits): (DataFrame, DataFrame) = {
-    val H = graft.functions.Hyperplanes
-    val M = H.pqM
-    val subs = pqSubsOf(emb)
-    // Seed partition + fixed-point centroids (the q58 integer-mean trick,
+                               pqBits: Int = H.pqBits): (DataFrame, DataFrame) = {
+    // Seed partition + fixed-point centroids (the IVF integer-mean trick,
     // per (subspace, cell) instead of per cell). Pinned (≤ M·2^pqBits
-    // tiny rows, r13): the codebook is consumed at least twice (encode
+    // tiny rows): the codebook is consumed at least twice (encode
     // broadcast + the caller's LUT build), and every un-pinned reference
-    // re-ran the corpus-scale training aggregation (guide §2.4).
-    val seeded = subs.withColumn("cell0", expr(H.sparkSubCellExpr("sub", "m", pqBits)))
-    val cents = StorageHandle.sessionDefault().pin(seeded
-      .select(col("m"), col("cell0"), posexplode(
-        expr("transform(sub, x -> CAST(ROUND(x * 10000000) AS BIGINT))")).as(Seq("dim", "fx")))
-      .groupBy(col("m"), col("cell0"), col("dim"))
-      .agg(sum(col("fx")).as("sfx"), count(lit(1)).as("n"))
-      .groupBy(col("m"), col("cell0"))
-      .agg(expr("transform(array_sort(collect_list(struct(dim, sfx, n))), e -> CAST(e.sfx AS DOUBLE) / e.n / 10000000)").as("centroid"))
-      .select(col("m"), col("cell0").as("cell"), col("centroid")))
+    // re-ran the corpus-scale training aggregation.
+    val seeded = pqSubsOf(emb).withColumn("cell0", expr(H.sparkSubCellExpr("sub", "m", pqBits)))
+    val cents = StorageHandle.sessionDefault().pin(
+      fxCentroids(fxSums(seeded, Seq("m", "cell0"), "sub"), Seq("m", "cell0"))
+        .select(col("m"), col("cell0").as("cell"), col("centroid")))
     (cents, pqEncode(emb, cents))
   }
 
   /** Subvectors of an (vec_id, emb array<double>) frame: one row per
     * (vector, subspace), sub = the pqSubDim-dim slice.
     */
-  private[graft] def pqSubsOf(emb: DataFrame): DataFrame = {
-    val H = graft.functions.Hyperplanes
-    val M = H.pqM
-    emb.select(col("vec_id"),
-      posexplode(expr(s"transform(sequence(0, ${M - 1}), mm -> slice(emb, mm * ${H.pqSubDim} + 1, ${H.pqSubDim}))"))
-        .as(Seq("m", "sub")))
-  }
+  private[graft] def pqSubsOf(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), posexplode(expr(subvectorsExpr)).as(Seq("m", "sub")))
+
+  private def subvectorsExpr: String =
+    s"transform(sequence(0, ${H.pqM - 1}), mm -> slice(emb, mm * ${H.pqSubDim} + 1, ${H.pqSubDim}))"
+
+  /** The ADC score of a candidate: M lookups + adds of its `codes` in the
+    * probe's dense M×K `lut`, m ascending.
+    */
+  private def adcExpr(K: Int): String =
+    s"aggregate(sequence(0, ${H.pqM - 1}), CAST(0 AS DOUBLE), (acc, mm) -> acc + lut[mm * $K + codes[mm]])"
+
+  /** DuckDB replica of [[adcExpr]] over relations `l` (lut) and `c` (codes). */
+  private def adcSql(K: Int): String =
+    s"""list_reduce([l.lut[mm * $K + c.codes[mm + 1] + 1]
+                             FOR mm IN generate_series(0, ${H.pqM - 1})], (acc, v) -> acc + v)"""
 
   /** One-row broadcast form of a flat PQ codebook: `cents_arr[m + 1]` =
     * subspace m's candidate list array<struct<cell int, cent
@@ -1347,12 +1023,10 @@ object Similarity {
     * corpus rows carry their IVF cell beside the codes) can avoid a
     * second encode pass + re-join.
     */
-  private def pqEncodeExprStr: String = {
-    val H = graft.functions.Hyperplanes
+  private def pqEncodeExprStr: String =
     s"""transform(sequence(0, ${H.pqM - 1}), mm ->
        graft_argmax_dot(slice(emb, mm * ${H.pqSubDim} + 1, ${H.pqSubDim}),
                         element_at(cents_arr, mm + 1)))"""
-  }
 
   /** Per-probe ADC lookup tables for the PQ codebook `cents`:
     * LUT[m·K + k] = dot(q_sub_m, c_{m,k}) — one 128-double array per
@@ -1360,9 +1034,8 @@ object Similarity {
     * directly.
     */
   private def pqLutDf(emb: DataFrame, cents: DataFrame,
-                      pqBits: Int = graft.functions.Hyperplanes.pqBits,
+                      pqBits: Int = H.pqBits,
                       queryFilter: Column = col("vec_id") < 20): DataFrame = {
-    val H = graft.functions.Hyperplanes
     val M = H.pqM
     val K = 1 << pqBits
     // The codebook is SPARSE: a (m, cell) seed pattern no vector hits has
@@ -1383,8 +1056,7 @@ object Similarity {
     val denseCents = grid.join(cents, Seq("m", "cell"), "left")
     emb.filter(queryFilter)
       .select(col("vec_id").as("query_id"),
-        posexplode(expr(s"transform(sequence(0, ${M - 1}), mm -> slice(emb, mm * ${H.pqSubDim} + 1, ${H.pqSubDim}))"))
-          .as(Seq("m", "qsub")))
+        posexplode(expr(subvectorsExpr)).as(Seq("m", "qsub")))
       .join(broadcast(denseCents), Seq("m"))
       .select(col("query_id"), (col("m") * K + col("cell")).cast("int").as("slot"),
         when(col("centroid").isNull, lit(0.0d))
@@ -1411,22 +1083,16 @@ object Similarity {
     */
   private def pqAdcRerankOn(queryEmb: DataFrame, corpusEmb: DataFrame,
                             adc: DataFrame): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
     val short = adc
       .withColumn("srn", row_number().over(
-        W.partitionBy(col("query_id")).orderBy(col("adc").desc, col("neighbor_id").asc)))
+        Window.partitionBy(col("query_id")).orderBy(col("adc").desc, col("neighbor_id").asc)))
       .filter(col("srn") <= 32)
-    short
+    topK(short
       .join(corpusEmb.as("ne"), col("neighbor_id") === col("ne.vec_id"))
       .join(broadcast(queryEmb.as("qe")), col("query_id") === col("qe.vec_id"))
       .select(col("query_id"), col("neighbor_id"), col("adc"),
-        expr("graft_dot(qe.emb, ne.emb)").as("cosine"))
-      .withColumn("rank", row_number().over(
-        W.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id"),
-        round(col("cosine"), 6).as("cos_r"), round(col("adc"), 6).as("adc_r"))
-      .orderBy(col("query_id"), col("rank"))
+        expr("graft_dot(qe.emb, ne.emb)").as("cosine")),
+      out = Seq(round(col("cosine"), 6).as("cos_r"), round(col("adc"), 6).as("adc_r")))
   }
 
   /** q155 — IVF-PQ: q154's PQ-ADC scan behind an IVF router, and the
@@ -1450,16 +1116,10 @@ object Similarity {
     */
   def q155AnnIvfPq(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    val H = graft.functions.Hyperplanes
-    val M = H.pqM
-    val K = 1 << H.pqBits
-    val nProbe = 4
-    // r13: routing is the per-row expression form (graft_argmax_dot /
-    // graft_top_dots — ivfRanked's rn = 1 / rn <= nProbe exactly), and
-    // the corpus row computes its cell in the SAME projection as its
-    // codes (both are per-row functions of emb against one-row
-    // broadcast models), so the n·2^cellBits ranking window AND the
-    // codes⋈assignment join disappear (guide §2.4).
+    // The corpus row computes its cell in the SAME projection as its
+    // codes (both are per-row functions of emb against one-row broadcast
+    // models), so neither a ranking window nor a codes⋈assignment join
+    // is planned.
     val (emb, ivfCents, _) = ivfModel(s, dir)
     val ivfRow = ivfCentsRow(ivfCents)
     val (cents, _) = pqModelOn(emb)
@@ -1468,22 +1128,22 @@ object Similarity {
       .crossJoin(broadcast(ivfRow))
       .select(col("vec_id"), expr(pqEncodeExprStr).as("codes"),
         expr("graft_argmax_dot(emb, cands)").as("cell"))
-    val probeCells = emb.filter(col("vec_id") < 20)
-      .crossJoin(broadcast(ivfRow))
-      .select(col("vec_id").as("query_id"),
-        explode(expr(s"graft_top_dots(emb, cands, $nProbe)")).as("p"))
-      .select(col("query_id"), col("p.cell").as("cell"))
-    val lut = pqLutDf(emb, cents)
-    // Routed ADC scan: the broadcast probe-cell list prunes the corpus
-    // to ~nProbe/k before any scoring; a (query, vector) pair appears at
-    // most once (one cell per vector, distinct cells per probe).
-    val adc = corpus.join(broadcast(probeCells), Seq("cell"))
+    routedAdcRerank(emb, corpus, ivfProbeCells(emb, ivfRow), pqLutDf(emb, cents),
+      adcExpr(1 << H.pqBits))
+  }
+
+  /** The routed ADC scan of q155/q156: the broadcast probe-cell list
+    * prunes the (vec_id, cell, codes) corpus to ~4/16 before any scoring
+    * (a pair appears at most once: one cell per vector, distinct cells
+    * per probe), the broadcast LUTs score it as `adc`, then the shared
+    * shortlist + exact rerank.
+    */
+  private def routedAdcRerank(emb: DataFrame, corpus: DataFrame, probeCells: DataFrame,
+                              lut: DataFrame, adc: String): DataFrame =
+    pqAdcRerank(emb, corpus.join(broadcast(probeCells), Seq("cell"))
       .filter(col("query_id") =!= col("vec_id"))
       .join(broadcast(lut), Seq("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr(s"aggregate(sequence(0, ${M - 1}), CAST(0 AS DOUBLE), (acc, mm) -> acc + lut[mm * $K + codes[mm]])").as("adc"))
-    pqAdcRerank(emb, adc)
-  }
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), expr(adc).as("adc")))
 
   /** q156 — residual IVF-PQ (the FAISS-IVFADC refinement of q155): the
     * PQ codebook is trained on the coarse-cell RESIDUALS x − c(cell)
@@ -1509,20 +1169,11 @@ object Similarity {
     */
   def q156AnnIvfPqResidual(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    val H = graft.functions.Hyperplanes
-    val M = H.pqM
-    val K = 1 << H.pqBits
-    val nProbe = 4
-    // r13: assignment, residual subtraction, and probe routing are
-    // per-row expressions against the one-row broadcast IVF codebook
-    // (graft_argmax_dot / graft_top_dots — rn = 1 / rn <= nProbe with
-    // the identical tie-break), so the n·2^cellBits ranking window, the
-    // two joins that attached (cell, centroid) to the corpus, and the
-    // separate ⟨q, c(cell)⟩ relation all collapse: the residual is
-    // computed in the assignment's own projection (centroid looked up
-    // from the broadcast candidate list — same doubles, so the
-    // subtraction is bit-identical) and qc rides the probe list (the
-    // same graft_dot fold on the same inputs).
+    // Assignment, residual subtraction and routing are per-row
+    // expressions against the one-row broadcast IVF codebook: the
+    // residual is computed in the assignment's own projection (centroid
+    // looked up from the broadcast candidate list — same doubles, so the
+    // subtraction is bit-identical) and qc rides the probe list.
     val (emb, ivfCents, _) = ivfModel(s, dir)
     val ivfRow = ivfCentsRow(ivfCents)
     val resid = emb.crossJoin(broadcast(ivfRow))
@@ -1536,18 +1187,8 @@ object Similarity {
     val corpus = resid.select(col("vec_id"), col("cell"), col("remb").as("emb"))
       .crossJoin(broadcast(pqCentsRow(rCents)))
       .select(col("vec_id"), col("cell"), expr(pqEncodeExprStr).as("codes"))
-    val probeCells = emb.filter(col("vec_id") < 20)
-      .crossJoin(broadcast(ivfRow))
-      .select(col("vec_id").as("query_id"),
-        explode(expr(s"graft_top_dots(emb, cands, $nProbe)")).as("p"))
-      .select(col("query_id"), col("p.cell").as("cell"), col("p.d").as("qc"))
-    val lut = pqLutDf(emb, rCents)
-    val adc = corpus.join(broadcast(probeCells), Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .join(broadcast(lut), Seq("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr(s"qc + aggregate(sequence(0, ${M - 1}), CAST(0 AS DOUBLE), (acc, mm) -> acc + lut[mm * $K + codes[mm]])").as("adc"))
-    pqAdcRerank(emb, adc)
+    routedAdcRerank(emb, corpus, ivfProbeCells(emb, ivfRow, withQc = true),
+      pqLutDf(emb, rCents), s"qc + ${adcExpr(1 << H.pqBits)}")
   }
 
   /** PQ CTE prefix shared by [[pqServeSql]]/q155Sql: subvectors → seed cells →
@@ -1561,9 +1202,8 @@ object Similarity {
     * queries against the residual codebook).
     */
   private def pqCteSql(from: String, vec: String,
-                       pqBits: Int = graft.functions.Hyperplanes.pqBits,
+                       pqBits: Int = H.pqBits,
                        queryPred: String = "q.vec_id < 20"): String = {
-    val H = graft.functions.Hyperplanes
     val M = H.pqM
     val sd = H.pqSubDim
     val cell0 = H.duckSubCellSql("sub", "m", pqBits)
@@ -1614,54 +1254,28 @@ object Similarity {
            FROM adc) WHERE srn <= 32),
        rer AS (
          SELECT s.query_id, s.neighbor_id, s.adc,
-                list_reduce([CAST(qe.embedding[i] AS DOUBLE) * CAST(ne.embedding[i] AS DOUBLE)
-                             FOR i IN generate_series(1, len(qe.embedding))], (acc, v) -> acc + v) AS cosine
+                ${dotSql("qe", "ne")} AS cosine
          FROM short s JOIN embeddings qe ON s.query_id = qe.vec_id
                       JOIN embeddings ne ON s.neighbor_id = ne.vec_id)
-       SELECT query_id, rank, neighbor_id, ROUND(cosine, 6) AS cos_r, ROUND(adc, 6) AS adc_r FROM (
-         SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                        ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
-         FROM rer)
-       WHERE rank <= 5 ORDER BY query_id, rank"""
+       ${topKSql("rer", "ROUND(cosine, 6) AS cos_r, ROUND(adc, 6) AS adc_r")}"""
 
   /** DuckDB replica of q155: the q58 IVF CTEs (prefixed ivf_ to avoid
     * colliding with the PQ names) route each probe to its 4 nearest
     * cells; the ADC fold is q154's, restricted to routed (query, cell)
     * matches.
     */
-  def q155Sql: String = {
-    val H = graft.functions.Hyperplanes
-    val M = H.pqM
-    val K = 1 << H.pqBits
-    val ivfCell0 = H.duckCellSqlN("embedding", 4)
+  def q155Sql: String =
     s"""WITH $pqCteSql,
-       ivf_seeded AS (SELECT vec_id, embedding, $ivfCell0 AS cell0 FROM embeddings),
-       ivf_comps AS (SELECT cell0, i - 1 AS dim,
-                            CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 10000000) AS BIGINT) AS fx
-                     FROM ivf_seeded, UNNEST(generate_series(1, len(embedding))) AS t(i)),
-       ivf_sums AS (SELECT cell0, dim, SUM(fx) AS sfx, COUNT(*) AS n FROM ivf_comps GROUP BY 1, 2),
-       ivf_cent AS (SELECT cell0 AS cell, list(CAST(sfx AS DOUBLE) / n / 10000000 ORDER BY dim) AS centroid
-                    FROM ivf_sums GROUP BY cell0),
-       ivf_ranked AS (
-         SELECT e.vec_id, c.cell,
-                ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                  list_reduce([CAST(e.embedding[i] AS DOUBLE) * c.centroid[i]
-                               FOR i IN generate_series(1, len(e.embedding))],
-                              (acc, v) -> acc + v) DESC, c.cell ASC) AS rn
-         FROM embeddings e CROSS JOIN ivf_cent c),
-       ivf_assigned AS (SELECT vec_id, cell FROM ivf_ranked WHERE rn = 1),
-       probecells AS (SELECT vec_id AS query_id, cell FROM ivf_ranked WHERE rn <= 4 AND vec_id < 20),
+       ${ivfRouteSql("ivf_")},
        adc AS (
          SELECT p.query_id, c.vec_id AS neighbor_id,
-                list_reduce([l.lut[mm * $K + c.codes[mm + 1] + 1]
-                             FOR mm IN generate_series(0, ${M - 1})], (acc, v) -> acc + v) AS adc
+                ${adcSql(1 << H.pqBits)} AS adc
          FROM probecells p
               JOIN ivf_assigned a USING (cell)
               JOIN codes c ON a.vec_id = c.vec_id
               JOIN lut l ON l.query_id = p.query_id
          WHERE c.vec_id <> p.query_id),
        $pqTailSql"""
-  }
 
   /** Train the hierarchical PQ model on a corpus: the pqBits codebook
     * (exact fixed-point means), a grouping of its cells into
@@ -1683,9 +1297,7 @@ object Similarity {
   private[graft] def pqHierModelOn(emb: DataFrame, pqBits: Int,
                                    groupSize: Int, refine: Boolean)
       : (DataFrame, DataFrame, DataFrame) = {
-    val H = graft.functions.Hyperplanes
-    val subs = pqSubsOf(emb)
-    val seeded = subs.withColumn("cell0", expr(H.sparkSubCellExpr("sub", "m", pqBits)))
+    val seeded = pqSubsOf(emb).withColumn("cell0", expr(H.sparkSubCellExpr("sub", "m", pqBits)))
     // NOT pinned (r13 measured): sums feeds cents once and supCentsOf
     // once or (refined) twice, but in the QUERY encode paths every
     // consumer sits under a BroadcastExchange, and those broadcast jobs
@@ -1693,20 +1305,13 @@ object Similarity {
     // pinning serialized them behind one cache-materialization barrier
     // and cost q160/q161/q163/q165 a consistent +1-2 s each at sf0.1
     // (probes/r13opt).
-    val sums = seeded
-      .select(col("m"), col("cell0"), posexplode(
-        expr("transform(sub, x -> CAST(ROUND(x * 10000000) AS BIGINT))")).as(Seq("dim", "fx")))
-      .groupBy(col("m"), col("cell0"), col("dim"))
-      .agg(sum(col("fx")).as("sfx"), count(lit(1)).as("n"))
-    val cents = sums.groupBy(col("m"), col("cell0"))
-      .agg(expr("transform(array_sort(collect_list(struct(dim, sfx, n))), e -> CAST(e.sfx AS DOUBLE) / e.n / 10000000)").as("centroid"))
+    val sums = fxSums(seeded, Seq("m", "cell0"), "sub")
+    val cents = fxCentroids(sums, Seq("m", "cell0"))
       .select(col("m"), col("cell0").as("cell"), col("centroid"))
-    def supCentsOf(groups: DataFrame): DataFrame = sums
+    def supCentsOf(groups: DataFrame): DataFrame = fxCentroids(sums
       .join(groups.withColumnRenamed("cell", "cell0"), Seq("m", "cell0"))
       .groupBy(col("m"), col("g"), col("dim"))
-      .agg(sum(col("sfx")).as("sfx"), sum(col("n")).as("n"))
-      .groupBy(col("m"), col("g"))
-      .agg(expr("transform(array_sort(collect_list(struct(dim, sfx, n))), e -> CAST(e.sfx AS DOUBLE) / e.n / 10000000)").as("scentroid"))
+      .agg(sum(col("sfx")).as("sfx"), sum(col("n")).as("n")), Seq("m", "g"), "scentroid")
     val seedGroups = cents.select(col("m"), col("cell"),
       expr(s"cell div $groupSize").as("g"))
     val groups =
@@ -1784,13 +1389,11 @@ object Similarity {
     * the index write computes codes in the SAME projection as its
     * bucket explode instead of joining a second encode pass by vec_id.
     */
-  private[graft] def pqEncodeHierExprStr(beam: Int): String = {
-    val H = graft.functions.Hyperplanes
+  private[graft] def pqEncodeHierExprStr(beam: Int): String =
     s"""transform(sequence(0, ${H.pqM - 1}), mm ->
        graft_pq_hier_code(slice(emb, mm * ${H.pqSubDim} + 1, ${H.pqSubDim}),
                           element_at(sup_arr, mm + 1),
                           element_at(cells_arr, mm + 1), $beam))"""
-  }
 
   /** The hierarchical-encode CTE block, shared by q160/q161/q165's
     * oracles and the PQ index oracles (q163/q164, which encode with the
@@ -1805,7 +1408,7 @@ object Similarity {
     */
   private def pqHierCodesCtes(beam: Int, groupSize: Int,
                               refine: Boolean): String = {
-    val sd = graft.functions.Hyperplanes.pqSubDim
+    val sd = H.pqSubDim
     val grpRel = if (refine) "groups1" else "groups0"
     val supRel = if (refine) "supcent1" else "supcent0"
     val refineCtes = if (!refine) "" else s"""
@@ -1879,10 +1482,7 @@ object Similarity {
   private[graft] def pqServe(s: SparkSession, dir: String, bits: Int,
                              hier: Option[(Int, Int, Boolean)]): DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    val M = graft.functions.Hyperplanes.pqM
-    val K = 1 << bits
-    val emb = t(s, dir, "embeddings")
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
+    val emb = vectors(s, dir)
     val (cents, codes) = hier match {
       case None => pqModelOn(emb, pqBits = bits)
       case Some((beam, groupSize, refine)) =>
@@ -1894,8 +1494,7 @@ object Similarity {
     // broadcast LUTs — the corpus side streams its codes once.
     val adc = codes.crossJoin(broadcast(lut))
       .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr(s"aggregate(sequence(0, ${M - 1}), CAST(0 AS DOUBLE), (acc, mm) -> acc + lut[mm * $K + codes[mm]])").as("adc"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), expr(adcExpr(1 << bits)).as("adc"))
     pqAdcRerank(emb, adc)
   }
 
@@ -1907,16 +1506,13 @@ object Similarity {
     * m-ascending ADC fold, 32-deep shortlist and exact top-5 rerank.
     */
   private def pqServeSql(bits: Int, hier: Option[(Int, Int, Boolean)]): String = {
-    val M = graft.functions.Hyperplanes.pqM
-    val K = 1 << bits
     val (hierCtes, codes) = hier.fold(("", "codes")) { case (beam, groupSize, refine) =>
       (s"\n       ${pqHierCodesCtes(beam, groupSize, refine)},", "hcodes")
     }
     s"""WITH ${pqCteSql("embeddings", "embedding", bits)},$hierCtes
        adc AS (
          SELECT l.query_id, c.vec_id AS neighbor_id,
-                list_reduce([l.lut[mm * $K + c.codes[mm + 1] + 1]
-                             FOR mm IN generate_series(0, ${M - 1})], (acc, v) -> acc + v) AS adc
+                ${adcSql(1 << bits)} AS adc
          FROM lut l CROSS JOIN $codes c WHERE l.query_id <> c.vec_id),
        $pqTailSql"""
   }
@@ -1943,27 +1539,8 @@ object Similarity {
     * residuals, a per-(probe, cell) query·centroid dot, and the
     * decomposed ADC qc + LUT-fold.
     */
-  def q156Sql: String = {
-    val H = graft.functions.Hyperplanes
-    val M = H.pqM
-    val K = 1 << H.pqBits
-    val ivfCell0 = H.duckCellSqlN("embedding", 4)
-    s"""WITH ivf_seeded AS (SELECT vec_id, embedding, $ivfCell0 AS cell0 FROM embeddings),
-       ivf_comps AS (SELECT cell0, i - 1 AS dim,
-                            CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 10000000) AS BIGINT) AS fx
-                     FROM ivf_seeded, UNNEST(generate_series(1, len(embedding))) AS t(i)),
-       ivf_sums AS (SELECT cell0, dim, SUM(fx) AS sfx, COUNT(*) AS n FROM ivf_comps GROUP BY 1, 2),
-       ivf_cent AS (SELECT cell0 AS cell, list(CAST(sfx AS DOUBLE) / n / 10000000 ORDER BY dim) AS centroid
-                    FROM ivf_sums GROUP BY cell0),
-       ivf_ranked AS (
-         SELECT e.vec_id, c.cell,
-                ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                  list_reduce([CAST(e.embedding[i] AS DOUBLE) * c.centroid[i]
-                               FOR i IN generate_series(1, len(e.embedding))],
-                              (acc, v) -> acc + v) DESC, c.cell ASC) AS rn
-         FROM embeddings e CROSS JOIN ivf_cent c),
-       ivf_assigned AS (SELECT vec_id, cell FROM ivf_ranked WHERE rn = 1),
-       probecells AS (SELECT vec_id AS query_id, cell FROM ivf_ranked WHERE rn <= 4 AND vec_id < 20),
+  def q156Sql: String =
+    s"""WITH ${ivfRouteSql("ivf_")},
        resid AS (
          SELECT e.vec_id,
                 [CAST(e.embedding[i] AS DOUBLE) - c.centroid[i]
@@ -1979,8 +1556,7 @@ object Similarity {
          FROM embeddings e CROSS JOIN ivf_cent c WHERE e.vec_id < 20),
        adc AS (
          SELECT p.query_id, c.vec_id AS neighbor_id,
-                q.qc + list_reduce([l.lut[mm * $K + c.codes[mm + 1] + 1]
-                                    FOR mm IN generate_series(0, ${M - 1})], (acc, v) -> acc + v) AS adc
+                q.qc + ${adcSql(1 << H.pqBits)} AS adc
          FROM probecells p
               JOIN ivf_assigned a USING (cell)
               JOIN codes c ON a.vec_id = c.vec_id
@@ -1988,7 +1564,6 @@ object Similarity {
               JOIN lut l ON l.query_id = p.query_id
          WHERE c.vec_id <> p.query_id),
        $pqTailSql"""
-  }
 
   // ------------------------------------------------------------------
   // PQ-coded persisted ANN index (q163 build / q164 probe): the q140
@@ -2062,7 +1637,7 @@ object Similarity {
           s"append geometry ($numTables x $bitsPerTable) != index geometry $existing at $path")
       }
       if (cbExists) {
-        val recorded = s.read.parquet(cbPath).select(max(col("pq_bits"))).head().getInt(0)
+        val recorded = pqIndexBits(s, path)
         require(recorded == pqBits,
           s"append pq_bits ($pqBits) != index codebook pq_bits ($recorded) at $path")
       }
@@ -2073,41 +1648,22 @@ object Similarity {
     // vector to a different cell. Persist all three relations at train
     // time; reuse them verbatim on append.
     val (cents, groups, supCents) =
-      if (mode == "append" && cbExists) (
-        s.read.parquet(cbPath).select(col("m"), col("cell"), col("centroid")),
-        s.read.parquet(s"$path/_groups"),
-        s.read.parquet(s"$path/_supcent"))
+      if (mode == "append" && cbExists) pqIndexModel(s, path)
       else pqHierModelOn(vecs, pqBits,
         groupSize = math.min(annPqGroupSize, 1 << pqBits), refine = true)
-    val grpBits = indexGrpBits(bitsPerTable)
-    // r13: codes are computed in the SAME projection as the bucket
-    // explode (both are per-row functions of emb against the one-row
-    // broadcast model) — the old shape ran a second encode subtree and
-    // joined it back by vec_id, a corpus-scale exchange pair paid on
-    // every build AND every appended batch (guide §2.4).
-    vecs.crossJoin(broadcast(pqHierModelRow(cents, groups, supCents)))
-      .select(col("vec_id"), expr(pqEncodeHierExprStr(annPqBeam)).as("codes"), posexplode(
-        expr(graft.functions.Hyperplanes.sparkBucketsExpr("emb", bitsPerTable, numTables)))
-        .as(Seq("tbl", "bucket")))
-      .select(col("vec_id"), col("codes"), col("tbl").cast("int").as("tbl"),
-        col("bucket").cast("int").as("bucket"))
-      .withColumn("bgrp", col("bucket").bitwiseAND(lit((1 << grpBits) - 1)))
-      .repartition(col("tbl"), col("bgrp"))
-      .sortWithinPartitions(col("tbl"), col("bgrp"), col("bucket"))
-      .write.mode(mode).partitionBy("tbl", "bgrp").parquet(path)
-    // r14 (guide §2.6, VERDICT r13 item 3): the geometry record and the
-    // three model relations are mutually independent tiny writes — each a
-    // fixed-latency Spark job (sequentially ~3.3 s of the build at sf0.1,
-    // probes/r14/q163_tail_probe.log) — so submit them concurrently and
-    // let the scheduler overlap their stages on otherwise-idle cores.
-    // All of them still start only AFTER the bucket-tree write committed
-    // (the static partitionBy overwrite clears the root first — the r8
-    // ordering constraint), and the persisted layout is byte-identical
-    // to the sequential form.
+    // Codes are computed in the SAME projection as the bucket explode
+    // (both are per-row functions of emb against the one-row broadcast
+    // model) — a second encode subtree joined back by vec_id would be a
+    // corpus-scale exchange pair on every build AND every append.
+    writeBucketTree(bucketRows(vecs.crossJoin(broadcast(pqHierModelRow(cents, groups, supCents))),
+      bitsPerTable, numTables, "codes" -> expr(pqEncodeHierExprStr(annPqBeam)).as("codes")), path, mode)
+    // The geometry record and the three model relations are independent
+    // tiny writes — each a fixed-latency Spark job (sequentially ~3.3 s of
+    // the build at sf0.1) — so they run concurrently, all only AFTER the
+    // bucket-tree write committed (the partitionBy overwrite clears the
+    // root first).
     val tailWrites = scala.collection.mutable.ArrayBuffer[() => Unit](
-      () => s.range(1)
-        .select(lit(bitsPerTable).as("bits"), lit(numTables).as("tables"))
-        .write.mode("overwrite").parquet(s"$path/_geometry"))
+      () => writeGeometry(s, path, bitsPerTable, numTables))
     if (!(mode == "append" && cbExists)) {
       tailWrites += (() => cents.withColumn("pq_bits", lit(pqBits))
         .write.mode("overwrite").parquet(cbPath))
@@ -2115,7 +1671,7 @@ object Similarity {
       tailWrites += (() => supCents.write.mode("overwrite").parquet(s"$path/_supcent"))
     }
     runConcurrently(tailWrites.toSeq)
-    Similarity.synchronized { builtIndexPaths += path }
+    registerIndex(path)
   }
 
   /** Run `tasks` on one thread each and wait for all of them. On the
@@ -2158,53 +1714,23 @@ object Similarity {
     * batch — fine nightly, wrong for the registered fixture where the
     * batch is 10% of the corpus. Candidates and LUTs are both keyed by
     * query_id, and the shortlist window that follows shuffles on
-    * query_id anyway, so the join rides the same partitioning.
-    *
-    * Dedup happens BEFORE scoring here (inverted from
-    * [[annIndexProbe]] — see the inline comment): ADC needs the LUT row
-    * attached, so the distinct runs while the candidate tuple is still
-    * just (query, neighbor, codes).
+    * query_id anyway, so the join rides the same partitioning. Throws on
+    * an index with no `_geometry` record.
     */
   def annPqIndexProbe(s: SparkSession, indexPath: String,
                       newVecs: DataFrame, coldVecs: DataFrame): DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    val H = graft.functions.Hyperplanes
-    val index = s.read.parquet(indexPath)
-    val (bitsPerTable, numTables) = indexGeometry(s, indexPath).getOrElse(annPqGeometry)
-    val cb = s.read.parquet(s"$indexPath/_codebook")
-    val pqBits = cb.select(max(col("pq_bits"))).head().getInt(0)
-    val cents = cb.select(col("m"), col("cell"), col("centroid"))
-    val M = H.pqM
-    val K = 1 << pqBits
-    val probeSigs = newVecs
-      .select(col("vec_id"), posexplode(
-        expr(H.sparkBucketsExpr("emb", bitsPerTable, numTables)))
-        .as(Seq("tbl", "bucket")))
-      .select(col("vec_id"), col("tbl").cast("int").as("tbl"),
-        col("bucket").cast("int").as("bucket"))
-      .withColumn("bgrp", col("bucket")
-        .bitwiseAND(lit((1 << indexGrpBits(bitsPerTable)) - 1)))
     // Dedup BEFORE the LUT join — the opposite order from
-    // [[annIndexProbe]], and for the same materialization reason
-    // inverted: there the score was cheap and the payload (the float
-    // vector) already sat in the candidate row, so scoring first kept
-    // the dedup tuples at 24 bytes; here scoring needs the 16 KiB LUT
-    // row attached, so a pair surfacing in k ≤ 16 tables would
-    // materialize k copies of its query's LUT through the join buffer.
-    // Distinct first shrinks that to one (the candidate tuple is
-    // query + neighbor + the 8-byte codes — still narrow).
-    val cands = broadcast(probeSigs.as("q"))
-      .join(index.as("n"),
-        col("q.tbl") === col("n.tbl") && col("q.bgrp") === col("n.bgrp") &&
-          col("q.bucket") === col("n.bucket") &&
-          col("q.vec_id") =!= col("n.vec_id"))
-      .select(col("q.vec_id").as("query_id"), col("n.vec_id").as("neighbor_id"),
-        col("n.codes").as("codes"))
-      .distinct()
-    val lut = pqLutDf(newVecs, cents, pqBits, queryFilter = lit(true))
-    val adc = cands.join(lut, Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        expr(s"aggregate(sequence(0, ${M - 1}), CAST(0 AS DOUBLE), (acc, mm) -> acc + lut[mm * $K + codes[mm]])").as("adc"))
+    // [[annIndexProbe]], for the same materialization reason inverted:
+    // there the payload (the float vector) already sat in the candidate
+    // row, so scoring first kept the dedup tuples at 24 bytes; here
+    // scoring needs the 16 KiB LUT row attached, so a pair surfacing in
+    // k ≤ 16 tables would materialize k copies of its query's LUT.
+    val cands = indexCandidates(s, indexPath, newVecs, "codes", "codes").distinct()
+    val pqBits = pqIndexBits(s, indexPath)
+    val cents = s.read.parquet(s"$indexPath/_codebook").select(col("m"), col("cell"), col("centroid"))
+    val adc = cands.join(pqLutDf(newVecs, cents, pqBits, queryFilter = lit(true)), Seq("query_id"))
+      .select(col("query_id"), col("neighbor_id"), expr(adcExpr(1 << pqBits)).as("adc"))
     pqAdcRerankOn(newVecs, coldVecs, adc)
   }
 
@@ -2261,21 +1787,9 @@ object Similarity {
     // below has been fully written (which reads `path` end to end).
     recoverInterruptedSwap(path)
     deleteTree(tmp)
-    val grpBits = indexGrpBits(newBits)
-    val keep = col("vec_id") +: payloadCols.map(col)
-    rows
-      .select(keep :+ posexplode(
-        expr(graft.functions.Hyperplanes.sparkBucketsExpr("emb", newBits, newTables)))
-        .as(Seq("tbl", "bucket")): _*)
-      .select(keep :+ col("tbl").cast("int").as("tbl")
-        :+ col("bucket").cast("int").as("bucket"): _*)
-      .withColumn("bgrp", col("bucket").bitwiseAND(lit((1 << grpBits) - 1)))
-      .repartition(col("tbl"), col("bgrp"))
-      .sortWithinPartitions(col("tbl"), col("bgrp"), col("bucket"))
-      .write.mode("overwrite").partitionBy("tbl", "bgrp").parquet(tmp)
-    s.range(1)
-      .select(lit(newBits).as("bits"), lit(newTables).as("tables"))
-      .write.mode("overwrite").parquet(s"$tmp/_geometry")
+    writeBucketTree(bucketRows(rows, newBits, newTables, payloadCols.map(c => c -> col(c)): _*),
+      tmp, "overwrite")
+    writeGeometry(s, tmp, newBits, newTables)
     extraRels.foreach { rel =>
       if (Files.exists(Paths.get(s"$path/$rel")))
         s.read.parquet(s"$path/$rel").write.mode("overwrite").parquet(s"$tmp/$rel")
@@ -2369,14 +1883,27 @@ object Similarity {
     * afterwards, exactly as the recorded-geometry discipline requires.
     */
   def annPqIndexRebucket(s: SparkSession, path: String, coldVecs: DataFrame,
-                         newBits: Int, newTables: Int = -1): Unit = {
+                         newBits: Int, newTables: Int = -1): Unit =
+    rebucketTarget(s, path, newBits, newTables).foreach { case (bits, tables) =>
+      pqRewriteTree(s, path, coldVecs, bits, tables)
+    }
+
+  /** Recover a crashed swap publish, then the index's recorded geometry
+    * — or throw: every rewrite entry point starts here.
+    */
+  private def liveGeometry(s: SparkSession, path: String, op: String): (Int, Int) = {
     recoverInterruptedSwap(path)
-    val (oldBits, oldTables) = indexGeometry(s, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no _geometry record at $path — cannot rebucket an unrecorded index"))
-    val nt = if (newTables == -1) oldTables else newTables
-    if ((newBits, nt) == ((oldBits, oldTables))) return
-    pqRewriteTree(s, path, coldVecs, newBits, nt)
+    recordedGeometry(s, path, op)
+  }
+
+  /** The geometry a rebucket to (newBits, newTables) moves to — -1 keeps
+    * the recorded table count — or None when it is the recorded one.
+    */
+  private def rebucketTarget(s: SparkSession, path: String, newBits: Int,
+                             newTables: Int): Option[(Int, Int)] = {
+    val (oldBits, oldTables) = liveGeometry(s, path, "rebucket")
+    val target = (newBits, if (newTables == -1) oldTables else newTables)
+    if (target == ((oldBits, oldTables))) None else Some(target)
   }
 
   /** One-pass rewrite of a PQ index's bucket tree: resident scan +
@@ -2419,10 +1946,7 @@ object Similarity {
     * before the swap; a pre-swap failure leaves the old tree serving.
     */
   def annPqIndexCompact(s: SparkSession, path: String, coldVecs: DataFrame): Unit = {
-    recoverInterruptedSwap(path)
-    val (bits, tables) = indexGeometry(s, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no _geometry record at $path — cannot compact an unrecorded index"))
+    val (bits, tables) = liveGeometry(s, path, "compact")
     pqRewriteTree(s, path, coldVecs, bits, tables)
   }
 
@@ -2430,14 +1954,17 @@ object Similarity {
     * like [[annIndexRebucket]] (the rows carry the vectors).
     */
   def annIndexCompact(s: SparkSession, path: String): Unit = {
+    val (bits, tables) = liveGeometry(s, path, "compact")
+    floatRewriteTree(s, path, bits, tables)
+  }
+
+  /** The float family's tree rewrite: self-contained, the rows carry the
+    * vectors. Not registered in builtIndexPaths — see pqRewriteTree.
+    */
+  private def floatRewriteTree(s: SparkSession, path: String, bits: Int, tables: Int): Unit = {
     graft.functions.VectorExpressions.register(s)
-    recoverInterruptedSwap(path)
-    val (bits, tables) = indexGeometry(s, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no _geometry record at $path — cannot compact an unrecorded index"))
     rebucketSwap(s, path, indexResidents(s, path, "emb"),
       payloadCols = Seq("emb"), bits, tables, extraRels = Seq.empty)
-    // Not registered in builtIndexPaths — see pqRewriteTree.
   }
 
   /** [[annPqIndexRebucket]] for the float-vector family
@@ -2446,18 +1973,10 @@ object Similarity {
     * the new geometry, rewrite, swap. No external relation at all.
     */
   def annIndexRebucket(s: SparkSession, path: String,
-                       newBits: Int, newTables: Int = -1): Unit = {
-    graft.functions.VectorExpressions.register(s)
-    recoverInterruptedSwap(path)
-    val (oldBits, oldTables) = indexGeometry(s, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no _geometry record at $path — cannot rebucket an unrecorded index"))
-    val nt = if (newTables == -1) oldTables else newTables
-    if ((newBits, nt) == ((oldBits, oldTables))) return
-    rebucketSwap(s, path, indexResidents(s, path, "emb"),
-      payloadCols = Seq("emb"), newBits, nt, extraRels = Seq.empty)
-    // Not registered in builtIndexPaths — see pqRewriteTree.
-  }
+                       newBits: Int, newTables: Int = -1): Unit =
+    rebucketTarget(s, path, newBits, newTables).foreach { case (bits, tables) =>
+      floatRewriteTree(s, path, bits, tables)
+    }
 
   /** Mean PQ quantization-residual energy of a (vec_id, emb) frame under
     * an index's PERSISTED model: encode ≤ `sampleN` of its rows exactly
@@ -2479,14 +1998,10 @@ object Similarity {
   def pqResidualEnergy(s: SparkSession, batch: DataFrame, indexPath: String,
                        sampleN: Int = 1024): Double = {
     graft.functions.VectorExpressions.register(s)
-    val cents = s.read.parquet(s"$indexPath/_codebook")
-      .select(col("m"), col("cell"), col("centroid"))
-    val groups = s.read.parquet(s"$indexPath/_groups")
-    val supCents = s.read.parquet(s"$indexPath/_supcent")
+    val (cents, groups, supCents) = pqIndexModel(s, indexPath)
     val sample = batch.select(col("vec_id"), col("emb")).limit(sampleN)
-    val subs = pqSubsOf(sample)
     val codes = pqEncodeHier(sample, cents, groups, supCents, annPqBeam)
-    subs.join(codes, Seq("vec_id"))
+    pqSubsOf(sample).join(codes, Seq("vec_id"))
       .select(col("vec_id"), col("m"), col("sub"),
         expr("element_at(codes, m + 1)").as("cell"))
       .join(broadcast(cents), Seq("m", "cell"))
@@ -2506,10 +2021,7 @@ object Similarity {
   def pqBatchCodeCounts(s: SparkSession, batch: DataFrame, indexPath: String,
                         sampleN: Int = 1024): Map[(Int, Int), Long] = {
     graft.functions.VectorExpressions.register(s)
-    val cents = s.read.parquet(s"$indexPath/_codebook")
-      .select(col("m"), col("cell"), col("centroid"))
-    val groups = s.read.parquet(s"$indexPath/_groups")
-    val supCents = s.read.parquet(s"$indexPath/_supcent")
+    val (cents, groups, supCents) = pqIndexModel(s, indexPath)
     pqEncodeHier(batch.select(col("vec_id"), col("emb")).limit(sampleN),
         cents, groups, supCents, annPqBeam)
       .select(posexplode(col("codes")).as(Seq("m", "code")))
@@ -2537,6 +2049,12 @@ object Similarity {
     s.read.parquet(s"$indexPath/_codebook")
       .select(max(col("pq_bits"))).head().getInt(0)
 
+  /** A PQ index's persisted hierarchical model: (cents, groups, supCents). */
+  private def pqIndexModel(s: SparkSession, path: String): (DataFrame, DataFrame, DataFrame) = (
+    s.read.parquet(s"$path/_codebook").select(col("m"), col("cell"), col("centroid")),
+    s.read.parquet(s"$path/_groups"),
+    s.read.parquet(s"$path/_supcent"))
+
   /** Build the q163/q164 fixture index lazily once per SF dir — the
     * [[ensureQ140Index]] reuse/staleness discipline, plus the codebook
     * in the completeness check (an index with codes but no `_codebook`
@@ -2544,26 +2062,13 @@ object Similarity {
     */
   private def ensureQ163Index(s: SparkSession, dir: String): String = {
     val path = annPqIndexPath(dir)
-    val done = java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")) &&
-      (try {
-        val fields = s.read.parquet(path).schema.fieldNames
-        fields.contains("codes") && fields.contains("bgrp")
-      } catch { case _: Throwable => false }) &&
-      indexGeometry(s, path).contains(annPqGeometry) &&
-      // Hier-encoder indexes persist their grouping; a tree without
-      // _groups/_supcent predates the q165 encoder switch and its codes
-      // were flat-assigned — rebuild rather than serve mixed encodings.
-      java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_groups")) &&
-      java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_supcent")) &&
-      (try {
-        s.read.parquet(s"$path/_codebook").select(max(col("pq_bits"))).head().getInt(0) == annPqBits
-      } catch { case _: Throwable => false })
-    if (!done) {
-      val corpus = t(s, dir, "embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-        .filter(col("vec_id") % 10 =!= 0)
-      annPqIndexWrite(corpus, path)
-    } else Similarity.synchronized { builtIndexPaths += path }
+    // Hier-encoder indexes persist their grouping; a tree without
+    // _groups/_supcent predates the q165 encoder switch and its codes
+    // were flat-assigned — rebuild rather than serve mixed encodings.
+    val reusable = indexReusable(s, path, "codes", annPqGeometry) &&
+      Seq("_groups", "_supcent").forall(r => java.nio.file.Files.exists(java.nio.file.Paths.get(path, r))) &&
+      (try pqIndexBits(s, path) == annPqBits catch { case _: Throwable => false })
+    if (reusable) registerIndex(path) else annPqIndexWrite(indexCorpus(s, dir), path)
     path
   }
 
@@ -2579,37 +2084,26 @@ object Similarity {
     */
   def q163AnnPqIndexBuild(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    val corpus = t(s, dir, "embeddings")
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-      .filter(col("vec_id") % 10 =!= 0)
     val path = annPqIndexPath(dir)
-    annPqIndexWrite(corpus, path)
-    s.read.parquet(path)
-      .groupBy(col("tbl"))
-      .agg(countDistinct(col("bucket")).as("n_buckets"), count(lit(1)).as("n_rows"),
-        sum(expr(s"aggregate(sequence(0, ${graft.functions.Hyperplanes.pqM - 1}), CAST(0 AS BIGINT), (acc, mm) -> acc + codes[mm] * (mm + 1))")).as("code_sum"))
-      .orderBy(col("tbl"))
+    annPqIndexWrite(indexCorpus(s, dir), path)
+    indexOccupancy(s, path,
+      sum(expr(s"aggregate(sequence(0, ${H.pqM - 1}), CAST(0 AS BIGINT), (acc, mm) -> acc + codes[mm] * (mm + 1))")).as("code_sum"))
   }
 
-  def q163Sql: String = {
-    val H = graft.functions.Hyperplanes
-    val M = H.pqM
-    val sig = H.duckBucketsSql("embedding", annPqGeometry._1, annPqGeometry._2)
-    val nt = annPqGeometry._2
-    s"""WITH corp AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 <> 0),
+  /** The PQ index's training + encode replayed over [[indexCorpus]]:
+    * the pqCteSql prefix and the q165-posture hierarchical codes.
+    */
+  private def pqIndexCodesSql: String =
+    s"""corp AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 <> 0),
        ${pqCteSql("corp", "embedding", annPqBits, "q.vec_id % 10 = 0")},
-       ${pqHierCodesCtes(annPqBeam, annPqGroupSize, refine = true)},
+       ${pqHierCodesCtes(annPqBeam, annPqGroupSize, refine = true)}"""
+
+  def q163Sql: String =
+    s"""WITH $pqIndexCodesSql,
        csum AS (SELECT CAST(SUM(list_reduce([codes[mm + 1] * (mm + 1)
-                         FOR mm IN generate_series(0, ${M - 1})], (acc, v) -> acc + v)) AS BIGINT) AS code_sum
+                         FOR mm IN generate_series(0, ${H.pqM - 1})], (acc, v) -> acc + v)) AS BIGINT) AS code_sum
                 FROM hcodes),
-       sig AS (SELECT vec_id, $sig AS sig FROM embeddings WHERE vec_id % 10 <> 0)
-       SELECT CAST(t.i - 1 AS INT) AS tbl,
-              COUNT(DISTINCT sig[t.i]) AS n_buckets,
-              COUNT(*) AS n_rows,
-              (SELECT code_sum FROM csum) AS code_sum
-       FROM sig, generate_series(1, $nt) AS t(i)
-       GROUP BY 1 ORDER BY 1"""
-  }
+       ${occupancySql(annPqGeometry, ", (SELECT code_sum FROM csum) AS code_sum")}"""
 
   /** Registered end-to-end posture: probe the persisted PQ-coded corpus
     * index (vec_id % 10 != 0) with the new batch (vec_id % 10 == 0) —
@@ -2622,45 +2116,27 @@ object Similarity {
     */
   def q164AnnPqIndexProbe(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    val emb = t(s, dir, "embeddings")
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
+    val emb = vectors(s, dir)
     val path = ensureQ163Index(s, dir)
     annPqIndexProbe(s, path,
       newVecs = emb.filter(col("vec_id") % 10 === 0),
       coldVecs = emb.filter(col("vec_id") % 10 =!= 0))
   }
 
-  def q164Sql: String = {
-    val H = graft.functions.Hyperplanes
-    val M = H.pqM
-    val K = 1 << annPqBits
-    val sig = H.duckBucketsSql("embedding", annPqGeometry._1, annPqGeometry._2)
-    val nt = annPqGeometry._2
-    s"""WITH corp AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 <> 0),
-       ${pqCteSql("corp", "embedding", annPqBits, "q.vec_id % 10 = 0")},
-       ${pqHierCodesCtes(annPqBeam, annPqGroupSize, refine = true)},
-       sig AS (SELECT vec_id, $sig AS sig FROM embeddings),
-       cands AS (
-         SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
-         FROM sig q JOIN sig n ON q.vec_id <> n.vec_id
-         WHERE q.vec_id % 10 = 0 AND n.vec_id % 10 <> 0
-           AND list_contains([q.sig[i] = n.sig[i] FOR i IN generate_series(1, $nt)], true)),
+  def q164Sql: String =
+    s"""WITH $pqIndexCodesSql,
+       ${lshCandsSql("q.vec_id % 10 = 0 AND n.vec_id % 10 <> 0", geometry = annPqGeometry)},
        adc AS (
          SELECT ca.query_id, ca.neighbor_id,
-                list_reduce([l.lut[mm * $K + c.codes[mm + 1] + 1]
-                             FOR mm IN generate_series(0, ${M - 1})], (acc, v) -> acc + v) AS adc
+                ${adcSql(1 << annPqBits)} AS adc
          FROM cands ca JOIN hcodes c ON ca.neighbor_id = c.vec_id
               JOIN lut l ON l.query_id = ca.query_id),
        $pqTailSql"""
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q125_hybrid_retrieval" -> (q125HybridRetrieval _),
-    "q124_hard_negatives" -> (q124HardNegatives _),
     "q55_ann_bruteforce" -> (q55AnnBruteforce _),
-    "q56_ann_lsh" -> (q56AnnLsh _),
     "q58_ann_ivf" -> (q58AnnIvf _),
-    "q84_ann_multiprobe" -> (q84AnnMultiprobe _),
     "q87_ann_quant_rescore" -> (q87AnnQuantRescore _),
     "q140_ann_index_probe" -> (q140AnnIndexProbe _),
     "q144_ann_index_build" -> (q144AnnIndexBuild _),
@@ -2669,6 +2145,11 @@ object Similarity {
     "q156_ann_ivfpq_residual" -> (q156AnnIvfPqResidual _),
     "q163_ann_pq_index_build" -> (q163AnnPqIndexBuild _),
     "q164_ann_pq_index_probe" -> (q164AnnPqIndexProbe _)) ++
+    lshPostures.map { case (key, multiProbe, maxCos) =>
+      key -> ((s: SparkSession, dir: String) => {
+        graft.functions.VectorExpressions.register(s)
+        lshTopK(vectors(s, dir), multiProbe, maxCos)
+      }) } ++
     semanticCells.map { case (key, cellBits) =>
       key -> ((s: SparkSession, dir: String) => semanticDedup(s, dir, cellBits)) } ++
     pqServes.map { case (key, bits, hier) =>
@@ -2676,11 +2157,8 @@ object Similarity {
 
   val oracle: Map[String, String] = Map(
     "q125_hybrid_retrieval" -> q125Sql,
-    "q124_hard_negatives" -> q124Sql,
     "q55_ann_bruteforce" -> q55Sql,
-    "q56_ann_lsh" -> q56Sql,
     "q58_ann_ivf" -> q58Sql,
-    "q84_ann_multiprobe" -> q84Sql,
     "q87_ann_quant_rescore" -> q87Sql,
     "q140_ann_index_probe" -> q140Sql,
     "q144_ann_index_build" -> q144Sql,
@@ -2689,6 +2167,8 @@ object Similarity {
     "q156_ann_ivfpq_residual" -> q156Sql,
     "q163_ann_pq_index_build" -> q163Sql,
     "q164_ann_pq_index_probe" -> q164Sql) ++
+    lshPostures.map { case (key, multiProbe, maxCos) =>
+      key -> lshTopKSql("q.vec_id < 20", multiProbe, maxCos) } ++
     semanticCells.map { case (key, cellBits) => key -> semanticSql(cellBits) } ++
     pqServes.map { case (key, bits, hier) => key -> pqServeSql(bits, hier) }
 }

@@ -261,10 +261,10 @@ class DedupSpec extends SparkSpec {
   test("ANN LSH results are a subset of brute-force rankings' pairs with decent recall") {
     val exact = ops.Similarity.q55AnnBruteforce(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val lsh = ops.Similarity.q56AnnLsh(spark, sfDir)
+    val lsh = ops.Similarity.queries("q56_ann_lsh")(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     // 16 tables x 4 bits: expected recall ~0.97 at cos 0.5 on this
-    // near-uniform corpus (see q56 scaladoc); assert a safe floor.
+    // near-uniform corpus (see the lshTopK scaladoc); assert a safe floor.
     assert(lsh.nonEmpty)
     val recall = (exact & lsh).size.toDouble / exact.size
     assert(recall > 0.5, s"LSH recall $recall vs exact top-5")
@@ -273,9 +273,9 @@ class DedupSpec extends SparkSpec {
   test("multi-probe LSH recall dominates single-probe (strict candidate superset)") {
     val exact = ops.Similarity.q55AnnBruteforce(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val single = ops.Similarity.q56AnnLsh(spark, sfDir)
+    val single = ops.Similarity.queries("q56_ann_lsh")(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val multi = ops.Similarity.q84AnnMultiprobe(spark, sfDir)
+    val multi = ops.Similarity.queries("q84_ann_multiprobe")(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val rs = (single & exact).size.toDouble / exact.size
     val rm = (multi & exact).size.toDouble / exact.size
@@ -286,7 +286,7 @@ class DedupSpec extends SparkSpec {
   test("quantized rescore (q87): int8 shortlist keeps LSH top-5 recall vs brute force") {
     val exact = ops.Similarity.q55AnnBruteforce(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val lsh = ops.Similarity.q56AnnLsh(spark, sfDir)
+    val lsh = ops.Similarity.queries("q56_ann_lsh")(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val quant = ops.Similarity.q87AnnQuantRescore(spark, sfDir)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
