@@ -137,6 +137,25 @@ object Bench {
         (driver ++ archived).sortBy(t => (t._1, t._2)).lastOption.map(_._3)
     }
 
+  /** Root-level file for a run's full bench line: the canonical 32-CPU
+    * run owns BENCH_FULL.json; a run at any other CPU count writes
+    * BENCH_FULL_c<cpus>.json, so a probe at another core count never
+    * overwrites the canonical artifact.
+    */
+  private[graft] def fullBenchFile(cpus: String): String =
+    if (cpus == "32") "BENCH_FULL.json" else s"BENCH_FULL_c$cpus.json"
+
+  /** The JSON fields naming what a full bench line measured: the CPU
+    * count and the commit (`git rev-parse HEAD` in the working directory,
+    * "unknown" outside a git checkout).
+    */
+  private[graft] def runStamp(cpus: String, commit: String): String =
+    s""""cpus":$cpus,"commit":"$commit""""
+
+  private def headCommit(): String =
+    try sys.process.Process(Seq("git", "rev-parse", "HEAD")).!!.trim
+    catch { case _: Throwable => "unknown" }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -380,7 +399,7 @@ object Bench {
     //      queries map) goes to a side file the close-out ritual archives
     //      and adjudicates from, so no information is lost — it just
     //      stops traveling through the bounded pipe.
-    val fullLine = s"""{"metric":"total","unit":"sec","audit":$auditJson,"anchors":$anchorsJson$remeasJson,"queries":$qs,"value":${r3(total)},"anchor":${r3(anchor)},"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","unit":"sec","audit":$auditJson,"anchors":$anchorsJson$remeasJson,"queries":$qs,"value":${r3(total)},"anchor":${r3(anchor)},"sf":"$sfDir",${runStamp(cpus, headCommit())}}"""
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_full.json")
     try {
       val p = java.nio.file.Paths.get(fullPath)
@@ -399,10 +418,11 @@ object Bench {
     // artifact with a partial map). Written after all timing completes;
     // the timed path is unchanged.
     if (only.isEmpty) {
+      val fullFile = fullBenchFile(cpus)
       try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_FULL.json"), fullLine + "\n")
+        java.nio.file.Paths.get(fullFile), fullLine + "\n")
       catch { case e: Throwable =>
-        System.err.println(s"[bench] BENCH_FULL.json write failed: ${e.getMessage}")
+        System.err.println(s"[bench] $fullFile write failed: ${e.getMessage}")
       }
     }
     val chunks = entryStrs.grouped(24).toSeq

@@ -219,8 +219,9 @@ object TweetPipeline {
   * in-place overwrite (SparkApplication.scala:125).
   */
 object AnalyticSink {
-  import java.nio.file.{Files, Paths, StandardCopyOption}
+  import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
   import java.time.OffsetDateTime
+  import java.util.UUID
   import java.time.format.DateTimeFormatter
 
   def render(items: Seq[(String, Long)], datetime: String): String = {
@@ -234,15 +235,25 @@ object AnalyticSink {
     s"""{"items":[${body.mkString(",")}],"datetime":"$datetime"}"""
   }
 
+  /** Publish the document at `path`. The staging file is a plain create,
+    * so the published file gets the umask's permissions like the
+    * reference's FileUtils.write (createTempFile would make it owner-only
+    * and unreadable to the web server polling it); a failed publish
+    * deletes it.
+    */
   def write(path: String, items: Seq[(String, Long)]): Unit = {
     val doc = render(items,
       OffsetDateTime.now().format(DateTimeFormatter.ISO_OFFSET_DATE_TIME))
     val target = Paths.get(path)
     if (target.getParent != null) Files.createDirectories(target.getParent)
-    val tmp = Files.createTempFile(
-      if (target.getParent != null) target.getParent else Paths.get("."), ".analytic", ".tmp")
-    Files.writeString(tmp, doc)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    val dir = if (target.getParent != null) target.getParent else Paths.get(".")
+    val tmp = dir.resolve(s".analytic${UUID.randomUUID()}.tmp")
+    var published = false
+    try {
+      Files.writeString(tmp, doc, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+      published = true
+    } finally if (!published) Files.deleteIfExists(tmp)
   }
 }

@@ -48,6 +48,31 @@ class AnnIngestSpec extends SparkSpec {
       s"stream-built probe diverged: ${fromStream.take(3)} vs ${fromBatch.take(3)}")
   }
 
+  test("both index probes reject an index with no _geometry record") {
+    graft.functions.VectorExpressions.register(spark)
+    val corpus = emb().filter(col("vec_id") % 10 =!= 0)
+    // Built at a non-default geometry, then caught between the tree write
+    // and the _geometry write: any guessed geometry would serve wrong
+    // candidates, so the probe must refuse.
+    def unrecorded(build: String => Unit): String = {
+      val path = java.nio.file.Files.createTempDirectory("ann_nogeom").toString + "/idx"
+      build(path)
+      graft.ops.Similarity.deleteTree(s"$path/_geometry")
+      assert(graft.ops.Similarity.indexGeometry(spark, path).isEmpty)
+      path
+    }
+    val fPath = unrecorded(graft.ops.Similarity.annIndexWrite(corpus, _,
+      bitsPerTable = geom._1, numTables = geom._2))
+    val fErr = intercept[IllegalArgumentException](
+      graft.ops.Similarity.annIndexProbe(spark, fPath, probeBatch()))
+    assert(fErr.getMessage.contains(fPath))
+    val pqPath = unrecorded(graft.ops.Similarity.annPqIndexWrite(corpus, _,
+      bitsPerTable = geom._1, numTables = geom._2, pqBits = 4))
+    val pqErr = intercept[IllegalArgumentException](
+      graft.ops.Similarity.annPqIndexProbe(spark, pqPath, probeBatch(), corpus))
+    assert(pqErr.getMessage.contains(pqPath))
+  }
+
   test("replayed batch is a marker-gated no-op; a worst-case duplicate append is result-neutral") {
     graft.functions.VectorExpressions.register(spark)
     val corpus = emb().filter(col("vec_id") % 10 =!= 0)

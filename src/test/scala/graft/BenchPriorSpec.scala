@@ -135,6 +135,18 @@ class BenchPriorSpec extends AnyFunSuite {
       "a newer driver capture must beat an older archive")
   }
 
+  test("full bench line: canonical 32-CPU file, per-CPU file otherwise, stamped with cpus and commit") {
+    assert(Bench.fullBenchFile("32") == "BENCH_FULL.json")
+    assert(Bench.fullBenchFile("8") == "BENCH_FULL_c8.json")
+    assert(Bench.fullBenchFile("4") == "BENCH_FULL_c4.json")
+    val stamped = line1.dropRight(1) + "," + Bench.runStamp("8", "0123abc") + "}"
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(stamped)
+    assert(node.get("cpus").asInt() == 8 && node.get("commit").asText() == "0123abc")
+    // The stamp does not disturb prior recovery from the same line.
+    val (anchor, qs, _) = Bench.loadPrior(write(stamped)).get
+    assert(anchor == 0.2 && qs == Map("q1" -> 1.0, "q2" -> 2.0))
+  }
+
   test("missing file or no recoverable anchor yields None, not a throw") {
     assert(Bench.loadPrior("/nonexistent/bench.json").isEmpty)
     assert(Bench.loadPrior(write("""{"queries-less":"noise"}""")).isEmpty)

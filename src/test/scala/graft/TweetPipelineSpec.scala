@@ -67,4 +67,25 @@ class TweetPipelineSpec extends SparkSpec {
     AnalyticSink.write(path, Seq(("B", 2L))) // overwrite is atomic, no residue
     assert(java.nio.file.Files.readString(java.nio.file.Paths.get(path)).contains("\"B\""))
   }
+
+  test("published file has the permissions of a plain create in the same directory") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("sink_perms")
+    val published = dir.resolve("analytic.json")
+    AnalyticSink.write(published.toString, Seq(("A", 1L)))
+    val plain = Files.createFile(dir.resolve("plain.json"))
+    assert(Files.getPosixFilePermissions(published) == Files.getPosixFilePermissions(plain))
+  }
+
+  test("a failed publish throws and leaves no staging file behind") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("sink_fail")
+    // A non-empty directory at the target path: the publish move must fail.
+    val target = dir.resolve("analytic.json")
+    Files.createFile(Files.createDirectories(target).resolve("occupant"))
+    intercept[java.io.IOException](AnalyticSink.write(target.toString, Seq(("A", 1L))))
+    val leftovers = Files.list(dir)
+    try assert(leftovers.noneMatch(_.getFileName.toString.endsWith(".tmp")))
+    finally leftovers.close()
+  }
 }
