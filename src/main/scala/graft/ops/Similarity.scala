@@ -256,9 +256,9 @@ object Similarity {
     * codebook IS [[ivfRanked]]'s rn = 1 (same d DESC / cell ASC
     * tie-break; ordering parity in graft.functions.ArgmaxExpressions).
     */
-  private def ivfAssigned(emb: DataFrame, ivfRow: DataFrame): DataFrame =
+  private def ivfAssigned(emb: DataFrame, ivfRow: DataFrame, as: String = "cell"): DataFrame =
     emb.crossJoin(broadcast(ivfRow))
-      .select(col("vec_id"), col("emb"), expr("graft_argmax_dot(emb, cands)").as("cell"))
+      .select(col("vec_id"), col("emb"), expr("graft_argmax_dot(emb, cands)").as(as))
 
   /** IVF routing: each of the 20 probes' 4 nearest cells — graft_top_dots
     * IS [[ivfRanked]]'s rn <= 4 slice. Emits (query_id, [q_emb], cell,
@@ -301,12 +301,7 @@ object Similarity {
   private def ivfCteSql(cellBits: Int, p: String = ""): String = {
     val cell0 = H.duckCellSqlN("embedding", cellBits)
     s"""${p}seeded AS (SELECT vec_id, embedding, $cell0 AS cell0 FROM embeddings),
-       ${p}comps AS (SELECT cell0, i - 1 AS dim,
-                        CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 10000000) AS BIGINT) AS fx
-                 FROM ${p}seeded, UNNEST(generate_series(1, len(embedding))) AS t(i)),
-       ${p}sums AS (SELECT cell0, dim, SUM(fx) AS sfx, COUNT(*) AS n FROM ${p}comps GROUP BY 1, 2),
-       ${p}cent AS (SELECT cell0 AS cell, list(CAST(sfx AS DOUBLE) / n / 10000000 ORDER BY dim) AS centroid
-                FROM ${p}sums GROUP BY cell0),
+       ${fxCentSql(p, Seq("cell0"), "cell", "embedding", embDims)},
        ${p}ranked AS (
          SELECT e.vec_id, c.cell,
                 ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
@@ -316,6 +311,25 @@ object Similarity {
          FROM embeddings e CROSS JOIN ${p}cent c),
        ${p}assigned AS (SELECT vec_id, cell FROM ${p}ranked WHERE rn = 1)"""
   }
+
+  /** DuckDB replica of [[fxSums]] + [[fxCentroids]]: `p`-prefixed
+    * comps/sums/cent CTEs over `${p}seeded`, summing `vec[i]` for i in
+    * `dims` per `keys`; `cent` renames the last key to `alias`.
+    */
+  private def fxCentSql(p: String, keys: Seq[String], alias: String, vec: String,
+                        dims: String): String = {
+    val k = keys.mkString(", ")
+    val groups = (1 to keys.size + 1).mkString(", ")
+    val cell = (keys.init :+ s"${keys.last} AS $alias").mkString(", ")
+    s"""${p}comps AS (SELECT $k, i - 1 AS dim,
+                        CAST(ROUND(CAST($vec[i] AS DOUBLE) * 10000000) AS BIGINT) AS fx
+                 FROM ${p}seeded, $dims AS t(i)),
+       ${p}sums AS (SELECT $k, dim, SUM(fx) AS sfx, COUNT(*) AS n FROM ${p}comps GROUP BY $groups),
+       ${p}cent AS (SELECT $cell, list(CAST(sfx AS DOUBLE) / n / 10000000 ORDER BY dim) AS centroid
+                FROM ${p}sums GROUP BY $k)"""
+  }
+
+  private def embDims = "UNNEST(generate_series(1, len(embedding)))"
 
   /** [[ivfCteSql]] at 16 cells plus the `probecells` routing CTE. */
   private def ivfRouteSql(p: String): String =
@@ -482,9 +496,7 @@ object Similarity {
     // Both levels are per-row graft_argmax_dot evals against one-row
     // broadcast codebooks; supAssigned carries emb through, so level 2
     // starts without a join.
-    val supAssigned = emb.crossJoin(broadcast(ivfCentsRow(supCents)))
-      .select(col("vec_id"), col("emb"),
-        expr("graft_argmax_dot(emb, cands)").as("super"))
+    val supAssigned = ivfAssigned(emb, ivfCentsRow(supCents), "super")
     // Level 2: sub cells from the DISJOINT plane span [hi, hi + lo),
     // seeded and assigned within each super cell.
     val subSeeded = supAssigned
@@ -517,12 +529,7 @@ object Similarity {
           FOR i IN generate_series(1, len($e.embedding))], (acc, v) -> acc + v)"""
     s"""WITH emb AS (SELECT vec_id, embedding FROM ${Dedup.plantedEmbeddingsSql}),
        sseeded AS (SELECT vec_id, embedding, $hiCell AS super0 FROM emb),
-       scomps AS (SELECT super0, i - 1 AS dim,
-                         CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 10000000) AS BIGINT) AS fx
-                  FROM sseeded, UNNEST(generate_series(1, len(embedding))) AS t(i)),
-       ssums AS (SELECT super0, dim, SUM(fx) AS sfx, COUNT(*) AS n FROM scomps GROUP BY 1, 2),
-       scent AS (SELECT super0 AS cell, list(CAST(sfx AS DOUBLE) / n / 10000000 ORDER BY dim) AS centroid
-                 FROM ssums GROUP BY super0),
+       ${fxCentSql("s", Seq("super0"), "cell", "embedding", embDims)},
        sranked AS (SELECT e.vec_id, c.cell,
                           ROW_NUMBER() OVER (PARTITION BY e.vec_id
                             ORDER BY ${dotC("e", "c")} DESC, c.cell ASC) AS rn
@@ -530,12 +537,7 @@ object Similarity {
        sassign AS (SELECT vec_id, cell AS super FROM sranked WHERE rn = 1),
        bseeded AS (SELECT e.vec_id, e.embedding, a.super, $loCell AS sub0
                    FROM emb e JOIN sassign a USING (vec_id)),
-       bcomps AS (SELECT super, sub0, i - 1 AS dim,
-                         CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 10000000) AS BIGINT) AS fx
-                  FROM bseeded, UNNEST(generate_series(1, len(embedding))) AS t(i)),
-       bsums AS (SELECT super, sub0, dim, SUM(fx) AS sfx, COUNT(*) AS n FROM bcomps GROUP BY 1, 2, 3),
-       bcent AS (SELECT super, sub0 AS sub, list(CAST(sfx AS DOUBLE) / n / 10000000 ORDER BY dim) AS centroid
-                 FROM bsums GROUP BY super, sub0),
+       ${fxCentSql("b", Seq("super", "sub0"), "sub", "embedding", embDims)},
        branked AS (SELECT e.vec_id, e.super, c.sub,
                           ROW_NUMBER() OVER (PARTITION BY e.vec_id
                             ORDER BY ${dotC("e", "c")} DESC, c.sub ASC) AS rn
@@ -1211,12 +1213,7 @@ object Similarity {
          SELECT vec_id, m, $vec[m * $sd + 1 : m * $sd + $sd] AS sub
          FROM $from, generate_series(0, ${M - 1}) AS t(m)),
        seeded AS (SELECT vec_id, m, sub, $cell0 AS cell0 FROM subs),
-       comps AS (SELECT m, cell0, i - 1 AS dim,
-                        CAST(ROUND(CAST(sub[i] AS DOUBLE) * 10000000) AS BIGINT) AS fx
-                 FROM seeded, generate_series(1, $sd) AS t(i)),
-       sums AS (SELECT m, cell0, dim, SUM(fx) AS sfx, COUNT(*) AS n FROM comps GROUP BY 1, 2, 3),
-       cent AS (SELECT m, cell0 AS cell, list(CAST(sfx AS DOUBLE) / n / 10000000 ORDER BY dim) AS centroid
-                FROM sums GROUP BY m, cell0),
+       ${fxCentSql("", Seq("m", "cell0"), "cell", "sub", s"generate_series(1, $sd)")},
        scored AS (
          SELECT s.vec_id, s.m, c.cell,
                 list_reduce([CAST(s.sub[i] AS DOUBLE) * c.centroid[i]
@@ -1395,6 +1392,16 @@ object Similarity {
                           element_at(sup_arr, mm + 1),
                           element_at(cells_arr, mm + 1), $beam))"""
 
+  /** Super-centroids of grouping `groups<i>`: member cells' integer sums
+    * re-aggregated per (m, g), as `supcent<i>` (m, g, scentroid).
+    */
+  private def supCentSql(i: Int): String =
+    s"""supsums$i AS (SELECT s.m, g.g, s.dim, SUM(s.sfx) AS sfx, SUM(s.n) AS n
+                    FROM sums s JOIN groups$i g ON s.m = g.m AND s.cell0 = g.cell
+                    GROUP BY 1, 2, 3),
+       supcent$i AS (SELECT m, g, list(CAST(sfx AS DOUBLE) / n / 10000000 ORDER BY dim) AS scentroid
+                    FROM supsums$i GROUP BY m, g)"""
+
   /** The hierarchical-encode CTE block, shared by q160/q161/q165's
     * oracles and the PQ index oracles (q163/q164, which encode with the
     * q165 posture since the encoder switch): consumes the pqCteSql
@@ -1420,17 +1427,9 @@ object Similarity {
                                  FOR i IN generate_series(1, $sd)], (acc, v) -> acc + v) DESC,
                     sc.g ASC) AS rn
            FROM cent c JOIN supcent0 sc ON c.m = sc.m) WHERE rn = 1),
-       supsums1 AS (SELECT s.m, g.g, s.dim, SUM(s.sfx) AS sfx, SUM(s.n) AS n
-                    FROM sums s JOIN groups1 g ON s.m = g.m AND s.cell0 = g.cell
-                    GROUP BY 1, 2, 3),
-       supcent1 AS (SELECT m, g, list(CAST(sfx AS DOUBLE) / n / 10000000 ORDER BY dim) AS scentroid
-                    FROM supsums1 GROUP BY m, g),"""
+       ${supCentSql(1)},"""
     s"""groups0 AS (SELECT m, cell, cell // $groupSize AS g FROM cent),
-       supsums0 AS (SELECT s.m, g.g, s.dim, SUM(s.sfx) AS sfx, SUM(s.n) AS n
-                    FROM sums s JOIN groups0 g ON s.m = g.m AND s.cell0 = g.cell
-                    GROUP BY 1, 2, 3),
-       supcent0 AS (SELECT m, g, list(CAST(sfx AS DOUBLE) / n / 10000000 ORDER BY dim) AS scentroid
-                    FROM supsums0 GROUP BY m, g),$refineCtes
+       ${supCentSql(0)},$refineCtes
        s1 AS (
          SELECT vec_id, m, g FROM (
            SELECT s.vec_id, s.m, c.g,

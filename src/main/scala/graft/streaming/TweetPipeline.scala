@@ -221,8 +221,8 @@ object TweetPipeline {
 object AnalyticSink {
   import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
   import java.time.OffsetDateTime
-  import java.util.UUID
   import java.time.format.DateTimeFormatter
+  import java.util.UUID
 
   def render(items: Seq[(String, Long)], datetime: String): String = {
     def esc(s: String) = s.flatMap {
@@ -248,12 +248,13 @@ object AnalyticSink {
     if (target.getParent != null) Files.createDirectories(target.getParent)
     val dir = if (target.getParent != null) target.getParent else Paths.get(".")
     val tmp = dir.resolve(s".analytic${UUID.randomUUID()}.tmp")
-    var published = false
     try {
       Files.writeString(tmp, doc, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
       Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
-      published = true
-    } finally if (!published) Files.deleteIfExists(tmp)
+    } catch { case e: Throwable =>
+      Files.deleteIfExists(tmp)
+      throw e
+    }
   }
 }
