@@ -70,8 +70,8 @@ object TweetPipeline {
     topK(countTags(extractHashtags(tweets)), k)
 
   /** Streaming form: sliding event-time window with watermark. Emits one
-    * row per (window, key) — callers slice the latest window and top-5 it
-    * in foreachBatch (see [[AnalyticSink]]).
+    * row per (window, key) — callers slice one window and top-5 it in
+    * foreachBatch (see [[run]]'s append mode).
     */
   def windowedCounts(tweets: DataFrame,
                      windowLen: String = "15 minutes",
@@ -98,29 +98,57 @@ object TweetPipeline {
     n.toLong * base
   }
 
-  /** Run the streaming pipeline end-to-end: parse → windowed counts →
+  /** Streaming form of the leaderboard state: one row per (pane, key),
+    * where a pane is a non-overlapping event-time slice `paneMs` long
+    * ("No Pane, No Gain", Li et al., SIGMOD Record 2005). Each hashtag
+    * updates exactly one row instead of one per overlapping sliding
+    * window; any window whose bounds are multiples of `paneMs` is a sum of
+    * whole panes. The key is a plain timestamp, not a window struct, so a
+    * checkpoint of [[windowedCounts]] state fails the state-schema check
+    * instead of being read back as panes. It carries no watermark
+    * metadata, so no row is dropped as late: an event behind the
+    * watermark still counts, as it did in the trailing sliding window,
+    * whose end is always past the watermark.
+    */
+  private def paneCounts(tweets: DataFrame, paneMs: Long): DataFrame = {
+    val micros = unix_micros(col("ts"))
+    extractHashtags(tweets)
+      .withWatermark("ts", "1 minute")
+      .groupBy(timestamp_micros(micros - pmod(micros, lit(paneMs * 1000L))).as("pane"),
+        lower(col("tag")).as("key"))
+      .agg(min(col("tag")).as("hashtag"), count(lit(1)).as("count"))
+  }
+
+  /** Run the streaming pipeline end-to-end: parse → per-pane counts →
     * per-batch top-5 of the TRAILING full-length window → atomic JSON doc.
     *
     * "Trailing" matches the reference's dashboard semantics
     * (reduceByKeyAndWindow over the last 15 minutes,
     * SparkApplication.scala:88): the published window is the one covering
-    * the 15 minutes up to the newest slide boundary — NOT max(window.start),
-    * which is a window that has only just opened and so contains only the
-    * newest ~10 s of events. With sliding windows the trailing window's
-    * start is max(start) + slide - windowLen.
+    * the `windowLen` up to the newest slide boundary, i.e.
+    * [S + slide - windowLen, S + slide) where S is the newest event's time
+    * rounded down to a multiple of `slide` — NOT the window starting at S,
+    * which has only just opened and so contains only the newest slide of
+    * events.
     *
-    * Output-mode knob (VERDICT r4 item 3): COMPLETE mode re-emits the
-    * whole leaderboard state per trigger — correct for this dashboard
-    * (state is bounded by |windows in 15 min| × |distinct tags|, and the
-    * reference's contract is "current standings every 10 s"). For
-    * unbounded key cardinality the production shape is APPEND mode: each
-    * window's counts reach the sink exactly once when the watermark
-    * closes it, state is EVICTED rather than retained forever, and the
-    * published document is the top-5 of the newest CLOSED window — the
-    * standings lag by the watermark, the price of bounded state. The
-    * aggregation itself is mode-agnostic (same [[windowedCounts]] plan);
-    * only the per-batch window selection differs, because an append batch
-    * carries closed windows while a complete batch carries all of them.
+    * Complete mode (the default) keeps [[paneCounts]] with panes
+    * gcd(windowLen, slide) long — 10 s for 15 min / 10 s — and sums the
+    * panes of the trailing window per key at publish time. Complete mode
+    * never evicts state, so the state grows with the event-time span the
+    * query has seen, not with |windows in 15 min| × |distinct tags|: one
+    * row per (pane, tag) seen, where sliding windows kept one per
+    * (window, tag), about windowLen / slide times as many. A checkpoint
+    * written before panes (sliding-window state) cannot be resumed.
+    *
+    * Append mode (`outputMode = "append"`) is the production shape for
+    * unbounded key cardinality: each window's counts reach the sink
+    * exactly once when the watermark closes it, state is EVICTED rather
+    * than retained forever, and the published document is the top-5 of
+    * the newest CLOSED window — the standings lag by the watermark, the
+    * price of bounded state. It keeps the sliding [[windowedCounts]]
+    * state, because a closed window must be emitted whole: the panes of
+    * a window close at different times, so they cannot be summed in the
+    * sink batch that closes it.
     *
     * Observability on by default (VERDICT r7 item 8): every run attaches
     * [[StreamHealth.listener]] scoped to THIS query, appending one JSONL
@@ -139,11 +167,16 @@ object TweetPipeline {
           outputMode: String = "complete"): org.apache.spark.sql.streaming.StreamingQuery = {
     require(outputMode == "complete" || outputMode == "append",
       s"outputMode must be 'complete' or 'append', got '$outputMode'")
-    val trailingOffsetMs = durationMs(slide) - durationMs(windowLen)
+    val windowMs = durationMs(windowLen)
+    val slideMs = durationMs(slide)
+    val complete = outputMode == "complete"
     // Unique name so the health listener can scope to this query's
     // progress events before the query starts (ids only exist after).
     val queryName = s"tweet-pipeline-${java.util.UUID.randomUUID().toString.take(8)}"
-    val writer = windowedCounts(tweets, windowLen, slide)
+    val state =
+      if (complete) paneCounts(tweets, BigInt(windowMs).gcd(BigInt(slideMs)).toLong)
+      else windowedCounts(tweets, windowLen, slide)
+    val writer = state
       .writeStream
       .queryName(queryName)
       .outputMode(outputMode)
@@ -182,32 +215,33 @@ object TweetPipeline {
       }
     startOrCleanup(writer
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (outputMode == "complete") {
-          // Publish the TRAILING full-length window of the current state.
-          val latest = batch.select(max(col("window.start"))).first()
-          if (!latest.isNullAt(0)) {
-            val trailingStart = new java.sql.Timestamp(
-              latest.getTimestamp(0).getTime + trailingOffsetMs)
-            val top = topK(
-              batch.filter(col("window.start") === trailingStart)
-                .select(col("hashtag"), col("count")), 5)
-              .collect()
-            AnalyticSink.write(resultPath,
-              top.map(r => (r.getString(0), r.getLong(1))).toSeq)
+        // The batch is a LogicalRDD over the stateful stage's output, so
+        // every action on it would run that stage (and its state-store
+        // update) again: the two actions below share one cached copy.
+        batch.persist()
+        try {
+          val standings = if (complete) {
+            // Publish the TRAILING full-length window: the panes from
+            // S + slide - windowLen on, summed per key.
+            val latest = batch.select(max(col("pane"))).first()
+            if (latest.isNullAt(0)) None else {
+              val newest = Math.floorDiv(latest.getTimestamp(0).getTime, slideMs) * slideMs
+              Some(batch.filter(col("pane") >= new java.sql.Timestamp(newest + slideMs - windowMs))
+                .groupBy(col("key"))
+                .agg(min(col("hashtag")).as("hashtag"), sum(col("count")).as("count")))
+            }
+          } else {
+            // Append batch = windows the watermark just closed (each exactly
+            // once). Publish the newest closed window's final standings.
+            val latest = batch.select(max(col("window.end"))).first()
+            if (latest.isNullAt(0)) None
+            else Some(batch.filter(col("window.end") === latest.getTimestamp(0)))
           }
-        } else {
-          // Append batch = windows the watermark just closed (each exactly
-          // once). Publish the newest closed window's final standings.
-          val latest = batch.select(max(col("window.end"))).first()
-          if (!latest.isNullAt(0)) {
-            val top = topK(
-              batch.filter(col("window.end") === latest.getTimestamp(0))
-                .select(col("hashtag"), col("count")), 5)
-              .collect()
-            AnalyticSink.write(resultPath,
-              top.map(r => (r.getString(0), r.getLong(1))).toSeq)
+          standings.foreach { counts =>
+            val rows = topK(counts.select(col("hashtag"), col("count")), 5).collect()
+            AnalyticSink.write(resultPath, rows.map(r => (r.getString(0), r.getLong(1))).toSeq)
           }
-        }
+        } finally batch.unpersist()
       }
     )
   }

@@ -448,6 +448,77 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** Plain-Scala top-k of the trailing window [S + slide - window, S + slide),
+    * S the newest kept tag's event time rounded down to a multiple of the
+    * slide: case-insensitive keys, the smallest casing shown, the blacklist
+    * dropped, ties by count desc then tag asc.
+    */
+  private def trailingTop(events: Seq[(Long, Seq[String])], windowMs: Long,
+                          slideMs: Long, k: Int = 5): Seq[(String, Long)] = {
+    def keep(t: String) = t.nonEmpty && !TweetPipeline.WordBlacklist.contains(t.toLowerCase)
+    val kept = for ((ms, tags) <- events; t <- tags if keep(t)) yield (ms, t)
+    if (kept.isEmpty) Seq.empty else {
+      val end = Math.floorDiv(kept.map(_._1).max, slideMs) * slideMs + slideMs
+      kept.filter { case (ms, _) => ms >= end - windowMs && ms < end }
+        .groupBy(_._2.toLowerCase).values
+        .map(g => (g.map(_._2).min, g.size.toLong)).toSeq
+        .sortBy { case (t, n) => (-n, t) }.take(k)
+    }
+  }
+
+  private def publishedItems(path: String): Seq[(String, Long)] =
+    """\{"hashtag":"((?:[^"\\]|\\.)*)","count":(\d+)\}""".r
+      .findAllMatchIn(java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
+      .map(m => (m.group(1), m.group(2).toLong)).toSeq
+
+  // 25 s / 10 s is not a multiple of its slide: its panes are 5 s long and
+  // its trailing window starts 15 s before the newest slide boundary.
+  for ((windowLen, windowMs, after1, after2) <- Seq(
+      ("15 minutes", 900000L,
+        Seq("Edge" -> 3L, "BREXIT" -> 2L, "gamma" -> 2L, "tieB" -> 2L, "zeta" -> 2L),
+        Seq("BREXIT" -> 4L, "Edge" -> 3L, "gamma" -> 2L, "tieA" -> 2L, "tieB" -> 2L)),
+      ("25 seconds", 25000L,
+        Seq("Edge" -> 3L, "BREXIT" -> 2L, "gamma" -> 2L, "tieB" -> 2L, "zeta" -> 2L),
+        Seq("BREXIT" -> 3L, "Edge" -> 3L, "gamma" -> 2L, "tieA" -> 2L, "tieB" -> 2L))))
+  test(s"run() publishes the top 5 of exactly the trailing window ($windowLen / 10 seconds)") {
+    implicit val ctx = spark.sqlContext
+    val slideMs = 10000L
+    val t0 = java.time.Instant.parse("2024-01-01T01:00:00Z").toEpochMilli // a multiple of the slide
+    val start = t0 + slideMs - windowMs // trailing window once the newest event is t0 + 7 s
+    val first = Seq(
+      (t0 + 7000, Seq("BREXIT")),
+      (start, Seq("Edge")),                // just inside
+      (start - 1, Seq("Edge", "zeta")),    // just outside
+      (t0, Seq("Edge", "brexit", "tieB", "gamma", "zeta")),
+      (t0 + 1000, Seq("Edge", "tieA", "tieB", "gamma", "zeta")),
+      (t0 + 2000, Seq("EU", "eu", "Euro", "EUROPA", "europe", "EU", "Eu")),
+      (start - windowMs, Seq.fill(10)("old")))
+    val late = t0 - 120000
+    val second = Seq(
+      (t0 - 5000, Seq("Brexit", "tieA")),  // out of order, within the 1-minute watermark
+      (late, Seq("brexit", "delta")))      // behind the watermark
+    val in = MemoryStream[(String, Timestamp)]
+    val dir = java.nio.file.Files.createTempDirectory("trailing")
+    val path = dir.resolve("analytic.json").toString
+    val q = TweetPipeline.run(spark, in.toDF().toDF("value", "ts"), path,
+      triggerInterval = "0 seconds", windowLen = windowLen, slide = "10 seconds")
+    def feed(events: Seq[(Long, Seq[String])]): Unit = {
+      in.addData(events.map { case (ms, tags) =>
+        (tweetAt("2024-01-01 00:00:00", tags: _*)._1, new Timestamp(ms)) })
+      q.processAllAvailable()
+    }
+    try {
+      feed(first)
+      assert(trailingTop(first, windowMs, slideMs) == after1)
+      assert(publishedItems(path) == after1)
+      feed(second)
+      val watermark = java.time.Instant.parse(q.lastProgress.eventTime.get("watermark"))
+      assert(watermark.toEpochMilli > late, s"event at $late is not behind the watermark $watermark")
+      assert(trailingTop(first ++ second, windowMs, slideMs) == after2)
+      assert(publishedItems(path) == after2)
+    } finally q.stop()
+  }
+
   test("run() removes its health listener when start() throws (no leak across failed runs)") {
     // ADVICE r8: the scoped listener only self-removes on termination of a
     // run it saw start; a start() failure (bad checkpoint scheme here)
