@@ -38,14 +38,15 @@ object Verify {
         System.err.println(s"[verify] status append failed: ${e.getMessage}") }
     selected.foreach { case (name, fn) =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        val result = fn(spark, sfDir)
+        result.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         // Row count by re-reading the just-written file: parquet count()
-        // resolves from footer row-group metadata, so this is one small
-        // Spark job (file listing + footer reads) per query — cheaper
-        // than a pre-write count(), which would recompute the whole
-        // query plan a second time (ADVICE r10).
-        val rows = spark.read.parquet(s"$outDir/$name").count()
+        // resolves from footer row-group metadata — cheaper than a
+        // pre-write count(), which would recompute the whole query plan a
+        // second time (ADVICE r10). Reading with the result's own schema
+        // skips schema inference, which would be a Spark job of its own,
+        // so this is one small job (file listing + footer reads) per query.
+        val rows = spark.read.schema(result.schema).parquet(s"$outDir/$name").count()
         statusAppend(s"""{"q":"$name","ok":true,"rows":$rows}""")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

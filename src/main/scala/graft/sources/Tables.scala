@@ -1,6 +1,8 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver's deterministic parquet tables (TESTDATA.md).
   *
@@ -10,6 +12,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `spark.read.parquet` handles both. Column pruning and predicate pushdown
   * are left to Catalyst; callers must select/filter declaratively so the
   * pushdown reaches the scan.
+  *
+  * Every read goes through [[parquet]], which infers a path's schema once
+  * per file version and parquet conf instead of once per read: inference
+  * is a Spark job of its own, and every query re-reads the same tables.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -18,7 +24,41 @@ object Tables {
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
+
+  /** Schemas Spark inferred, keyed by (qualified path, (name, length, mtime)
+    * of every file under it, the session's parquet SQL confs). A table
+    * rewritten in place or a changed conf is a new key, so it is inferred
+    * again; the oldest keys are dropped past `maxSchemas`.
+    */
+  private type SchemaKey = (String, Vector[(String, Long, Long)], Vector[(String, String)])
+  private val maxSchemas = 64
+  private val schemas = new java.util.LinkedHashMap[SchemaKey, StructType](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[SchemaKey, StructType]): Boolean =
+      size > maxSchemas
+  }
+
+  /** `spark.read.parquet(path)` with the schema Spark inferred on the first
+    * read of this file version under these confs, so the plan is the same
+    * and only the inference job is skipped.
+    */
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(p)
+    val files = fs.listFiles(qualified, true) // a file lists as itself
+    val key: SchemaKey = (qualified.toString,
+      Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sorted,
+      spark.conf.getAll.filter { case (k, _) => k.startsWith("spark.sql.") && k.contains("parquet") }
+        .toVector.sorted)
+    val schema = schemas.synchronized(Option(schemas.get(key))).getOrElse {
+      val inferred = spark.read.parquet(path).schema
+      schemas.synchronized(schemas.put(key, inferred))
+      inferred
+    }
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** `events.ts` arrives in whatever timestamp encoding the data
     * generator's arrow version emitted — TIMESTAMP(NANOS) (which Spark's
@@ -35,7 +75,7 @@ object Tables {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(spark, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))

@@ -7,8 +7,14 @@ import java.nio.file.{Files, Paths}
   * `.explain("formatted")` for every registered query to one file per
   * query, so plan-shape claims (Exchange count, join strategy,
   * PushedFilters/ReadSchema, WholeStageCodegen spans) are checkable
-  * without running Spark. Planning only — nothing is executed, so a
-  * full 172-query dump is seconds, not minutes.
+  * from a file. Most queries are only built and planned, but building a
+  * DataFrame is not always free of Spark jobs: builders that collect a
+  * value or write a persisted index while they build (e.g. the ANN
+  * index queries q140/q144/q163/q164, and the geometry `head()` reads
+  * and resident counts in `Similarity`) execute those jobs here, so a
+  * full 172-query dump takes minutes. Table schemas are inferred once
+  * per file version (`Tables`), so plain table reads add no job after
+  * the first.
   *
   * Usage: PlanDump <sfDir> <outDir> [suffix]
   *   writes <outDir>/<qNN>_<suffix>.txt (suffix defaults to "plan").

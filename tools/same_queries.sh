@@ -6,7 +6,9 @@
 #
 # <parent-checkout> is a second checkout of the repo (e.g. a `git clone`
 # of the parent commit); <sf-dir> is a table directory (see TESTDATA.md);
-# <keys> is a comma-separated list of full query names or qNN prefixes.
+# <keys> is a comma-separated list of full query names or qNN prefixes,
+# or `all` to dump and compare the plan of every registered key (use it
+# for a change that reaches every query, e.g. one in the table loaders).
 # For each checkout it compiles (sbt compile), dumps every key's oracle
 # SQL (SPARK_GRAFT_ONLY=none graft.Verify writes oracle_sql.json without
 # running a query) and the formatted physical plans of <keys>
@@ -34,7 +36,9 @@ dump() { # dump <checkout> <tag>
   echo "$2: $(git -C "$co" rev-parse HEAD)$(git -C "$co" status --porcelain --untracked-files=no | grep -q . && echo ' (uncommitted changes)')"
   JAVA_TOOL_OPTIONS="-Djava.io.tmpdir=$WORK/tmp" SPARK_GRAFT_ONLY=none \
     "$co/tools/run_local.sh" graft.Verify "$SF" "$out/verify" > "$out.log" 2>&1
-  JAVA_TOOL_OPTIONS="-Djava.io.tmpdir=$WORK/tmp" SPARK_GRAFT_ONLY="$KEYS" \
+  local only=(SPARK_GRAFT_ONLY="$KEYS")
+  [ "$KEYS" = all ] && only=(-u SPARK_GRAFT_ONLY)
+  env "${only[@]}" JAVA_TOOL_OPTIONS="-Djava.io.tmpdir=$WORK/tmp" \
     "$co/tools/run_local.sh" graft.tools.PlanDump "$SF" "$out/plans" >> "$out.log" 2>&1
   grep '^\[plandump\]' "$out.log" && planfail=1
   mkdir -p "$out/stripped"
