@@ -44,8 +44,9 @@ object Verify {
         // resolves from footer row-group metadata — cheaper than a
         // pre-write count(), which would recompute the whole query plan a
         // second time (ADVICE r10). Reading with the result's own schema
-        // skips schema inference, which would be a Spark job of its own,
-        // so this is one small job (file listing + footer reads) per query.
+        // skips schema inference, which would be a Spark job of its own;
+        // what is left is the count's two small jobs (with adaptive
+        // execution, the partial counts' stage and the final one).
         val rows = spark.read.schema(result.schema).parquet(s"$outDir/$name").count()
         statusAppend(s"""{"q":"$name","ok":true,"rows":$rows}""")
       } catch { case e: Throwable =>

@@ -12,10 +12,6 @@ import org.apache.spark.sql.types.StructType
   * `spark.read.parquet` handles both. Column pruning and predicate pushdown
   * are left to Catalyst; callers must select/filter declaratively so the
   * pushdown reaches the scan.
-  *
-  * Every read goes through [[parquet]], which infers a path's schema once
-  * per file version and parquet conf instead of once per read: inference
-  * is a Spark job of its own, and every query re-reads the same tables.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -39,8 +35,9 @@ object Tables {
   }
 
   /** `spark.read.parquet(path)` with the schema Spark inferred on the first
-    * read of this file version under these confs, so the plan is the same
-    * and only the inference job is skipped.
+    * read of this file version under these confs: the plan is the same, but
+    * the inference, a Spark job of its own, runs once per table instead of
+    * once per read (every query re-reads the same tables).
     */
   private def parquet(spark: SparkSession, path: String): DataFrame = {
     val p = new Path(path)
