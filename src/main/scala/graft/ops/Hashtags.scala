@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables.t
+import graft.streaming.TweetPipeline.WordBlacklist
 
 /** Driver-checkable batch parity for the tweet/hashtag pipeline
   * (streaming.TweetPipeline — the reference's whole dataflow,
@@ -57,13 +58,14 @@ object Hashtags {
     * one partial-aggregated shuffle on the pair.
     */
   def q127TagCooccurrence(s: SparkSession, dir: String): DataFrame = {
+    val blacklist = WordBlacklist.map(w => s"'$w'").mkString(", ")
     val tags = t(s, dir, "documents")
       .filter(pmod(col("doc_id"), lit(97)) =!= 0)
       .select(col("doc_id"), explode(expr(
-        """array_distinct(transform(
+        s"""array_distinct(transform(
              filter(slice(split(text, ' '), 1, 5),
-                    t -> t rlike '^[A-Za-z0-9_]+$'
-                         AND NOT lower(t) IN ('europe', 'europa', 'eu', 'euro')),
+                    t -> t rlike '^[A-Za-z0-9_]+$$'
+                         AND NOT lower(t) IN ($blacklist)),
              t -> lower(t)))""")).as("tag"))
     tags.as("a").join(tags.as("b"),
         col("a.doc_id") === col("b.doc_id") && col("a.tag") < col("b.tag"))

@@ -5,8 +5,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 /** spark-submit parity with the reference's `SparkApplication.main`
   * (SparkApplication.scala:33-41 config wiring, :109-130 result publication):
-  * env → source → windowed top-5 pipeline → atomic analytic.json, refreshed
-  * per trigger.
+  * env → source → top-5 of the trailing 15 minutes → atomic analytic.json,
+  * refreshed per trigger. The window and its 10 s slide are fixed, as in the
+  * reference (SparkApplication.scala:37, :88).
   *
   * Environment surface (reference's in parentheses):
   *   RESULT_FILENAME   result document path   (same var, default analytic.json)

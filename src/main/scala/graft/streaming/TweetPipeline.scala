@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types._
 
 /** The reference's core capability — top-5 hashtags over a sliding
@@ -69,86 +70,50 @@ object TweetPipeline {
   def batchTop5(tweets: DataFrame, k: Int = 5): DataFrame =
     topK(countTags(extractHashtags(tweets)), k)
 
-  /** Streaming form: sliding event-time window with watermark. Emits one
-    * row per (window, key) — callers slice one window and top-5 it in
-    * foreachBatch (see [[run]]'s append mode).
+  /** The reference's leaderboard shape: a 15-minute window that slides
+    * with its 10 s batch (SparkApplication.scala:37, :88).
     */
-  def windowedCounts(tweets: DataFrame,
-                     windowLen: String = "15 minutes",
-                     slide: String = "10 seconds",
-                     watermark: String = "1 minute"): DataFrame =
-    extractHashtags(tweets)
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen, slide), lower(col("tag")).as("key"))
-      .agg(min(col("tag")).as("hashtag"), count(lit(1)).as("count"))
-
-  /** Duration-literal parser for the two pipeline knobs ("15 minutes",
-    * "10 seconds", "1 hour"). Local, tiny, and fail-fast — the streaming
-    * window syntax Spark itself accepts.
-    */
-  private[streaming] def durationMs(s: String): Long = {
-    val Array(n, unit) = s.trim.split("\\s+")
-    val base = unit.stripSuffix("s") match {
-      case "millisecond" => 1L
-      case "second" => 1000L
-      case "minute" => 60000L
-      case "hour" => 3600000L
-      case other => throw new IllegalArgumentException(s"unsupported unit $other in '$s'")
-    }
-    n.toLong * base
-  }
+  private val WindowMs = 15 * 60 * 1000L
+  private val SlideMs = 10 * 1000L
 
   /** Streaming form of the leaderboard state: one row per (pane, key),
-    * where a pane is a non-overlapping event-time slice `paneMs` long
+    * where a pane is a non-overlapping event-time slice one slide long
     * ("No Pane, No Gain", Li et al., SIGMOD Record 2005). Each hashtag
     * updates exactly one row instead of one per overlapping sliding
-    * window; any window whose bounds are multiples of `paneMs` is a sum of
-    * whole panes. The key is a plain timestamp, not a window struct, so a
-    * checkpoint of [[windowedCounts]] state fails the state-schema check
-    * instead of being read back as panes. It carries no watermark
-    * metadata, so no row is dropped as late: an event behind the
-    * watermark still counts, as it did in the trailing sliding window,
-    * whose end is always past the watermark.
+    * window, and the trailing window is a sum of whole panes. The key is
+    * a plain timestamp, not a window struct, so a checkpoint of
+    * sliding-window state fails the state-schema check instead of being
+    * read back as panes. It carries no watermark metadata, so no row is
+    * dropped as late: an event behind the watermark still counts, as it
+    * did in the trailing sliding window, whose end is always past the
+    * watermark.
     */
-  private def paneCounts(tweets: DataFrame, paneMs: Long): DataFrame = {
+  private def paneCounts(tweets: DataFrame): DataFrame = {
     val micros = unix_micros(col("ts"))
     extractHashtags(tweets)
       .withWatermark("ts", "1 minute")
-      .groupBy(timestamp_micros(micros - pmod(micros, lit(paneMs * 1000L))).as("pane"),
+      .groupBy(timestamp_micros(micros - pmod(micros, lit(SlideMs * 1000L))).as("pane"),
         lower(col("tag")).as("key"))
       .agg(min(col("tag")).as("hashtag"), count(lit(1)).as("count"))
   }
 
   /** Run the streaming pipeline end-to-end: parse → per-pane counts →
-    * per-batch top-5 of the TRAILING full-length window → atomic JSON doc.
+    * per-batch top-5 of the TRAILING 15-minute window → atomic JSON doc.
     *
     * "Trailing" matches the reference's dashboard semantics
     * (reduceByKeyAndWindow over the last 15 minutes,
-    * SparkApplication.scala:88): the published window is the one covering
-    * the `windowLen` up to the newest slide boundary, i.e.
-    * [S + slide - windowLen, S + slide) where S is the newest event's time
-    * rounded down to a multiple of `slide` — NOT the window starting at S,
-    * which has only just opened and so contains only the newest slide of
-    * events.
+    * SparkApplication.scala:88): the published window is the 15 minutes
+    * up to the end of the newest pane, i.e. [P + 10 s - 15 min, P + 10 s)
+    * where P is the newest pane's start — NOT the window starting at P,
+    * which has only just opened and so contains only the newest pane.
     *
-    * Complete mode (the default) keeps [[paneCounts]] with panes
-    * gcd(windowLen, slide) long — 10 s for 15 min / 10 s — and sums the
-    * panes of the trailing window per key at publish time. Complete mode
-    * never evicts state, so the state grows with the event-time span the
-    * query has seen, not with |windows in 15 min| × |distinct tags|: one
-    * row per (pane, tag) seen, where sliding windows kept one per
-    * (window, tag), about windowLen / slide times as many. A checkpoint
-    * written before panes (sliding-window state) cannot be resumed.
-    *
-    * Append mode (`outputMode = "append"`) is the production shape for
-    * unbounded key cardinality: each window's counts reach the sink
-    * exactly once when the watermark closes it, state is EVICTED rather
-    * than retained forever, and the published document is the top-5 of
-    * the newest CLOSED window — the standings lag by the watermark, the
-    * price of bounded state. It keeps the sliding [[windowedCounts]]
-    * state, because a closed window must be emitted whole: the panes of
-    * a window close at different times, so they cannot be summed in the
-    * sink batch that closes it.
+    * The query runs in complete mode: every trigger hands the whole
+    * [[paneCounts]] state to the sink, which sums the panes of the
+    * trailing window per key. Complete mode never evicts state, so the
+    * state grows with the event-time span the query has seen: one row per
+    * (pane, tag) seen, where sliding windows kept one per (window, tag),
+    * 90 times as many. A checkpoint written before panes (sliding-window
+    * state) cannot be resumed.
     *
     * Observability on by default (VERDICT r7 item 8): every run attaches
     * [[StreamHealth.listener]] scoped to THIS query, appending one JSONL
@@ -161,26 +126,15 @@ object TweetPipeline {
     */
   def run(spark: SparkSession, tweets: DataFrame, resultPath: String,
           triggerInterval: String = "10 seconds",
-          checkpointDir: Option[String] = None,
-          windowLen: String = "15 minutes",
-          slide: String = "10 seconds",
-          outputMode: String = "complete"): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(outputMode == "complete" || outputMode == "append",
-      s"outputMode must be 'complete' or 'append', got '$outputMode'")
-    val windowMs = durationMs(windowLen)
-    val slideMs = durationMs(slide)
-    val complete = outputMode == "complete"
+          checkpointDir: Option[String] = None): StreamingQuery = {
     // Unique name so the health listener can scope to this query's
     // progress events before the query starts (ids only exist after).
     val queryName = s"tweet-pipeline-${java.util.UUID.randomUUID().toString.take(8)}"
-    val state =
-      if (complete) paneCounts(tweets, BigInt(windowMs).gcd(BigInt(slideMs)).toLong)
-      else windowedCounts(tweets, windowLen, slide)
-    val writer = state
+    val writer = paneCounts(tweets)
       .writeStream
       .queryName(queryName)
-      .outputMode(outputMode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerInterval))
+      .outputMode("complete")
+      .trigger(Trigger.ProcessingTime(triggerInterval))
     checkpointDir.foreach(writer.option("checkpointLocation", _))
     val healthEnabled =
       spark.conf.getOption("graft.stream.health.enabled").forall(_.toBoolean)
@@ -188,8 +142,8 @@ object TweetPipeline {
       val path = spark.conf.getOption("graft.stream.health.path")
         .getOrElse(resultPath + ".health.jsonl")
       val inner = StreamHealth.listener(path)
-      val scoped = new org.apache.spark.sql.streaming.StreamingQueryListener {
-        import org.apache.spark.sql.streaming.StreamingQueryListener._
+      val scoped = new StreamingQueryListener {
+        import StreamingQueryListener._
         @volatile private var runId: java.util.UUID = null
         override def onQueryStarted(e: QueryStartedEvent): Unit =
           if (e.name == queryName) runId = e.runId
@@ -206,44 +160,29 @@ object TweetPipeline {
     // on spark.streams for the session's lifetime — repeated run() calls
     // would accumulate leaked listeners. Remove it on the failure path and
     // rethrow; a successful start hands cleanup to onQueryTerminated.
-    def startOrCleanup(
-        w: org.apache.spark.sql.streaming.DataStreamWriter[_]): org.apache.spark.sql.streaming.StreamingQuery =
-      try w.start()
-      catch { case e: Throwable =>
-        healthListener.foreach(spark.streams.removeListener)
-        throw e
-      }
-    startOrCleanup(writer
+    try writer
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // The batch is a LogicalRDD over the stateful stage's output, so
         // every action on it would run that stage (and its state-store
         // update) again: the two actions below share one cached copy.
         batch.persist()
         try {
-          val standings = if (complete) {
-            // Publish the TRAILING full-length window: the panes from
-            // S + slide - windowLen on, summed per key.
-            val latest = batch.select(max(col("pane"))).first()
-            if (latest.isNullAt(0)) None else {
-              val newest = Math.floorDiv(latest.getTimestamp(0).getTime, slideMs) * slideMs
-              Some(batch.filter(col("pane") >= new java.sql.Timestamp(newest + slideMs - windowMs))
-                .groupBy(col("key"))
-                .agg(min(col("hashtag")).as("hashtag"), sum(col("count")).as("count")))
-            }
-          } else {
-            // Append batch = windows the watermark just closed (each exactly
-            // once). Publish the newest closed window's final standings.
-            val latest = batch.select(max(col("window.end"))).first()
-            if (latest.isNullAt(0)) None
-            else Some(batch.filter(col("window.end") === latest.getTimestamp(0)))
-          }
-          standings.foreach { counts =>
+          val latest = batch.select(max(col("pane"))).first()
+          if (!latest.isNullAt(0)) {
+            val start = new java.sql.Timestamp(latest.getTimestamp(0).getTime + SlideMs - WindowMs)
+            val counts = batch.filter(col("pane") >= start)
+              .groupBy(col("key"))
+              .agg(min(col("hashtag")).as("hashtag"), sum(col("count")).as("count"))
             val rows = topK(counts.select(col("hashtag"), col("count")), 5).collect()
             AnalyticSink.write(resultPath, rows.map(r => (r.getString(0), r.getLong(1))).toSeq)
           }
         } finally batch.unpersist()
       }
-    )
+      .start()
+    catch { case e: Throwable =>
+      healthListener.foreach(spark.streams.removeListener)
+      throw e
+    }
   }
 }
 

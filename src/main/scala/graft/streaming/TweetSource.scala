@@ -23,8 +23,10 @@ import org.apache.spark.sql.types._
   *   - `file`   — JSON-lines directory, the replayable stand-in used by every
   *     spec and the driver fixtures ({"value": "<tweet json>", "ts": ...}).
   *   - `rate`   — self-ticking synthetic tweets for smoke runs with no data.
-  *   - `memory` — in-process MemoryStream for tests ([[memory]] returns the
-  *     handle to push rows through).
+  *
+  * [[memory]] is not a `TWEET_SOURCE` kind: a MemoryStream is fed through
+  * the handle it returns, which only in-process callers (specs, benches)
+  * hold, so the app started from the environment would never publish.
   */
 object TweetSource {
 
@@ -38,9 +40,9 @@ object TweetSource {
       groupId: String = "tweet",
       rowsPerSecond: Int = 10)
 
-  /** Environment surface (TWEET_SOURCE=file|rate|kafka|memory, plus the
-    * kafka knobs). Takes a lookup function instead of sys.env so specs can
-    * inject maps.
+  /** Environment surface: TWEET_SOURCE=file|rate|kafka, TWEET_SOURCE_PATH,
+    * the KAFKA_* knobs and RATE_ROWS_PER_SECOND. Takes a lookup function
+    * instead of sys.env so specs can inject maps.
     */
   def fromEnv(env: String => Option[String]): Config = {
     val d = Config()
@@ -63,9 +65,8 @@ object TweetSource {
     case "file"   => file(spark, cfg.path)
     case "rate"   => rate(spark, cfg.rowsPerSecond)
     case "kafka"  => kafka(spark, cfg)
-    case "memory" => memory(spark)._2
     case other => throw new IllegalArgumentException(
-      s"unknown TWEET_SOURCE '$other' (expected file|rate|kafka|memory)")
+      s"unknown TWEET_SOURCE '$other' (expected file|rate|kafka)")
   }
 
   /** JSON-lines directory source; new files are discovered per trigger. */
@@ -102,8 +103,8 @@ object TweetSource {
           lit(""""}]}}""")).as("value"),
         col("timestamp").as("ts"))
 
-  /** Test-facing in-process source: push (tweetJson, ts) pairs through the
-    * returned MemoryStream handle.
+  /** In-process source for specs and benches: push (tweetJson, ts) pairs
+    * through the returned MemoryStream handle.
     */
   def memory(spark: SparkSession): (MemoryStream[(String, java.sql.Timestamp)], DataFrame) = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -89,14 +89,13 @@ class SourcesSpec extends SparkSpec {
       """{"value": "{\"entities\":{\"hashtags\":[{\"text\":\"Brexit\"}]}}", "ts": "2024-01-01T00:01:00.000Z"}""" + "\n")
     val stream = spark.readStream.schema(schema).json(dir)
     assert(stream.isStreaming)
-    val counts = graft.streaming.TweetPipeline.windowedCounts(stream)
-    val q = counts.writeStream.format("memory").queryName("file_src_counts")
-      .outputMode("complete").start()
+    val resultPath = tmp("stream_out") + "/analytic.json"
+    val q = graft.streaming.TweetPipeline.run(spark, stream, resultPath,
+      triggerInterval = "0 seconds")
     try {
       q.processAllAvailable()
-      val rows = spark.table("file_src_counts")
-        .select("hashtag", "count").as[(String, Long)].collect().toSet
-      assert(rows.contains(("Brexit", 1L)))
+      val doc = java.nio.file.Files.readString(java.nio.file.Paths.get(resultPath))
+      assert(doc.contains(""""items":[{"hashtag":"Brexit","count":1}]"""), doc)
     } finally q.stop()
   }
 }

@@ -7,8 +7,9 @@ import graft.streaming.{StatefulOps, TweetPipeline}
 import graft.streaming.StatefulOps.Event
 
 /** Streaming semantics via MemoryStream + processAllAvailable
-  * (SURVEY.md §5 item 2): sliding-window contents, incremental updates,
-  * stateful sessionization, watermark-bounded dedup.
+  * (SURVEY.md §5 item 2): the tweet pipeline's pane state and its
+  * trailing 15-minute top 5, incremental updates, stateful
+  * sessionization, watermark-bounded dedup.
   */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -28,20 +29,15 @@ class StreamingSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[(String, Timestamp)]
-    val counts = TweetPipeline.windowedCounts(
-      in.toDF().toDF("value", "ts"), windowLen = "15 minutes", slide = "5 minutes")
-    val q = counts.writeStream.format("memory").queryName("rocks_counts")
-      .outputMode("complete").start()
+    val path = java.nio.file.Files.createTempDirectory("rocks_run").resolve("analytic.json").toString
+    val q = TweetPipeline.run(spark, in.toDF().toDF("value", "ts"), path,
+      triggerInterval = "0 seconds")
     try {
       in.addData(tweetAt("2024-01-01 00:01:00", "A", "B"))
       q.processAllAvailable()
       in.addData(tweetAt("2024-01-01 00:06:00", "A"))
       q.processAllAvailable()
-      val rows = spark.table("rocks_counts")
-        .select(col("window.start").cast("string"), col("key"), col("count"))
-        .as[(String, String, Long)].collect().toSet
-      assert(rows.contains(("2024-01-01 00:00:00", "a", 2L)))
-      assert(rows.contains(("2024-01-01 00:00:00", "b", 1L)))
+      assert(publishedItems(path) == Seq("A" -> 2L, "B" -> 1L))
       // The provider must actually be RocksDB, not a silent fallback.
       val usedRocks = q.lastProgress != null &&
         q.lastProgress.stateOperators.nonEmpty &&
@@ -57,91 +53,25 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("sliding 15-minute window counts accumulate across micro-batches") {
+  test("run() keeps one state row per (10 s pane, lower-cased tag)") {
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[(String, Timestamp)]
-    val counts = TweetPipeline.windowedCounts(
-      in.toDF().toDF("value", "ts"), windowLen = "15 minutes", slide = "5 minutes")
-    val q = counts.writeStream.format("memory").queryName("win_counts")
-      .outputMode("complete").start()
+    val path = java.nio.file.Files.createTempDirectory("panes").resolve("analytic.json").toString
+    val q = TweetPipeline.run(spark, in.toDF().toDF("value", "ts"), path,
+      triggerInterval = "0 seconds")
     try {
-      in.addData(tweetAt("2024-01-01 00:01:00", "A", "B"))
+      in.addData(tweetAt("2024-01-01 00:00:01", "A", "a", "B"),
+        tweetAt("2024-01-01 00:00:12", "A"))
       q.processAllAvailable()
-      in.addData(tweetAt("2024-01-01 00:06:00", "A"))
+      in.addData(tweetAt("2024-01-01 00:00:15", "c"), tweetAt("2024-01-01 00:00:19", "a"))
       q.processAllAvailable()
-      val rows = spark.table("win_counts")
-        .select(col("window.start").cast("string"), col("key"), col("count"))
-        .as[(String, String, Long)].collect().toSet
-      // 00:01 event lands in slides starting 23:50, 23:55, 00:00; 00:06 in 23:55..00:05.
-      assert(rows.contains(("2024-01-01 00:00:00", "a", 2L))) // both events
-      assert(rows.contains(("2024-01-01 00:05:00", "a", 1L))) // only the 00:06 event
-      assert(rows.contains(("2024-01-01 00:00:00", "b", 1L)))
-      assert(rows.contains(("2023-12-31 23:55:00", "a", 2L)))
-    } finally q.stop()
-  }
-
-  test("append mode emits each window exactly once, after the watermark closes it") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[(String, Timestamp)]
-    val counts = TweetPipeline.windowedCounts(
-      in.toDF().toDF("value", "ts"),
-      windowLen = "5 minutes", slide = "5 minutes", watermark = "1 minute")
-    val q = counts.writeStream.format("memory").queryName("closed_windows")
-      .outputMode("append").start()
-    try {
-      in.addData(tweetAt("2024-01-01 00:01:00", "A"))
-      q.processAllAvailable()
-      // Window [00:00, 00:05) not closed yet -> nothing emitted.
-      assert(spark.table("closed_windows").count() == 0)
-      // Advance the watermark past 00:05 + 1 min.
-      in.addData(tweetAt("2024-01-01 00:10:00", "B"))
-      q.processAllAvailable()
-      val rows = spark.table("closed_windows")
-        .select(col("window.start").cast("string"), col("key"), col("count"))
-        .as[(String, String, Long)].collect().toSet
-      assert(rows == Set(("2024-01-01 00:00:00", "a", 1L))) // exactly once, final
-    } finally q.stop()
-  }
-
-  test("run() in append mode publishes the newest CLOSED window's top-5 (bounded state)") {
-    // The production variant of the dashboard (VERDICT r4 item 3): append +
-    // watermark eviction instead of complete-mode state re-emission. The
-    // published document comes from a window the watermark has CLOSED, so
-    // its standings are final — and nothing is published while all windows
-    // are still open.
-    implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("append-run").toString
-    val resultPath = s"$dir/analytic.json"
-    val in = MemoryStream[(String, Timestamp)]
-    val q = TweetPipeline.run(spark, in.toDF().toDF("value", "ts"), resultPath,
-      triggerInterval = "100 milliseconds",
-      windowLen = "5 minutes", slide = "5 minutes", outputMode = "append")
-    try {
-      in.addData(tweetAt("2024-01-01 00:01:00", "A", "B"),
-        tweetAt("2024-01-01 00:02:00", "A"))
-      q.processAllAvailable()
-      // Window [00:00, 00:05) still open -> nothing published.
-      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(resultPath)),
-        "append mode must not publish an open window")
-      // Advance the watermark past 00:05 + 1 min -> the window closes and
-      // its FINAL standings are published exactly once.
-      in.addData(tweetAt("2024-01-01 00:10:00", "zzz"))
-      q.processAllAvailable()
-      val doc = java.nio.file.Files.readString(java.nio.file.Paths.get(resultPath))
-      assert(doc.contains(""""items":[{"hashtag":"A","count":2},{"hashtag":"B","count":1}]"""), doc)
-      assert(!doc.contains("zzz"), s"open-window state leaked into the publish: $doc")
-      // run() ships with StreamHealth on by default (VERDICT r7 item 8):
-      // the per-batch progress JSONL must appear next to the result doc.
-      // Listener delivery is async on the listener bus — poll briefly.
-      val health = java.nio.file.Paths.get(resultPath + ".health.jsonl")
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (!(java.nio.file.Files.exists(health) &&
-               java.nio.file.Files.size(health) > 0) &&
-             System.nanoTime() < deadline) Thread.sleep(50)
-      assert(java.nio.file.Files.exists(health) && java.nio.file.Files.size(health) > 0,
-        "default StreamHealth JSONL missing for run()")
-      val line = java.nio.file.Files.readAllLines(health).get(0)
-      assert(line.contains("\"batchId\""), line)
+      // (00:00:00, a), (00:00:00, b), (00:00:10, a), (00:00:10, c): 5 s
+      // panes would hold 5 rows, and a sliding 15-minute window every 10 s
+      // would hold each tag in 90 rows.
+      val ops = q.lastProgress.stateOperators
+      assert(ops.length == 1, q.lastProgress.json)
+      assert(ops(0).numRowsTotal == 4L, q.lastProgress.json)
+      assert(publishedItems(path) == Seq("A" -> 4L, "B" -> 1L, "c" -> 1L))
     } finally q.stop()
   }
 
@@ -155,9 +85,10 @@ class StreamingSpec extends SparkSpec {
     val hl = graft.streaming.StreamHealth.listener(logPath)
     spark.streams.addListener(hl)
     val in = MemoryStream[(String, Timestamp)]
-    val counts = TweetPipeline.windowedCounts(
-      in.toDF().toDF("value", "ts"),
-      windowLen = "5 minutes", slide = "5 minutes", watermark = "1 minute")
+    val counts = TweetPipeline.extractHashtags(in.toDF().toDF("value", "ts"))
+      .withWatermark("ts", "1 minute")
+      .groupBy(window(col("ts"), "5 minutes"), lower(col("tag")).as("key"))
+      .agg(count(lit(1)).as("count"))
     val q = counts.writeStream.format("memory").queryName("health_counts")
       .outputMode("append").start()
     try {
@@ -445,6 +376,18 @@ class StreamingSpec extends SparkSpec {
       val content = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
       assert(content.contains(""""hashtag":"Brexit","count":2"""))
       assert(content.contains(""""datetime":"""))
+      // run() ships with StreamHealth on by default (VERDICT r7 item 8):
+      // the per-batch progress JSONL must appear next to the result doc.
+      // Listener delivery is async on the listener bus — poll briefly.
+      val health = java.nio.file.Paths.get(path + ".health.jsonl")
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!(java.nio.file.Files.exists(health) &&
+               java.nio.file.Files.size(health) > 0) &&
+             System.nanoTime() < deadline) Thread.sleep(50)
+      assert(java.nio.file.Files.exists(health) && java.nio.file.Files.size(health) > 0,
+        "default StreamHealth JSONL missing for run()")
+      val line = java.nio.file.Files.readAllLines(health).get(0)
+      assert(line.contains("\"batchId\""), line)
     } finally q.stop()
   }
 
@@ -471,18 +414,12 @@ class StreamingSpec extends SparkSpec {
       .findAllMatchIn(java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
       .map(m => (m.group(1), m.group(2).toLong)).toSeq
 
-  // 25 s / 10 s is not a multiple of its slide: its panes are 5 s long and
-  // its trailing window starts 15 s before the newest slide boundary.
-  for ((windowLen, windowMs, after1, after2) <- Seq(
-      ("15 minutes", 900000L,
-        Seq("Edge" -> 3L, "BREXIT" -> 2L, "gamma" -> 2L, "tieB" -> 2L, "zeta" -> 2L),
-        Seq("BREXIT" -> 4L, "Edge" -> 3L, "gamma" -> 2L, "tieA" -> 2L, "tieB" -> 2L)),
-      ("25 seconds", 25000L,
-        Seq("Edge" -> 3L, "BREXIT" -> 2L, "gamma" -> 2L, "tieB" -> 2L, "zeta" -> 2L),
-        Seq("BREXIT" -> 3L, "Edge" -> 3L, "gamma" -> 2L, "tieA" -> 2L, "tieB" -> 2L))))
-  test(s"run() publishes the top 5 of exactly the trailing window ($windowLen / 10 seconds)") {
+  test("run() publishes the top 5 of exactly the trailing window (15 minutes / 10 seconds)") {
     implicit val ctx = spark.sqlContext
+    val windowMs = 900000L
     val slideMs = 10000L
+    val after1 = Seq("Edge" -> 3L, "BREXIT" -> 2L, "gamma" -> 2L, "tieB" -> 2L, "zeta" -> 2L)
+    val after2 = Seq("BREXIT" -> 4L, "Edge" -> 3L, "gamma" -> 2L, "tieA" -> 2L, "tieB" -> 2L)
     val t0 = java.time.Instant.parse("2024-01-01T01:00:00Z").toEpochMilli // a multiple of the slide
     val start = t0 + slideMs - windowMs // trailing window once the newest event is t0 + 7 s
     val first = Seq(
@@ -501,7 +438,7 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("trailing")
     val path = dir.resolve("analytic.json").toString
     val q = TweetPipeline.run(spark, in.toDF().toDF("value", "ts"), path,
-      triggerInterval = "0 seconds", windowLen = windowLen, slide = "10 seconds")
+      triggerInterval = "0 seconds")
     def feed(events: Seq[(Long, Seq[String])]): Unit = {
       in.addData(events.map { case (ms, tags) =>
         (tweetAt("2024-01-01 00:00:00", tags: _*)._1, new Timestamp(ms)) })
