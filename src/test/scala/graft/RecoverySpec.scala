@@ -50,7 +50,8 @@ class RecoverySpec extends SparkSpec {
       .resolve("analytic.json").toString
     writeTweet(srcDir, "batch0.json", "2024-01-01T00:01:00.000Z", "Brexit")
     // The sliding-window state that run() kept before its pane layout.
-    val old = graft.streaming.TweetPipeline.extractHashtags(spark.readStream.schema(schema).json(srcDir))
+    val old = graft.streaming.TweetPipeline
+      .extractHashtags(spark.readStream.schema(schema).json(srcDir))
       .withWatermark("ts", "1 minute")
       .groupBy(window(col("ts"), "15 minutes", "10 seconds"), lower(col("tag")).as("key"))
       .agg(min(col("tag")).as("hashtag"), count(lit(1)).as("count"))

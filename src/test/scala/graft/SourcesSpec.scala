@@ -9,7 +9,6 @@ import org.apache.spark.sql.types._
   * paths a 100 TB deployment uses, minus scale.
   */
 class SourcesSpec extends SparkSpec {
-  import spark.implicits._
 
   private def tmp(prefix: String) =
     java.nio.file.Files.createTempDirectory(prefix).toString
