@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
@@ -71,23 +72,30 @@ object StreamHealth {
   def droppedByWatermark(q: StreamingQuery): Long =
     observations(q).flatMap(_.dropped_by_watermark).sum
 
+  /** A health log moves to `<path>.1` before an append would take it past
+    * this size, so a long-running query keeps at most two logs of 4 MiB.
+    */
+  private val MaxLogBytes = 4L * 1024 * 1024
+
   /** Push-mode surface: append one JSONL line per progress event to
     * `path`. Register with `spark.streams.addListener(...)`; remove with
     * `removeListener` when done. Uses the engine's own `progress.json()`
     * rendering (prettyJson minus whitespace), so every metric the engine
     * reports — not just the columns [[frame]] projects — lands in the
-    * log.
+    * log. Before an append that would take the file past 4 MiB, the file
+    * moves to `<path>.1`, replacing the older one.
     */
   def listener(path: String): StreamingQueryListener = new StreamingQueryListener {
     override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
     override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
       try {
-        val p = java.nio.file.Paths.get(path)
-        if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-        java.nio.file.Files.write(p, (e.progress.json + "\n").getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
+        val p = Paths.get(path)
+        if (p.getParent != null) Files.createDirectories(p.getParent)
+        val line = (e.progress.json + "\n").getBytes("UTF-8")
+        if (Files.exists(p) && Files.size(p) + line.length > MaxLogBytes)
+          Files.move(p, Paths.get(path + ".1"), StandardCopyOption.REPLACE_EXISTING)
+        Files.write(p, line, StandardOpenOption.CREATE, StandardOpenOption.APPEND)
       } catch { case ex: Throwable =>
         // Observability must never kill the query it observes.
         System.err.println(s"[stream-health] append failed: ${ex.getMessage}")

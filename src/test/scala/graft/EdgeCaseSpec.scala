@@ -9,7 +9,7 @@ class EdgeCaseSpec extends SparkSpec {
   import spark.implicits._
 
   private def docsDir(rows: (Long, String)*): String = {
-    val dir = java.nio.file.Files.createTempDirectory("edge").toString
+    val dir = tempDir("edge").toString
     rows.toSeq.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")).cast("long"))

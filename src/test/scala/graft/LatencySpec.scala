@@ -25,7 +25,7 @@ class LatencySpec extends SparkSpec {
 
   test("steady-state event-to-published-file latency beats the 10 s refresh budget") {
     implicit val ctx = spark.sqlContext
-    val dir = Files.createTempDirectory("latency").toString
+    val dir = tempDir("latency").toString
     val resultPath = s"$dir/analytic.json"
     val in = MemoryStream[(String, Timestamp)]
     val q = TweetPipeline.run(spark, in.toDF().toDF("value", "ts"), resultPath,

@@ -25,9 +25,9 @@ class RecoverySpec extends SparkSpec {
       resultPath, triggerInterval = "0 seconds", checkpointDir = Some(ckpt))
 
   test("run() resumes from its checkpoint: events before and after a restart count once") {
-    val srcDir = java.nio.file.Files.createTempDirectory("recov_run_src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("recov_run_ckpt").toString
-    val resultPath = java.nio.file.Files.createTempDirectory("recov_run_out")
+    val srcDir = tempDir("recov_run_src").toString
+    val ckpt = tempDir("recov_run_ckpt").toString
+    val resultPath = tempDir("recov_run_out")
       .resolve("analytic.json").toString
     writeTweet(srcDir, "batch0.json", "2024-01-01T00:01:00.000Z", "Brexit", "Remain")
     val q1 = runPipeline(srcDir, resultPath, ckpt)
@@ -44,9 +44,9 @@ class RecoverySpec extends SparkSpec {
   }
 
   test("run() refuses a checkpoint of sliding-window state and publishes nothing") {
-    val srcDir = java.nio.file.Files.createTempDirectory("recov_old_src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("recov_old_ckpt").toString
-    val resultPath = java.nio.file.Files.createTempDirectory("recov_old_out")
+    val srcDir = tempDir("recov_old_src").toString
+    val ckpt = tempDir("recov_old_ckpt").toString
+    val resultPath = tempDir("recov_old_out")
       .resolve("analytic.json").toString
     writeTweet(srcDir, "batch0.json", "2024-01-01T00:01:00.000Z", "Brexit")
     // The sliding-window state that run() kept before its pane layout.

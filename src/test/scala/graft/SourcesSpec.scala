@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
 class SourcesSpec extends SparkSpec {
 
   private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   test("csv round-trip preserves schema and values (header + explicit schema)") {
     val dir = tmp("csv") + "/nation"

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -18,8 +21,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val sfDir = "/root/testdata/sf0.001"
 
+  private val tempDirs = new ConcurrentLinkedQueue[Path]()
+
+  /** A new temporary directory, deleted with its contents when the suite ends. */
+  def tempDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.add(dir)
+    dir
+  }
+
   override def afterAll(): Unit = {
     // Session is shared across suites in one JVM (sbt forks once); don't stop.
-    super.afterAll()
+    try tempDirs.forEach(dir => FileUtils.deleteQuietly(dir.toFile))
+    finally super.afterAll()
   }
 }

@@ -1,8 +1,11 @@
 package graft
 
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 import graft.streaming.{StatefulOps, TweetPipeline}
 import graft.streaming.StatefulOps.Event
 
@@ -29,7 +32,7 @@ class StreamingSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[(String, Timestamp)]
-    val path = java.nio.file.Files.createTempDirectory("rocks_run").resolve("analytic.json").toString
+    val path = tempDir("rocks_run").resolve("analytic.json").toString
     val q = TweetPipeline.run(spark, in.toDF().toDF("value", "ts"), path,
       triggerInterval = "0 seconds")
     try {
@@ -56,7 +59,7 @@ class StreamingSpec extends SparkSpec {
   test("run() keeps one state row per (10 s pane, lower-cased tag)") {
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[(String, Timestamp)]
-    val path = java.nio.file.Files.createTempDirectory("panes").resolve("analytic.json").toString
+    val path = tempDir("panes").resolve("analytic.json").toString
     val q = TweetPipeline.run(spark, in.toDF().toDF("value", "ts"), path,
       triggerInterval = "0 seconds")
     try {
@@ -80,7 +83,7 @@ class StreamingSpec extends SparkSpec {
     // plant events BEHIND an advanced watermark and assert the monitor
     // frame reports exactly them, alongside non-trivial state gauges.
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("stream-health").toString
+    val dir = tempDir("stream-health").toString
     val logPath = s"$dir/progress.jsonl"
     val hl = graft.streaming.StreamHealth.listener(logPath)
     spark.streams.addListener(hl)
@@ -196,8 +199,8 @@ class StreamingSpec extends SparkSpec {
 
   test("heavy-hitters monitor: stream report ⊇ exact heavy set, overestimates only, exactly-once replay") {
     implicit val ctx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("hh-monitor").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("hh-ckpt").toString
+    val root = tempDir("hh-monitor").toString
+    val ckpt = tempDir("hh-ckpt").toString
     val in = MemoryStream[String]
     val q = graft.streaming.HeavyHitters.monitor(
       in.toDF().toDF("tok"), root, ckpt, ratio = 10, k = 10)
@@ -366,7 +369,7 @@ class StreamingSpec extends SparkSpec {
   test("end-to-end streaming pipeline writes the analytic.json document") {
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[(String, Timestamp)]
-    val dir = java.nio.file.Files.createTempDirectory("stream_sink")
+    val dir = tempDir("stream_sink")
     val path = dir.resolve("analytic.json").toString
     val q = TweetPipeline.run(spark, in.toDF().toDF("value", "ts"), path,
       triggerInterval = "0 seconds")
@@ -435,7 +438,7 @@ class StreamingSpec extends SparkSpec {
       (t0 - 5000, Seq("Brexit", "tieA")),  // out of order, within the 1-minute watermark
       (late, Seq("brexit", "delta")))      // behind the watermark
     val in = MemoryStream[(String, Timestamp)]
-    val dir = java.nio.file.Files.createTempDirectory("trailing")
+    val dir = tempDir("trailing")
     val path = dir.resolve("analytic.json").toString
     val q = TweetPipeline.run(spark, in.toDF().toDF("value", "ts"), path,
       triggerInterval = "0 seconds")
@@ -456,6 +459,82 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("run() runs a trigger as one Spark job with at most one input task per core") {
+    implicit val ctx = spark.sqlContext
+    val in = MemoryStream[(String, Timestamp)]
+    // Eight blocks before the start: the first trigger reads all of them,
+    // and the memory source plans one partition per block.
+    (1 to 8).foreach(i => in.addData(tweetAt(f"2024-01-01 00:00:$i%02d", s"t$i")))
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val sentinel = s"one-job-${java.util.UUID.randomUUID()}"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e)
+    }
+    def prop(e: SparkListenerJobStart, k: String) = Option(e.properties).map(_.getProperty(k)).orNull
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val path = tempDir("one_job").resolve("analytic.json").toString
+    val q = TweetPipeline.run(spark, in.toDF().toDF("value", "ts"), path,
+      triggerInterval = "0 seconds")
+    try {
+      q.processAllAvailable()
+      assert(publishedItems(path) == (1 to 5).map(i => s"t$i" -> 1L))
+      // The listener sees events in order: once it has seen the sentinel
+      // job, it has seen every job of the trigger.
+      sc.setJobGroup(sentinel, "StreamingSpec sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!jobs.asScala.exists(prop(_, "spark.jobGroup.id") == sentinel) &&
+             System.nanoTime() < deadline) Thread.sleep(10)
+      val batch0 = jobs.asScala.filter(j => prop(j, "sql.streaming.queryId") == q.id.toString &&
+        prop(j, "streaming.sql.batchId") == "0").toSeq
+      val jobIds = batch0.map(_.jobId)
+      val firstStageTasks = batch0.flatMap(_.stageInfos).minBy(_.stageId).numTasks
+      val cores = sc.defaultParallelism
+      assert(jobIds.size == 1, s"jobs of batch 0: $jobIds; $firstStageTasks tasks in the first stage")
+      assert(firstStageTasks <= cores, s"$firstStageTasks tasks in the first stage, $cores cores")
+    } finally {
+      q.stop()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("StreamHealth.listener moves a log that an append would take past 4 MiB to <path>.1") {
+    implicit val ctx = spark.sqlContext
+    val log = tempDir("health_rotate").resolve("health.jsonl")
+    val rotated = java.nio.file.Paths.get(s"$log.1")
+    java.nio.file.Files.writeString(rotated, "an older log\n")
+    val full = Array.fill[Byte](4 * 1024 * 1024)('x'.toByte)
+    java.nio.file.Files.write(log, full)
+    val name = s"health_rotate_${java.util.UUID.randomUUID().toString.take(8)}"
+    val inner = graft.streaming.StreamHealth.listener(log.toString)
+    val scoped = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.name == name) inner.onQueryProgress(e)
+    }
+    spark.streams.addListener(scoped)
+    val in = MemoryStream[Int]
+    in.addData(1, 2, 3)
+    // One batch, then the query ends: exactly one progress event.
+    val q = in.toDF().writeStream.format("memory").queryName(name)
+      .trigger(Trigger.AvailableNow()).start()
+    try {
+      q.awaitTermination()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!(java.nio.file.Files.exists(log) && java.nio.file.Files.size(log) < full.length) &&
+             System.nanoTime() < deadline) Thread.sleep(10)
+      assert(java.nio.file.Files.readAllBytes(rotated).sameElements(full))
+      val lines = java.nio.file.Files.readAllLines(log).asScala
+      assert(lines.size == 1 && lines.head.contains("\"batchId\":0"), lines.mkString("\n"))
+    } finally {
+      q.stop()
+      spark.streams.removeListener(scoped)
+    }
+  }
+
   test("run() removes its health listener when start() throws (no leak across failed runs)") {
     // ADVICE r8: the scoped listener only self-removes on termination of a
     // run it saw start; a start() failure (bad checkpoint scheme here)
@@ -463,7 +542,7 @@ class StreamingSpec extends SparkSpec {
     // run() calls would accumulate leaked listeners.
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[(String, Timestamp)]
-    val dir = java.nio.file.Files.createTempDirectory("fail_start")
+    val dir = tempDir("fail_start")
     val before = spark.streams.listListeners().length
     intercept[Exception] {
       TweetPipeline.run(spark, in.toDF().toDF("value", "ts"),

@@ -28,7 +28,7 @@ class TweetAppSpec extends SparkSpec {
   }
 
   test("file and rate branches resolve to streaming (value, ts)") {
-    val dir = Files.createTempDirectory("src_file").toString
+    val dir = tempDir("src_file").toString
     for (kind <- Seq("file", "rate")) {
       val df = TweetSource.resolve(spark, TweetSource.Config(kind = kind, path = dir))
       assert(df.isStreaming, kind)
@@ -59,9 +59,9 @@ class TweetAppSpec extends SparkSpec {
   }
 
   test("TweetApp.start: env -> file source -> analytic.json (golden e2e)") {
-    val srcDir = Files.createTempDirectory("app_src").toString
-    val outDir = Files.createTempDirectory("app_out").toString
-    val ckpt = Files.createTempDirectory("app_ckpt").toString
+    val srcDir = tempDir("app_src").toString
+    val outDir = tempDir("app_out").toString
+    val ckpt = tempDir("app_ckpt").toString
     val resultPath = s"$outDir/analytic.json"
     Files.writeString(Paths.get(srcDir, "batch0.json"),
       Seq(

@@ -50,6 +50,42 @@ class TweetPipelineSpec extends SparkSpec {
     assert(rows == Seq(("x", 2L), ("y", 1L)))
   }
 
+  test("top5 trims each partition to its own trailing window and ranks in Spark's UTF-8 order") {
+    import TweetPipeline.PaneCount
+    val p = java.time.Instant.parse("2024-01-01T01:00:00Z").toEpochMilli // the newest pane
+    val start = p + 10000 - 900000 // the trailing window's first pane
+    // Newest pane 100 s older than p: one row a pane before p's window
+    // (inside this partition's own trailing window) and one a pane before
+    // this partition's own window.
+    val older = Seq(
+      PaneCount(start - 10000, "brexit", "Brexit", 10),
+      PaneCount(p - 100000, "k", "K", 4),
+      PaneCount(start, "b", "b", 3),
+      PaneCount(start - 110000, "old", "old", 50))
+    val newest = Seq(
+      PaneCount(p, "ａx", "Ａx", 2),
+      PaneCount(p, "brexit", "brexit", 3),
+      PaneCount(p, "😀x", "😀x", 2),
+      PaneCount(p, "k", "k", 1),
+      PaneCount(p, "a", "a", 4))
+    val partitions = Seq(older, Seq.empty, newest)
+    // The parent's publish: Spark's max(pane), filter, groupBy(key) and
+    // orderBy(count desc, hashtag asc) over the same rows.
+    val all = partitions.flatten.toDF()
+    val newestPane = all.agg(max(col("pane"))).first().getLong(0)
+    val expected = TweetPipeline.topK(all.filter(col("pane") >= newestPane + 10000 - 900000)
+      .groupBy(col("key"))
+      .agg(min(col("hashtag")).as("hashtag"), sum(col("count")).as("count"))
+      .select(col("hashtag"), col("count")), 5)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    // "Ａx" (U+FF21) sorts before "😀x" (U+1F600) in UTF-8 bytes, after it
+    // in UTF-16 units: only the first makes the cut at count 2.
+    assert(expected == Seq("K" -> 5L, "a" -> 4L, "b" -> 3L, "brexit" -> 3L, "Ａx" -> 2L))
+    assert(TweetPipeline.top5(partitions.map(_.iterator)) == expected)
+    assert(TweetPipeline.top5(partitions.reverse.map(_.reverse.iterator)) == expected)
+    assert(TweetPipeline.top5(Seq(Iterator.empty, Iterator.empty)) == Seq.empty)
+  }
+
   test("result document matches the reference contract (web/analytic.json shape)") {
     val doc = AnalyticSink.render(Seq(("Brexit", 42L), ("Remain", 7L)), "2026-08-12T00:00:00Z")
     assert(doc ==
@@ -59,7 +95,7 @@ class TweetPipelineSpec extends SparkSpec {
   }
 
   test("atomic write publishes a parseable complete file") {
-    val dir = java.nio.file.Files.createTempDirectory("sink")
+    val dir = tempDir("sink")
     val path = dir.resolve("analytic.json").toString
     AnalyticSink.write(path, Seq(("A", 1L)))
     val content = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
@@ -70,7 +106,7 @@ class TweetPipelineSpec extends SparkSpec {
 
   test("published file has the permissions of a plain create in the same directory") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("sink_perms")
+    val dir = tempDir("sink_perms")
     val published = dir.resolve("analytic.json")
     AnalyticSink.write(published.toString, Seq(("A", 1L)))
     val plain = Files.createFile(dir.resolve("plain.json"))
@@ -79,7 +115,7 @@ class TweetPipelineSpec extends SparkSpec {
 
   test("a failed publish throws and leaves no staging file behind") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("sink_fail")
+    val dir = tempDir("sink_fail")
     // A non-empty directory at the target path: the publish move must fail.
     val target = dir.resolve("analytic.json")
     Files.createFile(Files.createDirectories(target).resolve("occupant"))
