@@ -22,12 +22,12 @@ class AnnIngestSpec extends SparkSpec {
     graft.functions.VectorExpressions.register(spark)
     val corpus = emb().filter(col("vec_id") % 10 =!= 0)
     // Batch-built reference.
-    val batchPath = java.nio.file.Files.createTempDirectory("ann_batch").toString + "/idx"
+    val batchPath = tempDir("ann_batch").toString + "/idx"
     graft.ops.Similarity.annIndexWrite(corpus, batchPath,
       bitsPerTable = geom._1, numTables = geom._2)
     // Stream-built: three micro-batches split by vec_id residue.
-    val streamPath = java.nio.file.Files.createTempDirectory("ann_stream").toString + "/idx"
-    val ckpt = java.nio.file.Files.createTempDirectory("ann_ckpt").toString
+    val streamPath = tempDir("ann_stream").toString + "/idx"
+    val ckpt = tempDir("ann_ckpt").toString
     val src = MemoryStream[(Long, Seq[Double])](spark)
     val q = graft.streaming.AnnIngest.run(
       src.toDF().toDF("vec_id", "emb"), streamPath, ckpt, geom._1, geom._2)
@@ -55,7 +55,7 @@ class AnnIngestSpec extends SparkSpec {
     // and the _geometry write: any guessed geometry would serve wrong
     // candidates, so the probe must refuse.
     def unrecorded(build: String => Unit): String = {
-      val path = java.nio.file.Files.createTempDirectory("ann_nogeom").toString + "/idx"
+      val path = tempDir("ann_nogeom").toString + "/idx"
       build(path)
       graft.ops.Similarity.deleteTree(s"$path/_geometry")
       assert(graft.ops.Similarity.indexGeometry(spark, path).isEmpty)
@@ -76,7 +76,7 @@ class AnnIngestSpec extends SparkSpec {
   test("replayed batch is a marker-gated no-op; a worst-case duplicate append is result-neutral") {
     graft.functions.VectorExpressions.register(spark)
     val corpus = emb().filter(col("vec_id") % 10 =!= 0)
-    val path = java.nio.file.Files.createTempDirectory("ann_replay").toString + "/idx"
+    val path = tempDir("ann_replay").toString + "/idx"
     assert(graft.streaming.AnnIngest.appendBatch(corpus, path, 0L, geom._1, geom._2))
     val baseline = graft.ops.Similarity.annIndexProbe(spark, path, probeBatch()).collect().toSeq
     val rowsBefore = spark.read.parquet(path).count()
@@ -103,7 +103,7 @@ class AnnIngestSpec extends SparkSpec {
     val rest = corpus.filter(col("vec_id") % 3 =!= 0)
     val pqBits = 4
     def bootstrap(tag: String): String = {
-      val p = java.nio.file.Files.createTempDirectory(tag).toString + "/idx"
+      val p = tempDir(tag).toString + "/idx"
       graft.ops.Similarity.annPqIndexWrite(seed, p,
         bitsPerTable = geom._1, numTables = geom._2, pqBits = pqBits)
       p
@@ -116,7 +116,7 @@ class AnnIngestSpec extends SparkSpec {
       spark.read.parquet(s"$p/_codebook").orderBy("m", "cell").collect().toSeq ++
         spark.read.parquet(s"$p/_groups").orderBy("m", "cell").collect().toSeq
     val cbBefore = model(streamPath)
-    val ckpt = java.nio.file.Files.createTempDirectory("pq_ckpt").toString
+    val ckpt = tempDir("pq_ckpt").toString
     val src = MemoryStream[(Long, Seq[Double])](spark)
     val q = graft.streaming.AnnIngest.runPq(
       src.toDF().toDF("vec_id", "emb"), streamPath, ckpt, geom._1, geom._2, pqBits)
@@ -159,7 +159,7 @@ class AnnIngestSpec extends SparkSpec {
     val newGeom = (10, 4)
     // The index to migrate, built at the old geometry, with a committed
     // ingest marker so replay state provably travels with the tree.
-    val migPath = java.nio.file.Files.createTempDirectory("pq_mig").toString + "/idx"
+    val migPath = tempDir("pq_mig").toString + "/idx"
     graft.ops.Similarity.annPqIndexWrite(corpus, migPath,
       bitsPerTable = geom._1, numTables = geom._2, pqBits = pqBits)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(migPath, "_ingest"))
@@ -168,7 +168,7 @@ class AnnIngestSpec extends SparkSpec {
     // The from-scratch reference at the NEW geometry: same corpus, so the
     // deterministic model train yields the identical codebook/grouping —
     // probe equality below therefore pins the whole migrated tree.
-    val refPath = java.nio.file.Files.createTempDirectory("pq_ref").toString + "/idx"
+    val refPath = tempDir("pq_ref").toString + "/idx"
     graft.ops.Similarity.annPqIndexWrite(corpus, refPath,
       bitsPerTable = newGeom._1, numTables = newGeom._2, pqBits = pqBits)
     // A float store missing residents must fail the migration loudly and
@@ -210,10 +210,10 @@ class AnnIngestSpec extends SparkSpec {
     graft.functions.VectorExpressions.register(spark)
     val corpus = emb().filter(col("vec_id") % 10 =!= 0)
     val newGeom = (10, 4)
-    val migPath = java.nio.file.Files.createTempDirectory("ann_mig").toString + "/idx"
+    val migPath = tempDir("ann_mig").toString + "/idx"
     graft.ops.Similarity.annIndexWrite(corpus, migPath,
       bitsPerTable = geom._1, numTables = geom._2)
-    val refPath = java.nio.file.Files.createTempDirectory("ann_ref").toString + "/idx"
+    val refPath = tempDir("ann_ref").toString + "/idx"
     graft.ops.Similarity.annIndexWrite(corpus, refPath,
       bitsPerTable = newGeom._1, numTables = newGeom._2)
     graft.ops.Similarity.annIndexRebucket(spark, migPath, newGeom._1, newGeom._2)
@@ -239,7 +239,7 @@ class AnnIngestSpec extends SparkSpec {
     val policy = graft.streaming.AnnIngest.GeometryStepPolicy(
       residentsPerBucket = 16L, stepBits = 2, maxBits = 10)
     def bootstrap(tag: String): String = {
-      val p = java.nio.file.Files.createTempDirectory(tag).toString + "/idx"
+      val p = tempDir(tag).toString + "/idx"
       graft.ops.Similarity.annPqIndexWrite(seed, p,
         bitsPerTable = 4, numTables = geom._2, pqBits = pqBits)
       p
@@ -256,7 +256,7 @@ class AnnIngestSpec extends SparkSpec {
     val ingest = new graft.streaming.AnnIngest.PqAutoStepIngest(
       autoPath, bootBits = 4, numTables = geom._2, pqBits = pqBits,
       coldVecs = _ => corpus, policy = policy)
-    val ckpt = java.nio.file.Files.createTempDirectory("pq_as_ckpt").toString
+    val ckpt = tempDir("pq_as_ckpt").toString
     val src = MemoryStream[(Long, Seq[Double])](spark)
     val q = ingest.run(src.toDF().toDF("vec_id", "emb"), ckpt)
     try {
@@ -296,7 +296,7 @@ class AnnIngestSpec extends SparkSpec {
     // Threshold 1·2⁸ = 256: batch 1 (~150) stays at 8 bits, batch 2
     // (~300 total) steps to 10. The float family carries its vectors, so
     // the from-scratch build at (10, 4) IS the exact reference.
-    val autoPath = java.nio.file.Files.createTempDirectory("ann_as").toString + "/idx"
+    val autoPath = tempDir("ann_as").toString + "/idx"
     val ingest = new graft.streaming.AnnIngest.AnnAutoStepIngest(
       autoPath, bootBits = geom._1, numTables = geom._2, policy = policy)
     val batches = Seq(corpus.filter(col("vec_id") % 3 === 0),
@@ -304,7 +304,7 @@ class AnnIngestSpec extends SparkSpec {
     assert(ingest.appendBatch(batches(0), 0L)._2 == geom._1)
     assert(ingest.appendBatch(batches(1), 1L) == ((true, 10)))
     assert(graft.ops.Similarity.indexGeometry(spark, autoPath).contains((10, geom._2)))
-    val refPath = java.nio.file.Files.createTempDirectory("ann_as_ref").toString + "/idx"
+    val refPath = tempDir("ann_as_ref").toString + "/idx"
     graft.ops.Similarity.annIndexWrite(corpus, refPath,
       bitsPerTable = 10, numTables = geom._2)
     val auto = graft.ops.Similarity.annIndexProbe(spark, autoPath, probeBatch())
@@ -319,7 +319,7 @@ class AnnIngestSpec extends SparkSpec {
     graft.functions.VectorExpressions.register(spark)
     val corpus = emb().filter(col("vec_id") % 10 =!= 0)
     val pqBits = 4
-    val path = java.nio.file.Files.createTempDirectory("pq_compact").toString + "/idx"
+    val path = tempDir("pq_compact").toString + "/idx"
     graft.ops.Similarity.annPqIndexWrite(corpus, path,
       bitsPerTable = geom._1, numTables = geom._2, pqBits = pqBits)
     val baseline = graft.ops.Similarity.annPqIndexProbe(
@@ -339,7 +339,7 @@ class AnnIngestSpec extends SparkSpec {
       spark, path, probeBatch(), corpus).collect().toSeq
     assert(compacted == baseline, "compaction changed probe results")
     // Float family: same contract, self-contained.
-    val fPath = java.nio.file.Files.createTempDirectory("ann_compact").toString + "/idx"
+    val fPath = tempDir("ann_compact").toString + "/idx"
     graft.ops.Similarity.annIndexWrite(corpus, fPath,
       bitsPerTable = geom._1, numTables = geom._2)
     val fBase = graft.ops.Similarity.annIndexProbe(spark, fPath, probeBatch())
@@ -381,7 +381,7 @@ class AnnIngestSpec extends SparkSpec {
     val corpus = emb().filter(col("vec_id") % 10 =!= 0)
     val pqBits = 4
     val newGeom = (10, 4)
-    val path = java.nio.file.Files.createTempDirectory("pq_crash").toString + "/idx"
+    val path = tempDir("pq_crash").toString + "/idx"
     graft.ops.Similarity.annPqIndexWrite(corpus, path,
       bitsPerTable = geom._1, numTables = geom._2, pqBits = pqBits)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path, "_ingest"))
@@ -400,7 +400,7 @@ class AnnIngestSpec extends SparkSpec {
     graft.ops.Similarity.annPqIndexRebucket(spark, path, corpus,
       newGeom._1, newGeom._2)
     assert(graft.ops.Similarity.indexGeometry(spark, path).contains(newGeom))
-    val refPath = java.nio.file.Files.createTempDirectory("pq_crash_ref").toString + "/idx"
+    val refPath = tempDir("pq_crash_ref").toString + "/idx"
     graft.ops.Similarity.annPqIndexWrite(corpus, refPath,
       bitsPerTable = newGeom._1, numTables = newGeom._2, pqBits = pqBits)
     val rec = graft.ops.Similarity.annPqIndexProbe(
@@ -425,7 +425,7 @@ class AnnIngestSpec extends SparkSpec {
     assert(spark.read.parquet(path).select("vec_id").distinct().count() ==
       corpus.count(), "recovery must preserve every resident")
     // Float family, compaction entry point: same recovery contract.
-    val fPath = java.nio.file.Files.createTempDirectory("ann_crash").toString + "/idx"
+    val fPath = tempDir("ann_crash").toString + "/idx"
     graft.ops.Similarity.annIndexWrite(corpus, fPath,
       bitsPerTable = geom._1, numTables = geom._2)
     val fBase = graft.ops.Similarity.annIndexProbe(spark, fPath, probeBatch())
@@ -445,7 +445,7 @@ class AnnIngestSpec extends SparkSpec {
     val b1 = rest.filter(col("vec_id") % 3 === 1)
     val b2 = rest.filter(col("vec_id") % 3 === 2)
     val pqBits = 4
-    val path = java.nio.file.Files.createTempDirectory("pq_autocompact").toString + "/idx"
+    val path = tempDir("pq_autocompact").toString + "/idx"
     graft.ops.Similarity.annPqIndexWrite(seed, path,
       bitsPerTable = geom._1, numTables = geom._2, pqBits = pqBits)
     // Crash-window duplicates for the compaction to reclaim.
@@ -470,7 +470,7 @@ class AnnIngestSpec extends SparkSpec {
     assert(graft.ops.Similarity.indexGeometry(spark, path).contains(geom))
     // Serving identical to a clean batch-built lineage (same seed-trained
     // codebook, batch-appended remainder).
-    val refPath = java.nio.file.Files.createTempDirectory("pq_autocompact_ref").toString + "/idx"
+    val refPath = tempDir("pq_autocompact_ref").toString + "/idx"
     graft.ops.Similarity.annPqIndexWrite(seed, refPath,
       bitsPerTable = geom._1, numTables = geom._2, pqBits = pqBits)
     graft.ops.Similarity.annPqIndexWrite(rest, refPath, mode = "append",
@@ -486,7 +486,7 @@ class AnnIngestSpec extends SparkSpec {
   test("a geometry-mismatched stream append fails fast instead of silently missing buckets") {
     graft.functions.VectorExpressions.register(spark)
     val corpus = emb().filter(col("vec_id") % 10 =!= 0)
-    val path = java.nio.file.Files.createTempDirectory("ann_geom").toString + "/idx"
+    val path = tempDir("ann_geom").toString + "/idx"
     assert(graft.streaming.AnnIngest.appendBatch(corpus, path, 0L, geom._1, geom._2))
     intercept[IllegalArgumentException] {
       graft.streaming.AnnIngest.appendBatch(corpus, path, 1L, 14, 16)

@@ -139,7 +139,7 @@ class CurationSpec extends SparkSpec {
     val n = 1000L
     val docs = (0L until n).toDF("doc_id")
     val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("id1", "id2")
-    val ckpt = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
+    val ckpt = tempDir("cc-ckpt").toString
     // Explicit handle, released below — suites share one JVM/session, and
     // CacheLifecycleSpec counts persistent RDDs concurrently.
     val h = new ops.StorageHandle
@@ -197,7 +197,7 @@ class CurationSpec extends SparkSpec {
       java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
         .map("%02x".format(_)).mkString
     val uniqueText = (1 to 40).map(i => s"w$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("chunkdedup").toString
+    val dir = tempDir("chunkdedup").toString
     Seq(
       (1L, uniqueText, "en", "src0", uniqueText.length.toLong),
       (2L, uniqueText, "en", "src1", uniqueText.length.toLong), // full dup of doc 1

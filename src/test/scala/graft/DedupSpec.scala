@@ -29,8 +29,8 @@ class DedupSpec extends SparkSpec {
     val batch1 = emb.filter(col("vec_id") % 10 === 0 && col("vec_id") < 250)
     val batch2 = emb.filter(col("vec_id") % 10 === 0 && col("vec_id") >= 250)
     val grown = emb.filter(col("vec_id") % 10 =!= 0 || col("vec_id") < 250)
-    val incPath = java.nio.file.Files.createTempDirectory("ann-inc").toString + "/idx"
-    val fullPath = java.nio.file.Files.createTempDirectory("ann-full").toString + "/idx"
+    val incPath = tempDir("ann-inc").toString + "/idx"
+    val fullPath = tempDir("ann-full").toString + "/idx"
     // Incremental: corpus index, then batch1 appended as new segment files.
     ops.Similarity.annIndexWrite(corpus, incPath)
     ops.Similarity.annIndexWrite(batch1, incPath, mode = "append")

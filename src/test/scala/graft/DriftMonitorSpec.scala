@@ -47,7 +47,7 @@ class DriftMonitorSpec extends SparkSpec {
     val corpus = emb()
     val seed = corpus.filter(col("vec_id") % 3 === 0)
     val fresh = corpus.filter(col("vec_id") % 3 =!= 0)
-    val path = java.nio.file.Files.createTempDirectory("pq_drift").toString + "/idx"
+    val path = tempDir("pq_drift").toString + "/idx"
     graft.ops.Similarity.annPqIndexWrite(seed, path,
       bitsPerTable = 8, numTables = 4, pqBits = 8)
     val monitor = new graft.streaming.PqDriftMonitor(path)
@@ -82,7 +82,7 @@ class DriftMonitorSpec extends SparkSpec {
     val corpus = emb()
     val seed = corpus.filter(col("vec_id") % 3 === 0)
     val batch = corpus.filter(col("vec_id") % 3 === 1)
-    val path = java.nio.file.Files.createTempDirectory("pq_drift_sink").toString + "/idx"
+    val path = tempDir("pq_drift_sink").toString + "/idx"
     graft.ops.Similarity.annPqIndexWrite(seed, path,
       bitsPerTable = 8, numTables = 4, pqBits = 8)
     val monitor = new graft.streaming.PqDriftMonitor(path)

@@ -10,7 +10,7 @@ class IdempotentSinkSpec extends SparkSpec {
   import spark.implicits._
 
   test("replaying a batch leaves output identical (idempotent writes)") {
-    val root = java.nio.file.Files.createTempDirectory("idem_out").toString + "/t"
+    val root = tempDir("idem_out").toString + "/t"
     val batch = Seq(1L, 2L, 3L).toDF("v")
     graft.streaming.IdempotentSink.writeBatch(batch, root, 7L)
     graft.streaming.IdempotentSink.writeBatch(batch, root, 7L) // replay
@@ -19,8 +19,8 @@ class IdempotentSinkSpec extends SparkSpec {
   }
 
   test("checkpointed restart emits each input exactly once across runs") {
-    val root = java.nio.file.Files.createTempDirectory("idem_out2").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("idem_ckpt").toString
+    val root = tempDir("idem_out2").toString + "/t"
+    val ckpt = tempDir("idem_ckpt").toString
     val src = MemoryStream[Long](spark)
 
     val q1 = graft.streaming.IdempotentSink.start(src.toDF(), root, ckpt)
@@ -40,7 +40,7 @@ class IdempotentSinkSpec extends SparkSpec {
   }
 
   test("an input column named batch_id is rejected (would collide with the partition column)") {
-    val root = java.nio.file.Files.createTempDirectory("idem_guard").toString + "/t"
+    val root = tempDir("idem_guard").toString + "/t"
     val bad = Seq((1L, 2L)).toDF("v", "batch_id")
     intercept[IllegalArgumentException] {
       graft.streaming.IdempotentSink.writeBatch(bad, root, 0L)
@@ -48,7 +48,7 @@ class IdempotentSinkSpec extends SparkSpec {
   }
 
   test("compaction preserves data rows exactly, shrinks history, and survives replay") {
-    val root = java.nio.file.Files.createTempDirectory("idem_compact").toString + "/t"
+    val root = tempDir("idem_compact").toString + "/t"
     // Five batches of keyed rows; batch 4 is the newest (replay candidate).
     (0L to 4L).foreach { b =>
       val batch = (b * 10 until b * 10 + 10).toDF("v")

@@ -12,7 +12,7 @@ import scala.jdk.CollectionConverters._
 class LayoutSpec extends SparkSpec {
 
   test("range-clustered write produces disjoint, internally-sorted files") {
-    val dir = Files.createTempDirectory("layout").toString + "/lineitem"
+    val dir = tempDir("layout").toString + "/lineitem"
     val src = graft.sources.Tables.t(spark, sfDir, "lineitem")
     ops.Layout.writeRangeClustered(src, dir, 8, "l_orderkey", "l_linenumber")
 
@@ -51,7 +51,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("narrow range predicate on clustered layout reads fewer rows than files hold") {
-    val dir = Files.createTempDirectory("layout").toString + "/orders"
+    val dir = tempDir("layout").toString + "/orders"
     val src = graft.sources.Tables.t(spark, sfDir, "orders")
     ops.Layout.writeRangeClustered(src, dir, 8, "o_orderkey")
     val probe = spark.read.parquet(dir).filter(col("o_orderkey") <= 10)

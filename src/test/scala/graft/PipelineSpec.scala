@@ -92,7 +92,7 @@ class PipelineSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     // 2-token and 5-token docs: below the 3-gram/5-gram guards that rely on
     // Spark's descending sequence(1, 0) quirk being IF-guarded.
-    val dir = java.nio.file.Files.createTempDirectory("edge_docs").toString
+    val dir = tempDir("edge_docs").toString
     Seq(
       (1L, "a b", "en", "src0", 3L),
       (97L, "a b c d e", "en", "src1", 9L), // eval-side id (97 % 97 == 0)

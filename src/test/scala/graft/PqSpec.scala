@@ -203,7 +203,7 @@ class PqSpec extends SparkSpec {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
     val corpus = emb.filter(col("vec_id") % 10 =!= 0)
-    val path = java.nio.file.Files.createTempDirectory("pqidx").toString + "/idx"
+    val path = tempDir("pqidx").toString + "/idx"
     ops.Similarity.annPqIndexWrite(corpus, path)
     val cbBefore = spark.read.parquet(s"$path/_codebook")
       .orderBy("m", "cell").collect().toSeq

@@ -13,7 +13,7 @@ class ScaleTechniquesSpec extends SparkSpec {
 
   test("bucketed tables co-locate the join: no shuffle exchange in the plan") {
     // External tables (explicit path) — warehouse dir is static config.
-    val wh = java.nio.file.Files.createTempDirectory("warehouse").toString
+    val wh = tempDir("warehouse").toString
     val li = graft.sources.Tables.t(spark, sfDir, "lineitem")
       .select("l_orderkey", "l_quantity")
     val ord = graft.sources.Tables.t(spark, sfDir, "orders")
@@ -81,7 +81,7 @@ class ScaleTechniquesSpec extends SparkSpec {
   }
 
   test("dynamic partition pruning: a dim filter prunes fact partitions at runtime") {
-    val base = java.nio.file.Files.createTempDirectory("dpp").toString
+    val base = tempDir("dpp").toString
     graft.sources.Tables.t(spark, sfDir, "lineitem")
       .select("l_orderkey", "l_quantity", "l_returnflag")
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(s"$base/fact")

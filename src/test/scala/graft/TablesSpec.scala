@@ -20,7 +20,7 @@ import graft.sources.Tables
 class TablesSpec extends SparkSpec {
 
   private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   /** The result of `body` and the number of Spark jobs it started. Jobs are
     * tagged with a job group; a sentinel job submitted after `body` marks
