@@ -70,7 +70,7 @@ object Bench {
     */
   private[graft] def benchOutPath(fullSuite: Boolean, sfDir: String, cpus: String,
                                   benchOut: String): String =
-    if (fullSuite && java.nio.file.Paths.get(sfDir).getFileName.toString == "sf0.1")
+    if (fullSuite && Option(java.nio.file.Paths.get(sfDir).getFileName).exists(_.toString == "sf0.1"))
       fullBenchFile(cpus)
     else benchOut
 
@@ -143,10 +143,10 @@ object Bench {
     // that re-measured clean, so buy extra noise immunity here).
     // Optional subset filter for scaling probes (e.g. the BASELINE.md sf1
     // runs, which replicate only documents/embeddings); unset = full suite,
-    // which is what the driver runs. Entries match a full query name OR its
-    // qNN prefix (the keys this main itself prints), and unmatched entries
-    // warn loudly — a typo'd filter must not record an empty suite as a
-    // legitimate 0-second measurement.
+    // the only run that writes a root file or uses a prior. Entries match a
+    // full query name OR its qNN prefix (the keys this main itself prints),
+    // and unmatched entries warn loudly — a typo'd filter must not record
+    // an empty suite as a legitimate 0-second measurement.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     only.foreach { filters =>
       val known = SparkEntry.queries.keySet

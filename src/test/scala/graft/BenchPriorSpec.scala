@@ -30,8 +30,8 @@ class BenchPriorSpec extends AnyFunSuite with BeforeAndAfterAll {
     """{"metric":"total","unit":"sec","audit":[],"anchors":[0.2],""" +
       s""""queries":{"q1":1.00,"q2":2.00},"value":3.0,"anchor":0.2,"sf":"$sf01"}"""
 
-  private def stamped(cpus: String, sf: String = sf01): String =
-    Bench.benchLine(Map("q1_a" -> 1.0, "q2_b" -> 2.0), Nil, 0.2, Seq(0.2), Nil, sf, cpus, "0123abc")
+  private def stamped(cpus: String): String =
+    Bench.benchLine(Map("q1_a" -> 1.0, "q2_b" -> 2.0), Nil, 0.2, Seq(0.2), Nil, sf01, cpus, "0123abc")
 
   test("single complete line parses with anchor, queries, and sf") {
     val p = Bench.loadPrior(write(line1)).get
@@ -71,15 +71,13 @@ class BenchPriorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Bench.benchOutPath(fullSuite = true, sf01 + "/", "4", out) == "BENCH_FULL_c4.json")
     assert(Bench.benchOutPath(fullSuite = false, sf01, "32", out) == out)
     assert(Bench.benchOutPath(fullSuite = true, "/tmp/sf1", "32", out) == out)
+    assert(Bench.benchOutPath(fullSuite = true, "/", "32", out) == out)
   }
 
-  test("a full-suite run adjudicates against a line stamped with its sf and cpus") {
-    val p = Bench.choosePrior(write(stamped("4")), fullSuite = true, sf01, "4")
-    assert(p.map(_.queries) == Right(Map("q1" -> 1.0, "q2" -> 2.0)))
-  }
-
-  test("the prior is refused on an sf mismatch, a cpus mismatch, a subset run and an unstamped line") {
+  test("the prior is used by a full-suite run with the line's sf and cpus, refused on an sf mismatch, a cpus mismatch, a subset run and an unstamped line") {
     val path = write(stamped("4"))
+    assert(Bench.choosePrior(path, fullSuite = true, sf01, "4").map(_.queries) ==
+      Right(Map("q1" -> 1.0, "q2" -> 2.0)))
     assert(Bench.choosePrior(path, fullSuite = true, "/tmp/sf1", "4").left.exists(_.contains("sf")))
     assert(Bench.choosePrior(path, fullSuite = true, sf01, "8").left.exists(_.contains("cpus 4")))
     assert(Bench.choosePrior(path, fullSuite = false, sf01, "4").left.exists(_.contains("subset")))

@@ -1,11 +1,14 @@
 #!/usr/bin/env python3
 """Anchor-normalized comparison of two graft.Bench JSON lines.
 
-Usage: python3 tools/compare_bench.py BENCH_rOLD.json BENCH_rNEW.json [threshold]
+Usage: python3 tools/compare_bench.py OLD.json NEW.json [threshold]
 
-Accepts the driver's wrapper JSON ({"tail": "..."} containing the bench
-output), a raw file containing a single bench line, or the r11+ chunked
-stdout emission (bench_chunk lines + minimal total line). Ratios are
+graft.Bench writes one full bench line (BENCH_FULL*.json,
+$SPARK_GRAFT_BENCH_OUT). This tool reads that line and also the archived
+BENCH_r01-r14.json captures, which Bench no longer emits: a {"tail": ...}
+wrapper around a bounded stdout tail, the r11-r14 chunked emission
+(bench_chunk lines + minimal total line), or a head-truncated fragment.
+Those parsers stay because the archived files stay in the repo. Ratios are
 (new_sec / old_sec) / (new_anchor / old_anchor): the machine-speed anchor
 cancels ambient variance, so a ratio > threshold (default 1.5) flags a
 real plan/operator regression rather than a slow boot. Queries present in
@@ -22,8 +25,8 @@ def load(path):
             txt = wrapper["tail"]  # driver wrapper: bench line inside, unescaped by the parse
     except json.JSONDecodeError:
         pass
-    # Preferred path (mirrors Bench.loadPrior): walk the capture in line
-    # order. r11+ emits the per-query map as self-identifying
+    # Preferred path: walk the capture in line order. The r11-r14
+    # captures hold the per-query map as self-identifying
     # {"bench_chunk":i,"of":N,"queries":…} lines followed by a minimal
     # total line (no map of its own); chunk lines accumulate until a
     # "metric":"total" line closes the run, whose own "queries" map

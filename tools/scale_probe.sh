@@ -14,9 +14,8 @@ mkdir -p "$OUT"
 # The at-scale production postures (VERDICT r6 item 1) + the three
 # event-analytics queries the sf1 round already tracked + the round-7/8
 # additions (q140 probe, q141/q142 codec, q143 11-bit posture, q144
-# index build — VERDICT r7 items 2 and 7). SPARK_GRAFT_PRIOR=none: the
-# probe subset must not trigger self-adjudication against a full-suite
-# prior line.
+# index build — VERDICT r7 items 2 and 7). A subset run never
+# adjudicates against a prior.
 QUERIES="q52,q101,q102,q111,q121,q128b,q130b,q131,q137,q138,q132,q133,q136,q140,q141,q142,q143,q144,q145,q148,q149,q150,q151,q152,q153,q154,q155,q156,q157,q158,q159,q160,q161,q162,q163,q164,q165,q166,q167,q168,q169,q170"
 # sf10 exclusions — every 8-bit-geometry formulation, after the round-8
 # leg MEASURED the knee as a hard failure, not a slowdown: q101's
@@ -45,11 +44,10 @@ for sf in /root/testdata/sf0.1 "$SF1" "$SF10"; do
   tag=$(basename "$sf" | sed 's/^sf0.1$/sf01/')
   qs="$QUERIES"; [ "$sf" = "$SF10" ] && qs="$SF10_QUERIES"
   echo "=== probing $sf ==="
-  # SPARK_GRAFT_BENCH_OUT gets the FULL line (anchors series + audit
-  # array) since the stdout line was trimmed to the driver-capture
-  # minimum (round 10); the probe tooling normalizes by min(anchors).
+  # A subset run writes its bench line (anchors series + audit array) to
+  # SPARK_GRAFT_BENCH_OUT; the probe tooling normalizes by min(anchors).
   SPARK_GRAFT_SF_DIR="$sf" SPARK_GRAFT_CPUS=8 SPARK_GRAFT_ONLY="$qs" \
-    SPARK_GRAFT_PRIOR=none SPARK_GRAFT_BENCH_OUT="$OUT/bench_$tag.json" \
+    SPARK_GRAFT_BENCH_OUT="$OUT/bench_$tag.json" \
     SPARK_GRAFT_TELEMETRY="$OUT/telemetry_$tag.jsonl" SPARK_DRIVER_MEM=24g \
     tools/run_local.sh graft.Bench > /dev/null 2> "$OUT/stderr_$tag.log"
   # A killed or failed bench leaves an empty/partial line; fail HERE with
