@@ -15,12 +15,23 @@ object Bench {
     (r.totalMemory - r.freeMemory) / (1024L * 1024L)
   }
 
-  /** A prior full bench line: its anchor, its qNN -> sec map, and the
-    * sf / cpus / commit stamps naming what it measured.
+  /** A line's machine speed: the fastest of its headline and mid-suite
+    * anchor readings. The headline anchor follows a one-query warm-up and
+    * reads up to twice the mid-suite ones, so alone it measures a cold
+    * JVM, not the machine.
     */
-  private[graft] final case class Prior(anchor: Double, queries: Map[String, Double],
+  private[graft] def speed(anchor: Double, anchors: Seq[Double]): Double =
+    (anchor +: anchors).min
+
+  /** A prior full bench line: its anchor readings, its qNN -> sec map, and
+    * the sf / cpus / commit stamps naming what it measured.
+    */
+  private[graft] final case class Prior(anchor: Double, anchors: Seq[Double],
+                                        queries: Map[String, Double],
                                         sf: Option[String], cpus: Option[String],
-                                        commit: Option[String])
+                                        commit: Option[String]) {
+    def speed: Double = Bench.speed(anchor, anchors)
+  }
 
   /** The bench line in `path`, or None when the file is missing, is not
     * exactly one JSON document, or has no anchor or queries.
@@ -33,9 +44,11 @@ object Bench {
       import scala.jdk.CollectionConverters._
       val queries = Option(j.get("queries")).toSeq.flatMap(_.properties().asScala)
         .map(e => e.getKey -> e.getValue.asDouble()).toMap
+      val anchors = Option(j.get("anchors")).toSeq.flatMap(_.elements().asScala)
+        .filter(_.isNumber).map(_.asDouble())
       def text(f: String) = Option(j.get(f)).map(_.asText())
       Option(j.get("anchor")).filter(_.isNumber && queries.nonEmpty)
-        .map(a => Prior(a.asDouble(), queries, text("sf"), text("cpus"), text("commit")))
+        .map(a => Prior(a.asDouble(), anchors, queries, text("sf"), text("cpus"), text("commit")))
     } catch { case _: Throwable => None }
 
   /** The prior a run adjudicates against: the bench line in `path` (the
@@ -54,6 +67,15 @@ object Bench {
         Left(s"$path has sf ${p.sf.getOrElse("unstamped")}, this run $sfDir")
       case Some(p) => Right(p)
     }
+
+  private val flagRatio = 1.5
+
+  /** Whether a query's first-pass time `sec` is re-measured: it is over
+    * `flagRatio` × the prior's time for the same qNN once each is divided
+    * by its own line's machine speed ([[speed]]).
+    */
+  private[graft] def remeasure(p: Prior, runSpeed: Double, short: String, sec: Double): Boolean =
+    p.queries.get(short).exists(old => old > 0 && (sec / old) / (runSpeed / p.speed) > flagRatio)
 
   /** Root-level file for a full-suite sf0.1 bench line: the canonical
     * 32-CPU run owns BENCH_FULL.json; a run at any other CPU count writes
@@ -174,7 +196,7 @@ object Bench {
     val prior = choosePrior(fullBenchFile(cpus), only.isEmpty, sfDir, cpus)
     System.err.println(prior match {
       case Right(p) => s"[bench] prior: ${fullBenchFile(cpus)} (commit ${p.commit.getOrElse("?")}, " +
-        s"${p.queries.size} queries, anchor ${p.anchor})"
+        s"${p.queries.size} queries, anchor ${p.anchor}, speed ${p.speed})"
       case Left(why) => s"[bench] no prior: $why"
     })
     // Machine-speed anchor: a fixed DATA-INDEPENDENT workload (hash-sum
@@ -279,22 +301,19 @@ object Bench {
     // anchor readings — each cleared only by a manual isolated re-run.
     // Automate that adjudication: against the prior line (choosePrior),
     // re-measure — once, at suite end, min-of-3 — every query whose
-    // anchor-normalized ratio vs the prior exceeds 1.5×, and report
+    // speed-normalized ratio vs the prior exceeds 1.5× (remeasure), and report
     // min(first pass, re-run). The min over all measured runs is the same
     // steady-state estimator the 3-run minimum already is; the re-run
     // happens after the suite's memory pressure has been GC'd away, which
     // is exactly the isolated condition the manual adjudications used.
-    val flagRatio = 1.5
     val byName = selected.toMap
     val remeasured = scala.collection.mutable.LinkedHashMap[String, Double]()
     val results: Map[String, Double] = prior match {
       case Right(p) =>
-        val anchorRatio = anchor / p.anchor
+        val runSpeed = speed(anchor, anchors.toSeq)
         firstPass.toMap.map { case (name, sec) =>
           val short = name.takeWhile(_ != '_')
-          val flagged = p.queries.get(short).exists { old =>
-            old > 0 && (sec / old) / anchorRatio > flagRatio }
-          if (!flagged) name -> sec
+          if (!remeasure(p, runSpeed, short, sec)) name -> sec
           else {
             val re = (1 to 3).map(_ => timedRun(byName(name), name)).min
             System.gc()

@@ -1466,9 +1466,7 @@ object Similarity {
     * `Some((beam, groupSize, refine))` uses the two-level encoder of
     * [[pqHierModelOn]]/[[pqEncodeHier]]: 2^bits / groupSize super-groups,
     * stage 1 keeping the top `beam` — `2^bits/groupSize + beam·groupSize`
-    * dots per (vector, subspace) instead of 2^bits. `private[graft]` so
-    * tools.PqFrontierProbe can sweep the (beam, split) plane without
-    * registering every point as a query.
+    * dots per (vector, subspace) instead of 2^bits.
     *
     * Serving: each probe's dense M×2^bits LUT of sub-dots is broadcast,
     * the ADC score of a corpus vector is M lookups + adds over its codes
@@ -1478,8 +1476,8 @@ object Similarity {
     * pipeline, not just the final ids; PqSpec pins ADC ==
     * dot(query, decode(codes)) and the postures' recall ordering.
     */
-  private[graft] def pqServe(s: SparkSession, dir: String, bits: Int,
-                             hier: Option[(Int, Int, Boolean)]): DataFrame = {
+  private def pqServe(s: SparkSession, dir: String, bits: Int,
+                      hier: Option[(Int, Int, Boolean)]): DataFrame = {
     graft.functions.VectorExpressions.register(s)
     val emb = vectors(s, dir)
     val (cents, codes) = hier match {
@@ -1985,11 +1983,11 @@ object Similarity {
     * live codebook-drift proxy (VERDICT r12 item 3,
     * [[graft.streaming.PqDriftMonitor]]): a batch the codebook models
     * well scores ≈ the bootstrap residents' energy, while a
-    * mean-shift-class batch — the shift class [[graft.tools.PqDriftProbe]]
-    * measured crossing the 0.05 recall@5 rebuild floor at ~60% shifted
-    * corpus — scores measurably higher the moment it ARRIVES, and
-    * permutation-class drift (measured harmless: gap ≤ 0.03 through 67%
-    * shifted corpus) does not move it. Cost: one broadcast-codebook
+    * mean-shift-class batch — the shift class the archived drift sweep
+    * (probes/r12/pq_drift_sf1_mean.log) measured crossing the 0.05
+    * recall@5 rebuild floor at ~60% shifted corpus — scores measurably
+    * higher the moment it ARRIVES, and permutation-class drift (measured
+    * harmless: gap ≤ 0.03 through 67% shifted corpus) does not move it. Cost: one broadcast-codebook
     * encode over a bounded sample — O(sampleN·M·beam·groupSize) dots,
     * no shuffle beyond the per-vector aggregation, independent of both
     * batch and index size.

@@ -107,7 +107,7 @@ object AnnIngest {
     * a fresh checkpoint — the commit markers travel with the index path,
     * so a rebuild naturally resets replay state too. The crossover is
     * MEASURED, and depends on the shift class
-    * ([[graft.tools.PqDriftProbe]], probes/r12): rotation/permutation-
+    * (probes/r12/pq_drift_sf1_*.log): rotation/permutation-
     * class drift never reaches it (gap flat ≤ 0.03 through 67% shifted
     * corpus), while mean-shift-class drift crosses a 0.05 recall@5 gap
     * at ~60% shifted fraction — numbers in BASELINE.md. A geometry
@@ -218,7 +218,7 @@ object AnnIngest {
     * it, probe latency grows ~linearly with residents at fixed b (the
     * measured 2.6 → 3.9 s drift over 3× residents, probes/r11), and the
     * operator must notice and migrate by hand; with it, the serving curve
-    * is sawtoothed flat (measured: probes/r12, AutoStepProbe).
+    * is sawtoothed flat (measured: probes/r12/autostep_sf*.log).
     *
     * Cost accounting: the counter seeds ONCE from a pruned one-table scan
     * ([[graft.ops.Similarity.annIndexResidentCount]]) and then accumulates

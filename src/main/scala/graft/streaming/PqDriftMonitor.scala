@@ -4,13 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Live codebook-drift signal for streaming PQ ingest (VERDICT r12
-  * item 3). [[graft.tools.PqDriftProbe]] measured the rebuild crossover
-  * OFFLINE — mean-shift-class drift crosses the 0.05 recall@5 floor at
-  * ~60% shifted corpus, rotation/permutation-class drift never does
-  * (probes/r12) — but a deployment only learned its codebook went stale
-  * by running the probe by hand. This monitor makes the crossover class
-  * detectable in production, per appended batch, through the
-  * [[StreamHealth]] monitor-frame pattern.
+  * item 3). An offline drift sweep measured the rebuild crossover —
+  * mean-shift-class drift crosses the 0.05 recall@5 floor at ~60%
+  * shifted corpus, rotation/permutation-class drift never does
+  * (probes/r12/pq_drift_sf1_*.log) — but a deployment only learned its
+  * codebook went stale by running such a sweep by hand. This monitor
+  * makes the crossover class detectable in production, per appended
+  * batch, through the [[StreamHealth]] monitor-frame pattern.
   *
   * The statistic is per-subspace CODE-OCCUPANCY DIVERGENCE: encode a
   * bounded sample of the batch exactly as the append does, histogram its
@@ -28,7 +28,8 @@ import org.apache.spark.sql.functions._
   * read 1.49–1.53× the (overfit) train-resident baseline while α = 1.0
   * mean-shift batches read 1.51–1.58× — a ≤ 4% gap, inside noise
   * ([[graft.ops.Similarity.pqResidualEnergy]] stays available, and
-  * PqDriftProbe logs it beside the gap as the falsification record).
+  * the probes/r13/pq_drift_sf1_*_r13.log sweeps log it beside the gap as
+  * the falsification record).
   * Occupancy KL on the same fixtures: clean 0.056–0.203, permutation
   * 0.057–0.202 (≤ 1.04× clean — the measured-harmless class reads as
   * clean, exactly right), mean-shift α = 0.5 → 2.2–4.9× clean, α = 1.0

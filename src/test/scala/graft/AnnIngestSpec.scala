@@ -360,7 +360,7 @@ class AnnIngestSpec extends SparkSpec {
       !p.shouldStep(2000000L, 20))
     // ...and the steps land exactly at 8·2^b + 1: 131,073 at 14 bits
     // (14 -> 17) and 1,048,577 at 17 bits (17 -> 20), the two transitions
-    // AutoStepProbe measured live (probes/r12/autostep_sf10/sf100.log).
+    // measured live in probes/r12/autostep_sf10.log and autostep_sf100.log.
     assert(!p.shouldStep(131072L, 14) && p.shouldStep(131073L, 14))
     assert(!p.shouldStep(1048576L, 17) && p.shouldStep(1048577L, 17))
     // maxBits is a hard ceiling: at 24 bits (default max) no resident

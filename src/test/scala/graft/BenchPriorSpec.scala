@@ -92,6 +92,20 @@ class BenchPriorSpec extends AnyFunSuite with BeforeAndAfterAll {
       .left.exists(_.contains("missing")))
   }
 
+  test("a line's machine speed is the min over anchor and anchors, and the re-measure decision divides by it") {
+    val prior = Bench.benchLine(Map("q1_a" -> 1.0), Nil, 0.2, Seq(0.06, 0.1), Nil, sf01, "4", "abc")
+    val p = Bench.loadPrior(write(prior)).get
+    assert(p.anchor == 0.2 && p.speed == 0.06)
+    // This run: a warm-up anchor of 0.1, the same 0.06 machine speed. By
+    // the headline anchors (0.1 / 0.2) an unchanged 1.0 s would read 2×.
+    val runSpeed = Bench.speed(0.1, Seq(0.06, 0.07))
+    assert(runSpeed == 0.06)
+    assert(!Bench.remeasure(p, runSpeed, "q1", 1.0))
+    assert(!Bench.remeasure(p, runSpeed, "q1", 1.4))
+    assert(Bench.remeasure(p, runSpeed, "q1", 1.6))
+    assert(!Bench.remeasure(p, runSpeed, "q2", 9.0), "a query the prior lacks is never re-measured")
+  }
+
   test("missing file or no recoverable anchor yields None, not a throw") {
     assert(Bench.loadPrior("/nonexistent/bench.json").isEmpty)
     assert(Bench.loadPrior(write("""{"queries-less":"noise"}""")).isEmpty)

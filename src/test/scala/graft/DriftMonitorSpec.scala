@@ -4,13 +4,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The live codebook-drift proxy must reproduce, per batch, the class
-  * separation PqDriftProbe measured offline (probes/r12): mean-shift
-  * drift — the class that crosses the rebuild floor — must flag, while
-  * permutation-class drift — measured harmless (recall gap ≤ 0.03 at 67%
-  * shifted corpus) — and clean in-distribution batches must not. The
-  * shift transforms here are the PROBE'S OWN (PqDriftProbe.scala), so a
-  * green spec ties the monitor to the measured crossover's shift
-  * classes, not to a synthetic convenience. Margins follow the round-13
+  * separation the offline drift sweep measured (probes/r12/pq_drift_sf1_*
+  * .log, BASELINE.md): mean-shift drift — the class that crosses the
+  * rebuild floor — must flag, while permutation-class drift — measured
+  * harmless (recall gap ≤ 0.03 at 67% shifted corpus) — and clean
+  * in-distribution batches must not. The shift transforms here are the
+  * ones that sweep applied, and now their only copy, so a green spec ties
+  * the monitor to the measured crossover's shift classes, not to a
+  * synthetic convenience. Margins follow the round-13
   * DriftCalib measurements (two SFs × PQ4/PQ8): permutation ≤ 1.04×
   * clean, mean-shift α = 1.0 ≥ 4.4× clean — threshold 2.0 sits ≥ 2×
   * from both classes.
@@ -20,7 +21,7 @@ class DriftMonitorSpec extends SparkSpec {
   private def emb(): DataFrame = spark.read.parquet(s"$sfDir/embeddings.parquet")
     .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
 
-  // PqDriftProbe's mean-shift: x' = normalize(x + alpha * mu), mu the fixed
+  // The sweep's mean-shift: x' = normalize(x + alpha * mu), mu the fixed
   // unit vector from reserved plane-pool row 460.
   private def meanShift(df: DataFrame, alpha: Double): DataFrame = {
     val H = graft.functions.Hyperplanes
@@ -33,7 +34,7 @@ class DriftMonitorSpec extends SparkSpec {
         .as("emb"))
   }
 
-  // PqDriftProbe's permutation shift: signed orthogonal coordinate
+  // The sweep's permutation shift: signed orthogonal coordinate
   // permutation — norms and within-set geometry preserved exactly.
   private def permShift(df: DataFrame): DataFrame =
     df.select(col("vec_id"), expr(

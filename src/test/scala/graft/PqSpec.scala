@@ -194,7 +194,7 @@ class PqSpec extends SparkSpec {
     // seed-grouped q161's 0.66 and flat q159's 0.73 at sf0.001. The
     // grouping refinement, not more beam, is what buys the recall: the
     // seed-grouped family plateaus at 0.67-0.69 even at 80 cells
-    // (tools/PqFrontierProbe).
+    // (probes/r10/pq_frontier_sf0.001.jsonl, BASELINE.md).
     assert(rLloyd >= rSeed, s"Lloyd-grouped recall $rLloyd < seed-grouped $rSeed")
     assert(rLloyd >= 0.70, s"q165 recall $rLloyd below the registered 0.70 floor")
   }
