@@ -301,8 +301,8 @@ object Bench {
     // anchor readings — each cleared only by a manual isolated re-run.
     // Automate that adjudication: against the prior line (choosePrior),
     // re-measure — once, at suite end, min-of-3 — every query whose
-    // speed-normalized ratio vs the prior exceeds 1.5× (remeasure), and report
-    // min(first pass, re-run). The min over all measured runs is the same
+    // speed-normalized ratio vs the prior exceeds 1.5× (`remeasure`),
+    // and report min(first pass, re-run). The min over all measured runs is the same
     // steady-state estimator the 3-run minimum already is; the re-run
     // happens after the suite's memory pressure has been GC'd away, which
     // is exactly the isolated condition the manual adjudications used.

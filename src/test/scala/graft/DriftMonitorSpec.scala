@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The live codebook-drift proxy must reproduce, per batch, the class
-  * separation the offline drift sweep measured (probes/r12/pq_drift_sf1_*
-  * .log, BASELINE.md): mean-shift drift — the class that crosses the
+  * separation the offline drift sweep measured (BASELINE.md,
+  * probes/r12/pq_drift_sf1_*.log): mean-shift drift — the class that crosses the
   * rebuild floor — must flag, while permutation-class drift — measured
   * harmless (recall gap ≤ 0.03 at 67% shifted corpus) — and clean
   * in-distribution batches must not. The shift transforms here are the
