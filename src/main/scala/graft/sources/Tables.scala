@@ -58,21 +58,33 @@ object Tables {
   }
 
   /** `events.ts` arrives in whatever timestamp encoding the data
-    * generator's arrow version emitted — TIMESTAMP(NANOS) (which Spark's
-    * vectorized reader only reads via the nanosAsLong legacy flag, as a
-    * long), TIMESTAMP(MICROS) without timezone (read as TIMESTAMP_NTZ),
-    * or plain TIMESTAMP. Normalize all three to a microsecond
-    * TimestampType column so downstream operators see one type; the
-    * session timezone is UTC everywhere (SparkEntry builders + specs), so
-    * the NTZ→LTZ cast is a wall-clock identity, and the nanos→micros
-    * division is exact integer arithmetic. The scan still prunes/pushes
-    * on other columns.
+    * generator's arrow version emitted — TIMESTAMP(NANOS), TIMESTAMP(MICROS)
+    * without timezone (read as TIMESTAMP_NTZ), or plain TIMESTAMP.
+    * Normalize all three to a microsecond TimestampType column so
+    * downstream operators see one type; the session timezone is UTC
+    * everywhere (SparkEntry builders + specs), so the NTZ→LTZ cast is a
+    * wall-clock identity, and the nanos→micros division is exact integer
+    * arithmetic. The scan still prunes/pushes on other columns.
+    *
+    * Spark reads TIMESTAMP(NANOS) only as a long, and only under the
+    * `spark.sql.legacy.parquet.nanosAsLong` flag, which the scan takes
+    * from the session its relation was resolved in. Such a file is
+    * resolved in a new session with the caller's SQL confs and the flag,
+    * and its relation is read here, so the caller's session is never
+    * changed.
     */
   private def events(spark: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = parquet(spark, s"$dir/events.parquet")
+    val path = s"$dir/events.parquet"
+    val raw = if (!nanosTs(spark, path)) parquet(spark, path) else {
+      val own = spark.newSession()
+      spark.conf.getAll.foreach { case (k, v) => if (spark.conf.isModifiable(k)) own.conf.set(k, v) }
+      own.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      spark.baseRelationToDataFrame(parquet(own, path).queryExecution.analyzed
+        .collectFirst { case l: LogicalRelation => l.relation }.get)
+    }
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
@@ -80,6 +92,26 @@ object Tables {
       case other => throw new IllegalStateException(
         s"events.ts has unsupported parquet type $other")
     }
+  }
+
+  /** Whether `ts` is a TIMESTAMP(NANOS) column, read from the footer of
+    * the first data file under `path`.
+    */
+  private def nanosTs(spark: SparkSession, path: String): Boolean = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val files = p.getFileSystem(conf).listFiles(p, true)
+    val file = Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+      .find(f => !f.getName.startsWith("_") && !f.getName.startsWith(".")).get
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val schema = reader.getFileMetaData.getSchema
+    try schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+      case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+      case _ => false
+    } finally reader.close()
   }
 
   /** Register every table as a temp view (idempotent) so SQL-front-end

@@ -36,8 +36,6 @@ object TweetApp {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()
       .appName("MrTweety Analytic")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .getOrCreate()
     val query = start(spark, sys.env.get)
     query.awaitTermination()

@@ -26,21 +26,32 @@ class StreamingSpec extends SparkSpec {
   test("windowed aggregation runs on the RocksDB state store (at-scale state backend)") {
     // HDFS-backed state lives on executor heaps — at 100 TB of keyed state
     // that's an OOM; RocksDB spills to local disk with incremental
-    // checkpointing. Same query semantics, swapped provider.
+    // checkpointing. Same query semantics, swapped provider. The query is
+    // the trending tags' sliding-window aggregation, 15 minutes every 10 s.
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[(String, Timestamp)]
-    val path = tempDir("rocks_run").resolve("analytic.json").toString
-    val q = TweetPipeline.run(spark, in.toDF().toDF("value", "ts"), path,
-      triggerInterval = "0 seconds")
+    val q = TweetPipeline.extractHashtags(in.toDF().toDF("value", "ts"))
+      .withWatermark("ts", "1 minute")
+      .groupBy(window(col("ts"), "15 minutes", "10 seconds"), lower(col("tag")).as("key"))
+      .agg(min(col("tag")).as("hashtag"), count(lit(1)).as("count"))
+      .writeStream.format("memory").queryName("rocks_windows")
+      .outputMode("complete")
+      .option("checkpointLocation", tempDir("rocks_ckpt").toString)
+      .start()
     try {
       in.addData(tweetAt("2024-01-01 00:01:00", "A", "B"))
       q.processAllAvailable()
       in.addData(tweetAt("2024-01-01 00:06:00", "A"))
       q.processAllAvailable()
-      assert(publishedItems(path) == Seq("A" -> 2L, "B" -> 1L))
+      // The trailing window of the newest event: [23:51:10, 00:06:10).
+      val trailing = spark.table("rocks_windows")
+        .filter(col("window.end") === lit(ts("2024-01-01 00:06:10")))
+        .orderBy(col("count").desc, col("hashtag"))
+        .select("hashtag", "count").as[(String, Long)].collect().toSeq
+      assert(trailing == Seq("A" -> 2L, "B" -> 1L))
       // The provider must actually be RocksDB, not a silent fallback.
       val usedRocks = q.lastProgress != null &&
         q.lastProgress.stateOperators.nonEmpty &&
@@ -56,12 +67,17 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  /** The rows of `run()`'s pane snapshot of batch `batchId` under `ckpt`. */
+  private def snapshot(ckpt: String, batchId: Long): Seq[TweetPipeline.PaneCount] =
+    TweetPipeline.readPanes(spark.sparkContext.hadoopConfiguration, s"$ckpt/panes/$batchId").toSeq
+
   test("run() keeps one state row per (10 s pane, lower-cased tag)") {
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[(String, Timestamp)]
     val path = tempDir("panes").resolve("analytic.json").toString
+    val ckpt = tempDir("panes_ckpt").toString
     val q = TweetPipeline.run(spark, in.toDF().toDF("value", "ts"), path,
-      triggerInterval = "0 seconds")
+      triggerInterval = "0 seconds", checkpointDir = Some(ckpt))
     try {
       in.addData(tweetAt("2024-01-01 00:00:01", "A", "a", "B"),
         tweetAt("2024-01-01 00:00:12", "A"))
@@ -70,10 +86,12 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       // (00:00:00, a), (00:00:00, b), (00:00:10, a), (00:00:10, c): 5 s
       // panes would hold 5 rows, and a sliding 15-minute window every 10 s
-      // would hold each tag in 90 rows.
-      val ops = q.lastProgress.stateOperators
-      assert(ops.length == 1, q.lastProgress.json)
-      assert(ops(0).numRowsTotal == 4L, q.lastProgress.json)
+      // would hold each tag in 90 rows. The rows are the driver's, in the
+      // batch's snapshot: Spark keeps no operator state.
+      assert(q.lastProgress.batchId == 1L && q.lastProgress.stateOperators.isEmpty, q.lastProgress.json)
+      val p0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime
+      assert(snapshot(ckpt, 1).map(r => (r.pane - p0, r.key)).sorted ==
+        Seq((0L, "a"), (0L, "b"), (10000L, "a"), (10000L, "c")))
       assert(publishedItems(path) == Seq("A" -> 4L, "B" -> 1L, "c" -> 1L))
     } finally q.stop()
   }
@@ -456,6 +474,40 @@ class StreamingSpec extends SparkSpec {
       assert(watermark.toEpochMilli > late, s"event at $late is not behind the watermark $watermark")
       assert(trailingTop(first ++ second, windowMs, slideMs) == after2)
       assert(publishedItems(path) == after2)
+    } finally q.stop()
+  }
+
+  test("run() keeps at most 90 panes over two hours of event time and publishes the trailing top 5 each batch") {
+    implicit val ctx = spark.sqlContext
+    val windowMs = 900000L
+    val slideMs = 10000L
+    val rnd = new scala.util.Random(17)
+    val tags = Seq("Alpha", "alpha", "Beta", "gamma", "GAMMA", "delta", "eps", "EU", "zeta", "eta")
+    val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
+    val in = MemoryStream[(String, Timestamp)]
+    val path = tempDir("two_hours").resolve("analytic.json").toString
+    val ckpt = tempDir("two_hours_ckpt").toString
+    val q = TweetPipeline.run(spark, in.toDF().toDF("value", "ts"), path,
+      triggerInterval = "0 seconds", checkpointDir = Some(ckpt))
+    try {
+      // 25 batches of 5 minutes of event time each: 2 h 5 min in all. Some
+      // events arrive up to 20 minutes late, some of them behind the
+      // trailing window.
+      val all = (0 until 25).foldLeft(Seq.empty[(Long, Seq[String])]) { (seen, b) =>
+        val batch = Seq.fill(40) {
+          val late = if (rnd.nextInt(10) == 0) rnd.nextInt(1200000) else 0
+          val ms = t0 + b * 300000L + rnd.nextInt(300000) - late
+          (ms, Seq.fill(1 + rnd.nextInt(3))(tags(rnd.nextInt(tags.size))))
+        }
+        in.addData(batch.map { case (ms, tg) => (tweetAt("2024-01-01 00:00:00", tg: _*)._1, new Timestamp(ms)) })
+        q.processAllAvailable()
+        val fed = seen ++ batch
+        val panes = snapshot(ckpt, q.lastProgress.batchId).map(_.pane).distinct
+        assert(panes.size <= 90, s"batch $b: ${panes.size} panes")
+        assert(publishedItems(path) == trailingTop(fed, windowMs, slideMs), s"batch $b")
+        fed
+      }
+      assert(all.map(_._1).max - t0 >= 2 * 3600 * 1000L)
     } finally q.stop()
   }
 

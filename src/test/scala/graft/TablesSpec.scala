@@ -15,7 +15,8 @@ import graft.sources.Tables
 /** `Tables` infers a parquet table's schema once per file version and
   * parquet conf: a repeated read starts no Spark job, while a rewrite or a
   * conf change is seen on the next read. Also pins the `events.ts`
-  * normalization for the encodings Spark writes.
+  * normalization for the encodings Spark writes and for TIMESTAMP(NANOS),
+  * none of which changes the session.
   */
 class TablesSpec extends SparkSpec {
 
@@ -121,5 +122,37 @@ class TablesSpec extends SparkSpec {
         assert(rows(ev) == expected, s"$tag, $read read")
       }
     }
+  }
+
+  test("reading events leaves the session alone: region, events, region cost 1, 1, 0 jobs") {
+    val dir = tmp("tables-events-session")
+    spark.range(5).select(col("id").as("r_regionkey")).write.parquet(s"$dir/region.parquet")
+    spark.range(3).select(col("id").as("event_id"),
+      timestamp_micros(lit(1700000000000000L) + col("id")).cast(TimestampNTZType).as("ts"))
+      .write.parquet(s"$dir/events.parquet")
+    val confs = spark.conf.getAll
+    val jobs = Seq("region", "events", "region").map(n => jobsDuring(Tables.t(spark, dir, n))._2)
+    assert(jobs == Seq(1, 1, 0))
+    assert(spark.conf.getAll == confs)
+  }
+
+  test("events reads a TIMESTAMP(NANOS) ts as microseconds without setting the nanos flag on the session") {
+    val dir = tmp("tables-events-nanos")
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val writer = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))
+      .withType(schema).build()
+    val groups = new SimpleGroupFactory(schema)
+    val nanos = Seq(1700000000000000123L, 1700000001500000999L)
+    try nanos.zipWithIndex.foreach { case (ns, i) =>
+      writer.write(groups.newGroup().append("event_id", i.toLong).append("ts", ns))
+    } finally writer.close()
+    val flag = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.getOption(flag)
+    val ev = Tables.t(spark, dir, "events")
+    assert(ev.schema("ts").dataType == TimestampType)
+    assert(ev.select(col("event_id"), unix_micros(col("ts"))).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      .sorted == Seq(0L -> 1700000000000000L, 1L -> 1700000001500000L))
+    assert(spark.conf.getOption(flag) == before)
   }
 }
