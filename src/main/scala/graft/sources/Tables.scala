@@ -107,10 +107,12 @@ object Tables {
     val file = Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
       .find(f => !f.getName.startsWith("_") && !f.getName.startsWith(".")).get
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    val schema = reader.getFileMetaData.getSchema
-    try schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
-      case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
-      case _ => false
+    try {
+      val schema = reader.getFileMetaData.getSchema
+      schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+        case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+        case _ => false
+      }
     } finally reader.close()
   }
 
